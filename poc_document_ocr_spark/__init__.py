@@ -11,7 +11,8 @@ Layers:
 
 * ``schema``      — single-source-of-truth catalog (13-field, merge sets, structs)
 * ``functions``   — pure-Python extraction engines (HTML/layout/dispatch/date/selection)
-* ``operators``   — DataFrame operators (extraction UDF, folds, dedup, similarity, …)
+* ``operators``   — DataFrame operators (extraction UDF, forward-fill fold, field merge, review;
+                    training-data library: dedup, similarity, text stats, sampling)
 * ``sources``     — table adapters (parquet dirs in sandbox; Iceberg in prod)
 * ``plans``       — end-to-end jobs (extract → fold → persist, lineage, resume)
 * ``streaming``   — Structured Streaming variant of the extraction stage

@@ -275,12 +275,18 @@ class _OffsetParser(HTMLParser):
         self.coll.emit(self._abs(), len(data), data)
 
     def handle_entityref(self, name):
-        src = f"&{name};"
-        self.coll.emit(self._abs(), len(src), unescape(src))
+        self._ref(f"&{name};")
 
     def handle_charref(self, name):
-        src = f"&#{name};"
-        self.coll.emit(self._abs(), len(src), unescape(src))
+        self._ref(f"&#{name};")
+
+    def _ref(self, src):
+        # the parser consumes the trailing ';' only when the source has one
+        start = self._abs()
+        src_len = len(src) - 1
+        if self._text.startswith(";", start + src_len):
+            src_len += 1
+        self.coll.emit(start, src_len, unescape(src))
 
 
 # ---------------------------------------------------------------------------
@@ -446,11 +452,10 @@ def _fast_goahead(
             mm = charref.match(text, i)
             if mm:
                 name = mm.group()[2:-1]
-                src = f"&#{name};"
-                emit(i, len(src), _ref_decode(src))
                 k = mm.end()
                 if not startswith(";", k - 1):
                     k = k - 1
+                emit(i, k - i, _ref_decode(f"&#{name};"))
                 i = k
                 continue
             else:
@@ -462,11 +467,10 @@ def _fast_goahead(
             mm = entityref.match(text, i)
             if mm:
                 name = mm.group(1)
-                src = f"&{name};"
-                emit(i, len(src), _ref_decode(src))
                 k = mm.end()
                 if not startswith(";", k - 1):
                     k = k - 1
+                emit(i, k - i, _ref_decode(f"&{name};"))
                 i = k
                 continue
             mm = incomplete.match(text, i)

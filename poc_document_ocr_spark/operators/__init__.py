@@ -1,1 +1,2 @@
-"""DataFrame operators: extraction UDF stage, window folds, dedup, similarity."""
+"""DataFrame operators: extraction UDF stage, window folds, review state,
+plus a training-data library (dedup, similarity, text stats, sampling)."""

@@ -474,7 +474,7 @@ def _consolidate_grouped_long(
     turn_idxs arrays (bounded by turn count, not field-line count).
 
     Same merge-rule semantics as :func:`_consolidate_grouped`, pinned by
-    the equality tests and the shared oracle.
+    the equality tests.
     """
     bad_sig = lambda c: (
         c["field"].isin(*SIGNATURE_FIELDS)
@@ -594,7 +594,7 @@ def consolidate_auto(
     streaming aggregates. The count window reuses the run window's
     hash(conv_id) exchange (ClusteredDistribution on a key subset), so
     the guard costs a sort, not a shuffle; outputs are row-identical
-    between the two paths (pinned by tests and the shared oracle), so
+    between the two paths (pinned by tests), so
     routing never changes results — only the memory shape.
 
     The north-rule requirement 'explicit skew handling for long

@@ -905,7 +905,7 @@ def template_segments(
     cluster's documents — the shared TEMPLATE the crawl kept
     re-emitting. This is the extraction complement of the pairwise
     dedup ladder: :func:`connected_components` groups the variants,
-    :func:`~..operators.graph.pagerank` ranks the hub documents, and
+    a PageRank pass ranks the hub documents, and
     this op recovers the literal text they share, which is what a
     boilerplate-strip rule or a keep-best election actually wants to
     see (C4 and CCNet both hand-maintain such template lists; mining

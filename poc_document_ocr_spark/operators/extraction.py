@@ -306,7 +306,6 @@ def extract_turns_arrow(
     ) + ", " + EXTRACTION_DDL
 
     fn = extract_fn if extract_fn is not None else _dispatch.extract
-    span_t = pa.list_(pa.struct([("start", pa.int32()), ("end", pa.int32())]))
 
     def gen(batches):
         for rb in batches:
@@ -364,8 +363,7 @@ def span_lint(
       ``end[-1] <= length(source)``;
     * the identity format keeps its identity: ``fmt='plain'`` implies
       ``extracted_text = source`` (the other formats' text equality is
-      span-composition-dependent and pinned by fixtures + the
-      ``extract_*`` oracles).
+      span-composition-dependent and pinned by the golden fixtures).
 
     Per (fmt, rule): unit count, violation counts (expected ZERO — a
     nonzero row names the extractor rule that broke contract after a

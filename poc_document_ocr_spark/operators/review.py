@@ -302,8 +302,7 @@ def resolve_lock_requests(
         same = F.lower(st["cob"]) == F.lower(r["reviewer"])
         held = st["cob"].isNotNull()
         # coalesce: a malformed lock row (holder set, timestamp null) must
-        # DENY (granted false), not propagate NULL through the boolean —
-        # mirrors the oracle's coalesce(..., false)
+        # DENY (granted false), not propagate NULL through the boolean
         stale = F.coalesce(
             (r["ts"] - st["coa"]) >= F.lit(ttl_seconds), F.lit(False)
         )

@@ -159,7 +159,7 @@ def dedup_against_existing(
 ) -> DataFrame:
     """FR-019 duplicate-skip anti-join vs already-persisted identifiers
     (``PdfProcessorFunction.cs:261-277``), with the two properties that
-    matter at 100 TB (both plan-audited in scripts/audit_plans.py):
+    matter at 100 TB:
 
     * **no forced broadcast**: the existing-keys side grows with every
       completed run (billions of keys at scale) — AQE picks broadcast while

@@ -44,29 +44,11 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    executors: tuple[int, int] | None = None,
 ) -> SparkSession:
-    """``executors=(n, cores)`` (or env ``SPARK_GRAFT_EXECUTORS=NxC``) runs
-    ``local-cluster[n, cores, mem]`` — SEPARATE executor JVMs on this
-    machine, the honest single-box stand-in for an n-executor cluster
-    (per-executor heaps/GC/Python workers, real serialization between
-    processes). Default remains the in-process ``local[cpus]``."""
     cpus = cpus or DEFAULT_CPUS
-    if executors is None:
-        env = os.environ.get("SPARK_GRAFT_EXECUTORS")
-        if env:
-            n, c = env.lower().split("x")
-            executors = (int(n), int(c))
-    if executors:
-        n_exec, exec_cores = executors
-        cpus = n_exec * exec_cores
-        exec_mem_mb = int(os.environ.get("SPARK_GRAFT_EXECUTOR_MEM_MB", "8192"))
-        master = f"local-cluster[{n_exec},{exec_cores},{exec_mem_mb}]"
-    else:
-        master = f"local[{cpus}]"
     shuffle_partitions = shuffle_partitions or max(cpus, 8)
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -100,15 +82,6 @@ def get_spark(
         # broadcast wins everywhere else.
         .config("spark.driver.maxResultSize", "4g")
     )
-    if executors:
-        # executor JVMs spawn their own Python workers — they must resolve
-        # this package (and bench helpers) from the repo root
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        py_path = os.environ.get("PYTHONPATH", "")
-        builder = builder.config(
-            "spark.executorEnv.PYTHONPATH",
-            f"{repo_root}:{py_path}" if py_path else repo_root,
-        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

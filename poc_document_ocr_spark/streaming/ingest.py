@@ -17,7 +17,7 @@ writes and the duplicate-skip anti-join, not from stream state (SURVEY
   re-folds only the conv-hash buckets it touched, over those buckets'
   COMPLETE accumulated turn history, and dynamic-overwrites the same
   buckets of the records table — after any drain the records table equals
-  the batch pipeline's output (oracle-checked).
+  the batch pipeline's output (pinned by ``tests/test_streaming.py``).
 
 ``Trigger(availableNow=True)`` drains everything present then stops — the
 "process the backlog as one resumable job" mode used by the tests; drop it
@@ -159,8 +159,7 @@ def stream_consolidate_to_catalog(
     at-least-once foreachBatch replay converges to the same bytes. No
     driver-side key sets: the only collected value is the batch's distinct
     bucket ids (≤ ``buckets``, a bounded job arg). After a drain the
-    records table EQUALS the batch pipeline's output over the same input —
-    the oracle contract (``streaming_consolidate``).
+    records table EQUALS the batch pipeline's output over the same input.
     """
     extracted = extract_turns(_source(spark, input_path, max_files))
 

@@ -1,9 +1,8 @@
-"""Shared benchmark-harness plumbing for the scripts/ benches.
+"""Hypervisor-steal sampling for ``perfbench/run.py``.
 
-One definition of hypervisor-steal sampling (this host has measured
-noisy-neighbor windows — steal spiking to >20% of all CPUs for minutes,
-see BENCH.md — and a timed run inside such a window measures the
-neighbor, not the engine), so a fix to the sampling applies everywhere.
+A timed run inside a noisy-neighbour window (steal spiking to >20% of all
+CPUs for minutes, see BENCH.md) measures the neighbour, not the engine, so
+the benchmark records the steal share of every run.
 """
 
 from __future__ import annotations
@@ -25,53 +24,3 @@ def steal_sample() -> tuple[int, int]:
     except Exception:
         return 0, 1
 
-
-def docs_of(extracted):
-    """The shared extracted→documents reshape every scale bench uses:
-    xxhash64 ids, the extracted text, and a 5-way deterministic lang."""
-    from pyspark.sql import functions as F
-
-    return extracted.select(
-        F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
-        F.col("extracted_text").alias("text"),
-        F.concat(
-            F.lit("lang"),
-            F.pmod(F.xxhash64("conv_id", F.lit("l")), F.lit(5)),
-        ).alias("lang"),
-    )
-
-
-def consume(df):
-    """Force full materialization of every column with one driver row:
-    xxhash64 over all columns folded with bit_xor (an order-insensitive
-    checksum, so nothing is optimized away and nothing big is
-    collected)."""
-    from pyspark.sql import functions as F
-
-    cols = [F.col(c) for c in df.columns]
-    return df.select(F.xxhash64(*cols).alias("_h")).agg(
-        F.expr("bit_xor(_h)")
-    ).collect()
-
-
-def run_timed(spark, selected, warm):
-    """The shared warm-up → clearCache → timed-run → steal-share loop.
-
-    ``selected``/``warm`` map op name → zero-arg callable; every
-    selected op must have a warm twin. Returns (timings, steal) dicts
-    keyed by op name (seconds, steal share of the run window).
-    """
-    import time
-
-    for name in selected:
-        warm[name]()
-    timings, steal = {}, {}
-    for name, fn in selected.items():
-        spark.catalog.clearCache()
-        s0, j0 = steal_sample()
-        t0 = time.monotonic()
-        fn()
-        timings[name] = round(time.monotonic() - t0, 2)
-        s1, j1 = steal_sample()
-        steal[name] = round((s1 - s0) / max(j1 - j0, 1), 4)
-    return timings, steal

@@ -146,6 +146,30 @@ def test_fast_equals_slow_edge_cases(case):
     _eq(case)
 
 
+_SPAN_CASES = _EDGE_CASES + [
+    # refs without a trailing ';' span only the source they consume
+    "<p>a &amp b c</p>",
+    "<p>a &#38 b c</p>",
+]
+
+
+@pytest.mark.parametrize("case", _SPAN_CASES, ids=range(len(_SPAN_CASES)))
+def test_spans_sorted_disjoint_in_bounds(case):
+    """span_lint's structural rule, on both backends: every span lies in
+    the source, and each ends at or before the next one starts."""
+    for extract in (extract_html, extract_html_slow):
+        try:
+            spans = extract(case).spans
+        except Exception:
+            continue  # both backends raising is covered by _eq
+        prev_end = 0
+        for start, end in spans:
+            assert prev_end <= start <= end <= len(case), (
+                f"{extract.__name__} spans {spans} on {case!r}"
+            )
+            prev_end = end
+
+
 def test_marked_section_bails_to_twin():
     with pytest.raises(_FastBail):
         _fast_collect("<![CDATA[x]]>")

@@ -1,135 +1,10 @@
-"""Table tests for the deterministic sketch operators (HLL, Bloom).
+"""Table test for stratified quota sampling (``operators.sampling``).
 
-The HLL tests re-derive the whole register pipeline (md5 → register /
-leading-zero rank → harmonic sum → rational alpha_m·m² estimate) in pure
-Python and require bit-for-bit agreement — the same independence standard
-the DuckDB oracles apply, but with a third implementation.
+The sketch operators this file once covered (HLL, Bloom, count-min) were
+retired with the query catalog that drove them.
 """
 
 from __future__ import annotations
-
-import hashlib
-
-from pyspark.sql import functions as F
-
-from poc_document_ocr_spark.operators.sketches import (
-    _HLL_EST_DEN,
-    _HLL_EST_NUM,
-    bloom_prefilter_audit,
-    hll_distinct,
-)
-
-
-def _py_hll(values):
-    """Independent reference: registers straight from md5 bit strings."""
-    regs: dict[str, int] = {}
-    for v in values:
-        h = hashlib.md5(str(v).encode()).hexdigest()
-        tail = int(h[2:16], 16)
-        if tail == 0:
-            rho = 57
-        else:
-            # 1 + leading zeros of the 56-bit value
-            rho = 56 - tail.bit_length() + 1
-        regs[h[:2]] = max(regs.get(h[:2], 0), rho)
-    s = sum(1 << (57 - mj) for mj in regs.values())
-    s += (256 - len(regs)) * (1 << 57)
-    est = _HLL_EST_NUM // (_HLL_EST_DEN * s)
-    return est, len(regs), max(regs.values())
-
-
-def test_hll_matches_python_reference_bit_for_bit(spark):
-    values = [f"gram-{i}" for i in range(2000)]
-    est, n_regs, rho_max = _py_hll(values)
-    df = spark.createDataFrame(
-        [("en", v) for v in values], "lang string, gram string"
-    )
-    [row] = hll_distinct(df, "lang", "gram").collect()
-    assert row.exact_distinct == 2000
-    assert row.hll_est == est
-    assert row.n_regs == n_regs
-    assert row.rho_max == rho_max
-    # raw HLL at n >> m should land within a few sigma of 1.04/sqrt(256)
-    assert abs(row.hll_est - 2000) / 2000 < 0.2
-    assert row.err_ppm == abs(est - 2000) * 1_000_000 // 2000
-
-
-def test_hll_duplication_invariant(spark):
-    """Feeding every value 3x must not move the sketch or the exact count."""
-    vals = [f"v{i}" for i in range(300)]
-    once = spark.createDataFrame(
-        [("g", v) for v in vals], "lang string, gram string"
-    )
-    thrice = spark.createDataFrame(
-        [("g", v) for v in vals * 3], "lang string, gram string"
-    )
-    r1 = hll_distinct(once, "lang", "gram").collect()[0]
-    r3 = hll_distinct(thrice, "lang", "gram").collect()[0]
-    assert r1 == r3
-
-
-def test_bloom_has_no_false_negatives(spark):
-    """Every gram present in both corpus and benchmark must survive the
-    Bloom prefilter: candidates ∩ hits == hits, i.e.
-    n_candidates - n_false_pos == n_true."""
-    mk = lambda i, extra: " ".join(f"w{(i * 7 + j) % 50}" for j in range(12)) + extra
-    corpus = spark.createDataFrame(
-        [(i, mk(i, " corpus tail" if i % 2 else "")) for i in range(40)],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(i, mk(i, "")) for i in range(0, 40, 4)],
-        "doc_id long, text string",
-    )
-    [row] = bloom_prefilter_audit(corpus, bench, n=8).collect()
-    assert row.n_true > 0
-    assert row.n_candidates - row.n_false_pos == row.n_true
-    assert 0 <= row.fp_ppm <= 1_000_000
-    assert row.sel_ppm <= 1_000_000
-
-
-def test_bloom_disjoint_inputs_mostly_pruned(spark):
-    """Disjoint vocabularies: zero true overlaps; candidates are pure
-    Bloom noise and must be far below the corpus gram count."""
-    corpus = spark.createDataFrame(
-        [(i, " ".join(f"a{i}x{j}" for j in range(10))) for i in range(50)],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(i, " ".join(f"b{i}y{j}" for j in range(10))) for i in range(50)],
-        "doc_id long, text string",
-    )
-    [row] = bloom_prefilter_audit(corpus, bench, n=8).collect()
-    assert row.n_true == 0
-    assert row.n_candidates == row.n_false_pos
-    # 150 bench grams over two 4096-cell arrays → fp ~ (150/4096)^2 ≈ 0.13%
-    assert row.fp_ppm < 50_000
-
-
-def test_hll_union_merge_equals_sketch_of_union(spark):
-    """THE sketch property: merging two register tables (per-register
-    max) must give bit-for-bit the estimate of sketching the
-    concatenated data — merge never rescans, and loses nothing."""
-    from poc_document_ocr_spark.operators.sketches import (
-        hll_union_novelty,
-    )
-
-    old = spark.createDataFrame(
-        [("g", f"a{i}") for i in range(800)], "lang string, gram string"
-    )
-    new = spark.createDataFrame(
-        [("g", f"a{i}") for i in range(600, 1100)],
-        "lang string, gram string",
-    )
-    [row] = hll_union_novelty(old, new, "lang", "gram").collect()
-    [direct] = hll_distinct(
-        old.unionByName(new), "lang", "gram", with_exact=False
-    ).collect()
-    assert row.est_union == direct.hll_est
-    assert row.est_novel == row.est_union - row.est_old
-    assert row.exact_novel == 300  # a800..a1099
-    [eo] = hll_distinct(old, "lang", "gram", with_exact=False).collect()
-    assert row.est_old == eo.hll_est
 
 
 def test_quota_sample_exact_total_and_per_stratum(spark):
@@ -163,38 +38,3 @@ def test_quota_sample_exact_total_and_per_stratum(spark):
     a = sorted(r.doc_id for r in quota_sample(df, 137, "source").collect())
     b = sorted(r.doc_id for r in quota_sample(df, 137, "source").collect())
     assert a == b
-
-
-def test_cms_never_undercounts_and_merges(spark):
-    """CMS estimates are a one-sided bound (est >= exact always), the
-    true heavy hitter ranks first, and two slice sketches merged by
-    re-summing per (row, col) equal the sketch of the union — the
-    persist-and-merge lifecycle the HLL registers already pin."""
-    from poc_document_ocr_spark.operators.sketches import (
-        cms_counters,
-        cms_heavy_audit,
-    )
-
-    rows = [("heavy",)] * 50 + [(f"tail{i}",) for i in range(40)]
-    stream = spark.createDataFrame(rows, "token string")
-    cands = spark.createDataFrame(
-        [("heavy",), ("tail3",), ("absent",)], "token string"
-    )
-    out = cms_heavy_audit(stream, cands, d=4, w=64, k=10).collect()
-    assert out[0]["token"] == "heavy" and out[0]["exact_n"] == 50
-    for r in out:
-        assert r["cms_est"] >= r["exact_n"]  # one-sided bound
-        assert r["over_ppm"] >= 0
-
-    half_a = spark.createDataFrame(rows[:45], "token string")
-    half_b = spark.createDataFrame(rows[45:], "token string")
-    merged = (
-        cms_counters(half_a, d=2, w=32)
-        .unionByName(cms_counters(half_b, d=2, w=32))
-        .groupBy("cms_row", "cms_col")
-        .agg(F.sum("n").alias("n"))
-    )
-    whole = cms_counters(stream, d=2, w=32)
-    m = {(r["cms_row"], r["cms_col"]): r["n"] for r in merged.collect()}
-    w_ = {(r["cms_row"], r["cms_col"]): r["n"] for r in whole.collect()}
-    assert m == w_

@@ -8,7 +8,6 @@ fixed inputs, exact expected outputs.
 from __future__ import annotations
 
 import hashlib
-import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -175,12 +174,15 @@ def test_signlsh_buckets_deterministic(spark):
 def test_lsh_topk_recall_and_pruning(spark):
     """Bucketed ANN vs exact brute force on the real embeddings table:
     recall must clear a floor AND the bucket join must actually prune."""
-    from poc_document_ocr_spark.entrypoints import _ANN_PLANES
     from poc_document_ocr_spark.operators.similarity import (
         lsh_topk,
         signlsh_buckets,
     )
 
+    # 4 fixed sign-LSH hyperplanes (16 buckets) over the 64-dim embeddings
+    _ANN_PLANES = [
+        [((7 * i + 3 * j) % 11) - 5 for j in range(64)] for i in range(4)
+    ]
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     n = emb.count()
     queries = emb.filter(F.col("vec_id") < 8)
@@ -1719,31 +1721,6 @@ def test_curriculum_order_is_exact_interleaved_permutation(spark):
         assert sorted(ranks) == list(range(1, len(ranks) + 1)), s
 
 
-def test_best_of_n_lexicographic_reward_and_candidate_count(spark):
-    from poc_document_ocr_spark.operators.examples import best_of_n
-
-    rows = [
-        # conv a: turn 2 has more distinct tokens -> wins
-        ("a", 1, "user", "question"),
-        ("a", 2, "assistant", "alpha beta gamma"),
-        ("a", 4, "assistant", "alpha alpha alpha alpha alpha"),
-        # conv b: tie on tokens (2 distinct), longer text wins
-        ("b", 1, "assistant", "aa bb"),
-        ("b", 2, "assistant", "cccc dddd"),
-        # conv c: full tie on (tokens, chars) -> earliest turn wins
-        ("c", 5, "assistant", "xx yy"),
-        ("c", 3, "assistant", "zz ww"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r["conv_id"]: r for r in best_of_n(df).collect()}
-    assert out["a"]["turn_idx"] == 2 and out["a"]["n_candidates"] == 2
-    assert out["a"]["reward_tokens"] == 3
-    assert out["b"]["turn_idx"] == 2 and out["b"]["target_chars"] == 9
-    assert out["c"]["turn_idx"] == 3
-
-
 def test_heaps_law_cumulatives_and_totals(spark):
     from poc_document_ocr_spark.operators.textstats import heaps_law
 
@@ -1797,33 +1774,6 @@ def test_heaps_law_no_overflow_on_large_ids(spark):
     assert max(r["cum_tokens"] for r in out) == 5
 
 
-def test_preference_pairs_chosen_rejected_and_tie_rules(spark):
-    from poc_document_ocr_spark.operators.examples import preference_pairs
-
-    rows = [
-        # conv a: clear best (3 tokens) and worst (1 token)
-        ("a", 1, "assistant", "alpha beta gamma"),
-        ("a", 2, "assistant", "alpha alpha"),
-        ("a", 3, "assistant", "solo"),
-        # conv b: full tie -> chosen = earliest, rejected = latest
-        ("b", 2, "assistant", "xx yy"),
-        ("b", 5, "assistant", "zz ww"),
-        # conv c: single candidate -> no pair
-        ("c", 1, "assistant", "only one here"),
-        # conv d: no assistant turns -> no pair
-        ("d", 1, "user", "hello"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r["conv_id"]: r for r in preference_pairs(df).collect()}
-    assert set(out) == {"a", "b"}
-    assert out["a"]["chosen_turn"] == 1 and out["a"]["rejected_turn"] == 3
-    assert out["a"]["reward_gap_tokens"] == 2
-    assert out["b"]["chosen_turn"] == 2 and out["b"]["rejected_turn"] == 5
-    assert out["b"]["reward_gap_tokens"] == 0
-
-
 def test_normalize_text_controls_whitespace_trim(spark):
     from poc_document_ocr_spark.operators.textstats import normalize_text
 
@@ -1859,29 +1809,6 @@ def test_hard_negatives_excludes_same_label_and_ranks(spark):
     assert all(r["q_label"] == 0 for r in out)
 
 
-def test_context_window_fit_suffix_rule(spark):
-    from poc_document_ocr_spark.operators.examples import context_window_fit
-
-    rows = [
-        ("a", 1, "user", "one two three"),            # 3 tokens
-        ("a", 2, "assistant", "four five"),           # 2
-        ("a", 3, "user", "six"),                      # 1
-        ("b", 1, "user", " ".join(["w"] * 10)),       # 10 > budget alone
-        ("c", 1, "user", "exact fit here ok"),        # 4 == budget
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = sorted(
-        ((r["conv_id"], r["turn_idx"], r["cum_tokens_from_end"])
-         for r in context_window_fit(df, budget_tokens=4).collect())
-    )
-    # conv a: suffix (2,3) = 3 tokens fits; adding turn 1 -> 6 > 4
-    # conv b: single 10-token turn exceeds the budget -> dropped
-    # conv c: exact fit kept
-    assert out == [("a", 2, 3), ("a", 3, 1), ("c", 1, 4)]
-
-
 def test_dedup_weights_inverse_cluster_size(spark):
     from poc_document_ocr_spark.operators.dedup import dedup_weights
 
@@ -1891,31 +1818,6 @@ def test_dedup_weights_inverse_cluster_size(spark):
     assert len(out) == 4  # every row kept
     assert out[1]["weight_ppm"] == 333333 and out[1]["n_copies"] == 3
     assert out[4]["weight_ppm"] == 1000000 and out[4]["n_copies"] == 1
-
-
-def test_preference_pairs_null_text_rule(spark):
-    """NULL text counts as the empty string (0 tokens, 0 chars) — the
-    rule that keeps Spark struct min/max and SQL NULLS-LAST ordering
-    from diverging (round-4 review reproduction)."""
-    from poc_document_ocr_spark.operators.examples import (
-        best_of_n,
-        preference_pairs,
-    )
-
-    rows = [
-        ("a", 1, "assistant", "alpha beta gamma"),
-        ("a", 2, "assistant", None),
-        ("a", 3, "assistant", "solo"),
-    ]
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    pp = preference_pairs(df).collect()[0]
-    # NULL turn = 0 tokens -> it is the rejected one, not turn 3
-    assert pp["chosen_turn"] == 1 and pp["rejected_turn"] == 2
-    assert pp["rejected_tokens"] == 0 and pp["reward_gap_tokens"] == 3
-    bo = best_of_n(df).collect()[0]
-    assert bo["turn_idx"] == 1 and bo["reward_tokens"] == 3
 
 
 def test_dedup_weights_keeps_null_text_rows(spark):
@@ -2127,42 +2029,6 @@ def test_cross_set_screen_flags_planted_neighbor(spark):
     assert [(r["vec_id"], r["n_probe_hits"]) for r in out] == [(1, 1)]
 
 
-def test_pagerank_exact_integer_replay(spark):
-    """Pin the two unrolled PageRank updates against a pure-Python
-    replay of the same ppm integer arithmetic on a hand-sized graph:
-    a 3-star (hub 1 — leaves 2,3,4) plus an isolated node 5."""
-    from poc_document_ocr_spark.operators.graph import pagerank
-
-    nodes = spark.createDataFrame(
-        [(i,) for i in range(1, 6)], "doc_id long"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (1, 4)], "id_a long, id_b long"
-    )
-    out = {
-        r["doc_id"]: r for r in pagerank(nodes, pairs, iters=2).collect()
-    }
-
-    adj = {1: [2, 3, 4], 2: [1], 3: [1], 4: [1], 5: []}
-    d = 850_000
-    s = {i: 1_000_000 for i in adj}
-    for _ in range(2):
-        inflow = {
-            i: sum(s[j] // len(adj[j]) for j in adj[i]) for i in adj
-        }
-        s = {
-            i: (1_000_000 - d) + inflow[i] * d // 1_000_000 for i in adj
-        }
-
-    assert out[1]["n_neighbors"] == 3
-    assert out[2]["n_neighbors"] == 1 and out[5]["n_neighbors"] == 0
-    for i in adj:
-        assert out[i]["rank_ppm"] == s[i], i
-    # hub dominates, leaves tie, the isolated node holds the base rank
-    assert out[1]["rank_ppm"] > out[2]["rank_ppm"] > out[5]["rank_ppm"]
-    assert out[5]["rank_ppm"] == 150_000
-
-
 def test_template_segments_support_thresholds(spark):
     """Hand-built clusters: a 3-doc cluster whose universal segment
     (support 3/3) and 2/3-majority segment are kept while a 1/3 segment
@@ -2303,31 +2169,6 @@ def test_group_sample_k_deterministic_fixed_size(spark):
     assert {r["doc_id"] for r in s3} != {r["doc_id"] for r in s1}
 
 
-def test_loop_detect_planted_loop(spark):
-    """A planted 4-repeat assistant loop trips has_loop; interleaved
-    user turns don't break assistant-run contiguity (the assistant
-    sequence is what's windowed); distinct replies never trip it."""
-    from poc_document_ocr_spark.entrypoints import assistant_loop_stats
-
-    rows = []
-    for i, (role, text) in enumerate(
-        [("user", "q1"), ("assistant", "again"), ("user", "q2"),
-         ("assistant", "again"), ("assistant", "again"),
-         ("assistant", "again"), ("user", "q3"), ("assistant", "done")]
-    ):
-        rows.append(("a", i, role, text))
-    for i, text in enumerate(["r1", "r2", "r3", "r4"]):
-        rows.append(("b", i, "assistant", text))
-    df = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r["conv_id"]: r for r in assistant_loop_stats(df).collect()}
-    assert out["a"]["n_assistant"] == 5
-    assert out["a"]["n_reply_runs"] == 2
-    assert out["a"]["max_consec_same"] == 4 and out["a"]["has_loop"]
-    assert out["b"]["max_consec_same"] == 1 and not out["b"]["has_loop"]
-
-
 def test_cluster_split_zero_leakage(spark):
     """Every near-dup candidate pair lands in ONE split (the property
     doc-hash splitting violates), and every member of a component gets
@@ -2425,100 +2266,6 @@ def test_containment_asymmetric_quote(spark):
     assert r["n_fp_a"] < r["n_fp_b"]
 
 
-def test_bm25_topk_exact_integer_replay(spark):
-    """BM25 scores replay bit-for-bit against a Python reimplementation
-    of the half-log2-bit idf / milli-unit tf-saturation spec, rare terms
-    outrank common ones, and the top-k window cuts at k."""
-    from poc_document_ocr_spark.operators.retrieval import bm25_topk
-
-    corpus = [
-        (1, "spark shuffle join join join"),
-        (2, "spark window sort"),
-        (3, "spark shuffle skew"),
-        (4, "spark agg"),
-        (5, "spark spark spark spark"),
-    ]
-    toks = {d: [w for w in t.split(" ") if w] for d, t in corpus}
-    dl = {d: len(ws) for d, ws in toks.items()}
-    n, tot = len(toks), sum(dl.values())
-    avgdl_m = tot * 1000 // n
-
-    def idf_ppm(df_):
-        r = min(((2 * n + 2) * 1024) // (2 * df_ + 1), 1 << 30)
-        return ((r * r // 1024).bit_length() - 1 - 10) * 500_000
-
-    def contrib(tf, d, df_):
-        dlr = dl[d] * 1_000_000 // avgdl_m
-        norm = 250 + (750 * dlr) // 1000
-        den = tf * 1000 + (1200 * norm) // 1000
-        return idf_ppm(df_) * (tf * 2200 * 1_000_000 // den) // 1_000_000
-
-    docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    queries = spark.createDataFrame(
-        [("qa", "shuffle"), ("qa", "spark"), ("qb", "skew")],
-        "query_id string, term string",
-    )
-    out = {
-        (r.query_id, r.doc_id): r
-        for r in bm25_topk(docs, queries, k=3).collect()
-    }
-
-    # qb: 'skew' appears only in doc 3 — exactly one hit, rank 1
-    assert set(q for q, _ in out) == {"qa", "qb"}
-    assert [d for (q, d) in out if q == "qb"] == [3]
-    assert out[("qb", 3)].score_ppm == contrib(1, 3, 1)
-    assert out[("qb", 3)].n_terms == 1 and out[("qb", 3)].rank == 1
-
-    # qa: every doc matches 'spark' (idf 0 — df = n makes R floor to
-    # 1024, zero half-bits); ranking is decided by 'shuffle' (df 2)
-    qa = sorted(
-        ((d, r.rank, r.score_ppm) for (q, d), r in out.items() if q == "qa"),
-        key=lambda x: x[1],
-    )
-    assert idf_ppm(n) == 0
-    assert len(qa) == 3  # k cut: 5 matching docs, 3 returned
-    exp1 = contrib(1, 1, 2) + contrib(3, 1, 5)   # doc 1: shuffle + join x3
-    exp3 = contrib(1, 3, 2) + contrib(1, 3, 5)
-    assert qa[0] == (1, 1, exp1) or qa[0] == (3, 1, exp3)
-    got = {d: s for d, _, s in qa}
-    assert got[1] == exp1 and got[3] == exp3
-    # docs without 'shuffle' score 0 (only the idf-0 term) and tie-break
-    # ascending by doc_id: doc 2 takes rank 3, docs 4/5 are cut
-    assert qa[2][0] == 2 and qa[2][2] == contrib(1, 2, 5) == 0
-
-
-def test_prefix_fork_families_fork_points(spark):
-    """Planted retry tree: A/B share turns 1-3 then diverge; C shares
-    only turn 1 with them; D is unrelated. Families appear at each
-    shared depth and n_maximal_convs marks the actual fork points."""
-    from poc_document_ocr_spark.entrypoints import prefix_fork_families
-
-    rows = []
-    for conv, texts in [
-        ("A", ["hi", "plan", "step", "ok"]),
-        ("B", ["hi", "plan", "step", "retry"]),
-        ("C", ["hi", "other", "x", "y"]),
-        ("D", ["unrelated", "z", "z", "z"]),
-    ]:
-        rows += [(conv, i + 1, t) for i, t in enumerate(texts)]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, text string"
-    )
-    out = {
-        (r.depth, r.n_convs): r
-        for r in prefix_fork_families(t, max_depth=4).collect()
-    }
-    # depth 1: {A,B,C} share 'hi'; depths 2-3: {A,B}; depth 4: none
-    assert set(out) == {(1, 3), (2, 2), (3, 2)}
-    assert out[(1, 3)].exemplar_conv == "A"
-    # C's deepest shared depth is 1 → it is the only maximal conv there
-    assert out[(1, 3)].n_maximal_convs == 1
-    # the pass-through family at depth 2 has no maximal member
-    assert out[(2, 2)].n_maximal_convs == 0
-    # A and B both fork right after depth 3
-    assert out[(3, 2)].n_maximal_convs == 2
-
-
 def test_screen_agreement_kappa_exact_and_negative(spark):
     """Kappa replays the exact ppm arithmetic, and the explicit sign
     factoring keeps negative kappa identical under Spark's
@@ -2550,41 +2297,6 @@ def test_screen_agreement_kappa_exact_and_negative(spark):
         [(True, True)] * 4, "keep_a boolean, keep_b boolean"
     )
     assert screen_agreement(degen).collect()[0].kappa_ppm is None
-
-
-def test_pair_length_bias_bands(spark):
-    """Three conversations landing in three gap bands; the '0' band pair
-    must count as a length WIN (not tie) when chars differ, and ties
-    are counted separately."""
-    from poc_document_ocr_spark.operators.examples import pair_length_bias
-
-    rows = [
-        # conv g0: same diversity (2 distinct tokens), different chars
-        ("g0", 1, "assistant", "aa bb"),
-        ("g0", 2, "assistant", "aa bb bb bb"),
-        # conv g1: gap 2 (3 vs 1 distinct), chosen shorter in chars
-        ("g1", 1, "assistant", "a b c"),
-        ("g1", 2, "assistant", "dddddddddddd"),
-        # conv g2: gap 4 (5 vs 1), chosen longer
-        ("g2", 1, "assistant", "p q r s t"),
-        ("g2", 2, "assistant", "p"),
-        # non-assistant noise must be ignored
-        ("g2", 3, "user", "x y z w v u"),
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r.gap_band: r for r in pair_length_bias(t).collect()}
-    assert set(out) == {"0", "1-2", "3+"}
-    # g0: diversity tie -> chars break the tie; chosen IS the longer one
-    assert out["0"].n_pairs == 1 and out["0"].n_chosen_longer == 1
-    assert out["0"].chosen_longer_ppm == 1_000_000
-    assert out["0"].avg_chosen_chars == 11 and out["0"].avg_rejected_chars == 5
-    # g1: diversity winner is SHORTER in chars
-    assert out["1-2"].n_chosen_longer == 0 and out["1-2"].n_len_ties == 0
-    assert out["1-2"].chosen_longer_ppm == 0
-    # g2: winner longer
-    assert out["3+"].n_chosen_longer == 1
 
 
 def test_pmi_collocations_exact_replay(spark):
@@ -2637,38 +2349,6 @@ def test_pmi_collocations_exact_replay(spark):
     )
 
 
-def test_langid_confusion_matrix_metrics(spark, tmp_path):
-    """Confusion cells carry exact marginals and ppm recall/precision;
-    a label with no marker set ('zh') shows up as pure leakage into
-    the default class."""
-    from poc_document_ocr_spark.entrypoints import q_langid_confusion
-
-    rows = [
-        (1, "the cat is on the mat and happy", "en"),   # en -> en
-        (2, "el gato que la casa los perros", "es"),    # es -> es
-        (3, "der hund und die katze ist da", "de"),     # de -> de
-        (4, "ni hao ma zhong wen wen ben", "zh"),       # zh -> en (blind)
-        (5, "the dog and the bird is quick", "en"),     # en -> en
-    ]
-    import pandas as pd
-
-    pd.DataFrame(
-        rows, columns=["doc_id", "text", "lang"]
-    ).to_parquet(tmp_path / "documents.parquet")
-    out = {
-        (r.lang, r.pred_lang): r
-        for r in q_langid_confusion(spark, str(tmp_path)).collect()
-    }
-    assert out[("en", "en")].n_docs == 2
-    assert out[("zh", "en")].n_docs == 1
-    assert out[("zh", "en")].recall_cell_ppm == 1_000_000  # fully blind
-    # 3 docs predicted 'en' overall -> precision of the en->en cell
-    assert out[("en", "en")].n_pred == 3
-    assert out[("en", "en")].precision_cell_ppm == 2 * 1_000_000 // 3
-    assert out[("es", "es")].recall_cell_ppm == 1_000_000
-    assert out[("de", "de")].n_true == 1
-
-
 def test_mix_drift_report_exact_tvd(spark):
     from pyspark.sql import functions as F
 
@@ -2705,43 +2385,6 @@ def test_mix_drift_report_empty_snapshot_no_divzero(spark):
     rows = mix_drift_report(df, F.col("in_a")).collect()
     assert len(rows) == 2
     assert all(r["p_b_ppm"] is None for r in rows)
-
-
-def test_triangle_counts_clique_chain_star(spark):
-    from poc_document_ocr_spark.operators.graph import triangle_counts
-
-    # 4-clique {1,2,3,4}: every node in C(3,2)=3 triangles, clust=1;
-    # chain 5-6-7: zero triangles; star 8-{9,10,11}: zero triangles
-    # (hub degree 3, clust 0); duplicate + self-loop rows are scrubbed
-    clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    edges = clique + [(5, 6), (6, 7), (8, 9), (8, 10), (8, 11),
-                      (2, 1), (5, 5)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    rows = {r["node"]: r for r in triangle_counts(df).collect()}
-    assert len(rows) == 11
-    for n in (1, 2, 3, 4):
-        assert rows[n]["deg"] == 3 and rows[n]["n_tri"] == 3
-        assert rows[n]["clust_ppm"] == 1_000_000
-    assert rows[6]["deg"] == 2 and rows[6]["n_tri"] == 0
-    assert rows[6]["clust_ppm"] == 0
-    assert rows[8]["deg"] == 3 and rows[8]["n_tri"] == 0
-    assert rows[5]["deg"] == 1 and rows[5]["clust_ppm"] == 0
-
-
-def test_triangle_counts_square_with_diagonal(spark):
-    from poc_document_ocr_spark.operators.graph import triangle_counts
-
-    # square 1-2-3-4 plus diagonal 1-3: two triangles sharing edge 1-3;
-    # diagonal endpoints sit in both (deg 3), the others in one (deg 2,
-    # clust = 2*1*1e6 / (2*1) = 1e6)
-    df = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 1), (1, 3)], "id_a long, id_b long"
-    )
-    rows = {r["node"]: r for r in triangle_counts(df).collect()}
-    assert rows[1]["n_tri"] == 2 and rows[3]["n_tri"] == 2
-    assert rows[2]["n_tri"] == 1 and rows[4]["n_tri"] == 1
-    assert rows[1]["clust_ppm"] == 2 * 1_000_000 // 3  # 2·2e6 div (3·2)
-    assert rows[2]["clust_ppm"] == 1_000_000
 
 
 def test_source_boilerplate_share(spark):
@@ -3257,53 +2900,6 @@ def test_bitext_mine_candidates_path_equals_exact(spark):
     assert exact == viacand and len(exact) > 0
 
 
-def test_bucket_manifest_layout_invariant_and_diff(spark):
-    """The manifest signature must be identical across partition layouts
-    (the north-rule byte-identical-across-cluster-sizes invariance), an
-    edit must flag exactly its bucket as changed, and unchanged buckets
-    must not appear in the diff."""
-    from poc_document_ocr_spark.operators.manifest import (
-        bucket_manifest,
-        manifest_diff,
-    )
-
-    rows = [(i, f"doc body {i} lorem") for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    m1 = {
-        r["bucket"]: (r["n_rows"], r["content_sig"])
-        for r in bucket_manifest(df, n_buckets=16).collect()
-    }
-    m2 = {
-        r["bucket"]: (r["n_rows"], r["content_sig"])
-        for r in bucket_manifest(
-            df.repartition(7, "text"), n_buckets=16
-        ).collect()
-    }
-    assert m1 == m2 and sum(n for n, _ in m1.values()) == 200
-
-    # edit one doc → exactly the buckets of edited/removed ids differ
-    new = df.filter(F.col("doc_id") != 77).select(
-        "doc_id",
-        F.when(F.col("doc_id") == 42, F.lit("rewritten"))
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-    diff = manifest_diff(
-        bucket_manifest(df, n_buckets=16),
-        bucket_manifest(new, n_buckets=16),
-    ).collect()
-    assert 1 <= len(diff) <= 2  # ids 42 and 77 may share a bucket
-    assert all(r["status"] == "changed" for r in diff)
-    # identical inputs → empty diff
-    assert (
-        manifest_diff(
-            bucket_manifest(df, n_buckets=16),
-            bucket_manifest(df, n_buckets=16),
-        ).count()
-        == 0
-    )
-
-
 def test_script_mix_flags_blended_words_only(spark):
     """Blending scripts WITHIN a word flags; alternating scripts BETWEEN
     words (legit code-switching) stays clean."""
@@ -3325,76 +2921,6 @@ def test_script_mix_flags_blended_words_only(spark):
     assert not out[4]["clean"]
     assert out[4]["n_mixed_words"] == 1
     assert out[4]["mixed_ppm"] == 1_000_000 // 2
-
-
-def test_conv_windows_turn_aligned_overlap(spark):
-    """Turns never split across windows; overlap reuses whole turns; a
-    turn longer than the window appears nowhere."""
-    from poc_document_ocr_spark.operators.examples import conv_windows
-
-    rows = [
-        ("c1", 1, "a b c d"),          # tokens [0,4)
-        ("c1", 2, "e f g"),            # [4,7)
-        ("c1", 3, "h i j k l"),        # [7,12)
-        ("c1", 4, " ".join("x" * 1 for _ in range(20))),  # 20 > window
-        ("c2", 1, "solo"),
-    ]
-    t = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    out = {
-        (r["conv_id"], r["win_idx"]): r
-        for r in conv_windows(t, window_tokens=8, stride_tokens=4).collect()
-    }
-    # window 0 = [0,8): turns 1,2 fit; turn 3 ([7,12)) does not
-    w0 = out[("c1", 0)]
-    assert (w0["first_turn"], w0["last_turn"], w0["n_tokens"]) == (1, 2, 7)
-    # window 1 = [4,12): turns 2,3 fit — turn 2 re-used by overlap
-    w1 = out[("c1", 1)]
-    assert (w1["first_turn"], w1["last_turn"], w1["n_tokens"]) == (2, 3, 8)
-    # the 20-token turn fits no window
-    assert all(
-        not (k[0] == "c1" and v["last_turn"] == 4) for k, v in out.items()
-    )
-    assert out[("c2", 0)]["n_tokens"] == 1
-
-
-def test_hdr_registers_bucket_bounds_and_quantile_error(spark):
-    """Every value lands in a bucket whose [lo, hi] contains it; the
-    probed quantile bound brackets the true quantile with relative
-    error <= 1/m; registers stay bounded."""
-    from poc_document_ocr_spark.operators.sketches import (
-        hdr_quantiles,
-        hdr_registers,
-    )
-
-    vals = [1, 2, 3, 7, 8, 9, 100, 157, 1000, 1023, 1024, 50000, 0]
-    df = spark.createDataFrame(
-        [("en", v) for v in vals], "lang string, v long"
-    )
-    regs = hdr_registers(df, "v").collect()
-    assert sum(r["n"] for r in regs) == len(vals)
-    for r in regs:
-        assert r["lo"] <= r["hi"]
-        if r["e"] > 0:
-            # bucket width respects the 1/8 relative-error contract
-            assert r["hi"] - r["lo"] + 1 <= max((1 << (r["e"] - 1)) // 8, 1)
-    # every bucket that holds v must bracket it: rebuild the mapping
-    by_bucket = {(r["e"], r["sub"]): r for r in regs}
-    for v in vals:
-        e = 0 if v < 1 else len(bin(v)) - 2
-        if e == 0:
-            continue
-        lower = 1 << (e - 1)
-        sub = (v - lower) // max(lower // 8, 1)
-        r = by_bucket[(e, sub)]
-        assert r["lo"] <= v <= r["hi"], (v, dict(r.asDict()))
-    q = {
-        r["pct"]: r
-        for r in hdr_quantiles(df, "v", probs_pct=(50, 99)).collect()
-    }
-    pos = sorted(v for v in vals)
-    true_p50 = pos[-(-50 * len(pos) // 100) - 1]  # ceil-rank quantile
-    assert q[50]["q_lo"] <= true_p50 <= q[50]["q_hi"]
-    assert q[99]["q_lo"] <= max(vals) <= q[99]["q_hi"]
 
 
 def test_epoch_shuffle_reproducible_and_epoch_decorrelated(spark):
@@ -3426,71 +2952,6 @@ def test_epoch_shuffle_reproducible_and_epoch_decorrelated(spark):
     n7 = {r["shard"]: r["n_docs"] for r in per_epoch[0]}
     n8 = {r["shard"]: r["n_docs"] for r in c}
     assert n7 != n8
-
-
-def test_truncation_audit_hand_computed(spark):
-    """head/tail/edges retention on a hand-computed conversation."""
-    from poc_document_ocr_spark.operators.examples import truncation_audit
-
-    rows = [
-        ("c1", 1, "user", "a b c"),        # 3 tokens
-        ("c1", 2, "assistant", "d e f g"),  # 4
-        ("c1", 3, "user", "h i"),           # 2
-        ("c1", 4, "assistant", "j k l"),    # 3  (total 12)
-        ("c2", 1, "assistant", "one two"),  # fits everywhere
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r["policy"]: r for r in truncation_audit(t, 8).collect()}
-    # c1 head (budget 8): cum 3,7,9,12 -> turns 1,2 kept (7 tokens)
-    # c1 tail: cum-from-end 3,5,9,12 -> turns 3,4 kept (5 tokens)
-    # c1 edges (4+4): head cum<=4 -> turn 1; tail cum<=4 -> turn 4
-    h, tl, ed = out["head"], out["tail"], out["edges"]
-    assert (h["n_tokens_kept"], h["asst_tokens_kept"]) == (7 + 2, 4 + 2)
-    assert (tl["n_tokens_kept"], tl["asst_tokens_kept"]) == (5 + 2, 3 + 2)
-    assert (ed["n_tokens_kept"], ed["asst_tokens_kept"]) == (6 + 2, 3 + 2)
-    assert h["convs_fit"] == tl["convs_fit"] == ed["convs_fit"] == 1
-    assert h["n_convs"] == 2
-    # ppm is exact integer math over the 14-token corpus
-    assert h["tokens_kept_ppm"] == 9 * 10**6 // 14
-
-
-def test_chat_spans_offsets_reconstruct_render(spark):
-    """chat_spans offsets must agree with an actual string render of the
-    fixed template — blocks abut, text intervals slice out the text."""
-    from poc_document_ocr_spark.operators.examples import chat_spans
-
-    rows = [
-        ("c1", 1, "user", "hello there"),
-        ("c1", 2, "assistant", "hi"),
-        ("c1", 3, "tool", ""),
-        ("c1", 4, "assistant", None),  # NULL text renders as ''
-        ("c2", 1, "assistant", "solo"),
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = chat_spans(t).collect()
-    by_conv = {}
-    for r in sorted(out, key=lambda r: (r["conv_id"], r["turn_idx"])):
-        by_conv.setdefault(r["conv_id"], []).append(r)
-    texts = {(c, i): (x or "") for c, i, _, x in rows}
-    for conv, spans in by_conv.items():
-        rendered = "".join(
-            f"<|{r['role']}|>\n{texts[(conv, r['turn_idx'])]}\n"
-            for r in spans
-        )
-        prev_end = 0
-        for r in spans:
-            body = texts[(conv, r["turn_idx"])]
-            assert rendered[r["text_start"]:r["text_end"]] == body
-            # blocks abut exactly: this block starts where the last ended
-            hdr = f"<|{r['role']}|>\n"
-            assert rendered[prev_end:r["text_start"]] == hdr
-            prev_end = r["block_end"]
-            assert r["trainable"] == (r["role"] == "assistant")
-        assert prev_end == len(rendered)
 
 
 def test_maxlen_sweep_matches_padding_waste_pointwise(spark):
@@ -3656,70 +3117,6 @@ def test_pii_spread_repeat_and_span(spark):
     assert out["c1"]["max_spread"] == 0
 
 
-def test_tool_call_lint_verdicts(spark):
-    """Malformed JSON, missing key, and explicit-null key all gate a
-    call; ok_ppm is exact."""
-    from poc_document_ocr_spark.operators.examples import tool_call_lint
-
-    rows = [
-        ("search", '{"query": "a", "k": 3}'),     # ok
-        ("search", '{"query": "b", "k": 1'),      # malformed (unclosed)
-        ("search", '{"query": "c"}'),             # missing k
-        ("search", '{"query": null, "k": 2}'),    # null required key
-        ("calc", '{"query": "d", "k": 9}'),       # ok
-    ]
-    calls = spark.createDataFrame(rows, "tool string, args string")
-    out = {
-        r["tool"]: r
-        for r in tool_call_lint(calls, required=("query", "k")).collect()
-    }
-    s = out["search"]
-    assert (s["n_calls"], s["n_malformed"], s["n_missing"]) == (4, 1, 2)
-    assert s["ok_ppm"] == 1 * 10**6 // 4
-    c = out["calc"]
-    assert (c["n_calls"], c["n_malformed"], c["n_missing"]) == (1, 0, 0)
-    assert c["ok_ppm"] == 10**6
-
-
-def test_moment_registers_merge_equals_direct(spark):
-    """Registers over disjoint slices merge into exactly the direct
-    full-data registers (the algebraic invariant incremental stats
-    rely on), including min/max folds and the DECIMAL sumsq."""
-    from poc_document_ocr_spark.operators.sketches import (
-        merge_moments,
-        moment_registers,
-    )
-
-    rows = [
-        ("en", 4), ("en", 7), ("en", 2),
-        ("fr", 10), ("fr", 1),
-        ("de", 5),
-    ]
-    df = spark.createDataFrame(rows, "lang string, n_tokens long")
-    a = df.filter("n_tokens % 2 = 0")   # en:4, en:2, fr:10
-    b = df.filter("n_tokens % 2 = 1")   # en:7, fr:1, de:5
-    merged = {
-        r["lang"]: r
-        for r in merge_moments(
-            moment_registers(a), moment_registers(b)
-        ).collect()
-    }
-    direct = {r["lang"]: r for r in moment_registers(df).collect()}
-    assert sorted(merged) == sorted(direct) == ["de", "en", "fr"]
-    for lang in direct:
-        assert tuple(merged[lang]) == tuple(direct[lang]), lang
-    # hand numbers: en n=3 sum=13 sumsq=16+49+4=69 min=2 max=7
-    en = merged["en"]
-    assert (en["n"], en["sum"], int(en["sumsq"]), en["min"], en["max"]) \
-        == (3, 13, 69, 2, 7)
-    # single-slice merge is the identity
-    ident = {
-        r["lang"]: r for r in merge_moments(moment_registers(df)).collect()
-    }
-    for lang in direct:
-        assert tuple(ident[lang]) == tuple(direct[lang]), lang
-
-
 def test_edit_distance_verify_hand_checked(spark):
     """Levenshtein + sim_ppm on hand-computed pairs, including the
     len-gap lower bound and the empty-string edge."""
@@ -3752,149 +3149,6 @@ def test_edit_distance_verify_hand_checked(spark):
     assert (r["lev_dist"], r["sim_ppm"]) == (0, 10**6)
     r = out[(1, 4)]                         # vs empty: all deletions
     assert (r["lev_dist"], r["sim_ppm"]) == (6, 0)
-
-
-def test_merge_same_role_turns_islands(spark):
-    """Hand-checked islands: runs merge in turn order with dense
-    re-index; singleton islands pass through."""
-    from poc_document_ocr_spark.operators.examples import (
-        merge_same_role_turns,
-    )
-
-    rows = [
-        ("c0", 1, "user", "hi"),
-        ("c0", 2, "user", "there"),
-        ("c0", 3, "assistant", "hello"),
-        ("c0", 4, "user", "bye"),
-        ("c1", 1, "assistant", "a"),
-        ("c1", 2, "assistant", "b"),
-        ("c1", 3, "assistant", "c"),
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {
-        (r["conv_id"], r["new_turn_idx"]): r
-        for r in merge_same_role_turns(t).collect()
-    }
-    assert sorted(out) == [("c0", 1), ("c0", 2), ("c0", 3), ("c1", 1)]
-    r = out[("c0", 1)]
-    assert (r["role"], r["text"], r["n_merged"]) == ("user", "hi\nthere", 2)
-    assert (r["first_turn"], r["last_turn"]) == (1, 2)
-    assert out[("c0", 2)]["text"] == "hello"
-    assert out[("c0", 3)]["text"] == "bye"
-    r = out[("c1", 1)]
-    assert (r["text"], r["n_merged"]) == ("a\nb\nc", 3)
-
-
-def test_system_prompt_profile_census(spark):
-    """Canned prompt counted across conversations and turns; share_ppm
-    exact over system turns only."""
-    from poc_document_ocr_spark.operators.examples import (
-        system_prompt_profile,
-    )
-
-    rows = [
-        ("c0", 1, "system", "canned"),
-        ("c0", 5, "system", "canned"),     # same conv, twice
-        ("c1", 1, "system", "canned"),
-        ("c2", 1, "system", "rare"),
-        ("c2", 2, "user", "not a system turn"),
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string"
-    )
-    out = {r["text"]: r for r in system_prompt_profile(t).collect()}
-    assert sorted(out) == ["canned", "rare"]
-    assert (out["canned"]["n_turns"], out["canned"]["n_convs"]) == (3, 2)
-    assert (out["rare"]["n_turns"], out["rare"]["n_convs"]) == (1, 1)
-    assert out["canned"]["share_ppm"] == 3 * 10**6 // 4
-    assert out["rare"]["share_ppm"] == 1 * 10**6 // 4
-
-
-def test_turn_merge_conservation_property(spark):
-    """Property over randomized conversations: merging conserves turn
-    counts (Σ n_merged = turns), conserves text content (island text
-    equals the '\\n'-join of its member turns in order), produces dense
-    island indices, and never leaves two adjacent islands with the
-    same role."""
-    from hypothesis import given, settings, strategies as st
-
-    from poc_document_ocr_spark.operators.examples import (
-        merge_same_role_turns,
-    )
-
-    @settings(max_examples=8, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.sampled_from(["user", "assistant", "tool"]),
-                      st.sampled_from(["", "x", "yy zz"])),
-            min_size=1, max_size=20,
-        )
-    )
-    def prop(turns):
-        rows = [("c", i + 1, role, txt) for i, (role, txt) in
-                enumerate(turns)]
-        t = spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, role string, text string"
-        )
-        out = sorted(
-            merge_same_role_turns(t).collect(),
-            key=lambda r: r["new_turn_idx"],
-        )
-        assert sum(r["n_merged"] for r in out) == len(rows)
-        assert [r["new_turn_idx"] for r in out] == list(
-            range(1, len(out) + 1)
-        )
-        for a, b in zip(out, out[1:]):
-            assert a["role"] != b["role"]
-            assert a["last_turn"] + 1 == b["first_turn"]
-        for r in out:
-            members = rows[r["first_turn"] - 1: r["last_turn"]]
-            assert all(m[2] == r["role"] for m in members)
-            assert r["text"] == "\n".join(m[3] for m in members)
-
-    prop()
-
-
-def test_merge_moments_random_split_property(spark):
-    """Property over randomized value sets and 3-way splits: registers
-    merged from any partition of the data equal the direct registers."""
-    from hypothesis import given, settings, strategies as st
-
-    from poc_document_ocr_spark.operators.sketches import (
-        merge_moments,
-        moment_registers,
-    )
-
-    @settings(max_examples=6, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.sampled_from(["en", "fr"]),
-                      st.integers(min_value=0, max_value=10**6),
-                      st.integers(min_value=0, max_value=2)),
-            min_size=1, max_size=30,
-        )
-    )
-    def prop(rows):
-        df = spark.createDataFrame(
-            [(lang, v, s) for lang, v, s in rows],
-            "lang string, n_tokens long, slice int",
-        )
-        slices = [
-            moment_registers(df.filter(F.col("slice") == s))
-            for s in (0, 1, 2)
-            if df.filter(F.col("slice") == s).take(1)
-        ]
-        merged = {
-            r["lang"]: r for r in merge_moments(*slices).collect()
-        }
-        direct = {r["lang"]: r for r in moment_registers(df).collect()}
-        assert sorted(merged) == sorted(direct)
-        for lang in direct:
-            assert tuple(merged[lang]) == tuple(direct[lang])
-
-    prop()
 
 
 def test_calibrate_scores_mapping(spark):
@@ -3959,33 +3213,6 @@ def test_calibration_report_equalizes_keep(spark):
     assert rep["flat"]["cal_cutoff"] is None
     assert rep["flat"]["cal_keep_ppm"] == 0
     assert rep["flat"]["n_scores"] == 1
-
-
-def test_timestamp_lint_violation_classes(spark):
-    """Backward jump and exact repeat are classified separately; gap
-    bounds and span are exact; single-turn conversations get NULL gaps."""
-    from poc_document_ocr_spark.operators.examples import timestamp_lint
-
-    rows = [
-        ("c0", 1, 1000),
-        ("c0", 2, 1600),    # +600
-        ("c0", 3, 1600),    # +0   -> nonmonotonic, not backward
-        ("c0", 4, 1100),    # -500 -> nonmonotonic AND backward
-        ("c0", 5, 2000),    # +900
-        ("c1", 1, 42),      # single turn: NULL gaps, span 0
-    ]
-    t = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, epoch long"
-    )
-    out = {r["conv_id"]: r for r in timestamp_lint(t).collect()}
-    r = out["c0"]
-    assert (r["n_turns"], r["n_nonmonotonic"], r["n_backward"]) == (5, 2, 1)
-    assert (r["min_gap_s"], r["max_gap_s"]) == (-500, 900)
-    assert r["span_s"] == 1000
-    r = out["c1"]
-    assert (r["n_turns"], r["n_nonmonotonic"], r["n_backward"]) == (1, 0, 0)
-    assert r["min_gap_s"] is None and r["max_gap_s"] is None
-    assert r["span_s"] == 0
 
 
 def test_ai_artifact_census_counts(spark):
@@ -4306,46 +3533,6 @@ def test_ess_report_kish(spark):
     sww = 1_000_000**2 + 9
     assert d["ess_docs"] == sw * sw // sww == 1
     assert d["ess_ppm"] == (sw * sw // sww) * 10**6 // 10
-
-
-def test_retrieval_metrics_exact(spark):
-    """Hand-checked MRR / precision / recall / nDCG@3 on a tiny ranked
-    table, including a query with zero hits (kept as a zero row)."""
-    from poc_document_ocr_spark.operators.retrieval import (
-        ndcg_discount_table,
-        retrieval_metrics,
-    )
-
-    ranked = spark.createDataFrame(
-        [
-            ("q1", 10, 1), ("q1", 11, 2), ("q1", 12, 3),
-            ("q2", 20, 1), ("q2", 21, 2), ("q2", 22, 3),
-        ],
-        "query_id string, doc_id long, rank int",
-    )
-    qrels = spark.createDataFrame(
-        [
-            ("q1", 11), ("q1", 12), ("q1", 99),  # hits at rank 2,3; 1 missed
-            ("q2", 77),                          # never retrieved
-        ],
-        "query_id string, doc_id long",
-    )
-    out = {
-        r["query_id"]: r
-        for r in retrieval_metrics(ranked, qrels, k=3).collect()
-    }
-    d = ndcg_discount_table(3)
-    p = [d[0], d[0] + d[1], d[0] + d[1] + d[2]]
-    r = out["q1"]
-    assert (r["n_rel"], r["n_hits"]) == (3, 2)
-    assert r["prec_ppm"] == 2 * 10**6 // 3
-    assert r["recall_ppm"] == 2 * 10**6 // 3
-    assert r["rr_ppm"] == 10**6 // 2          # first hit at rank 2
-    # dcg = d[2nd] + d[3rd]; idcg = prefix at min(3, 3)
-    assert r["ndcg_ppm"] == (d[1] + d[2]) * 10**6 // p[2]
-    z = out["q2"]
-    assert (z["n_rel"], z["n_hits"], z["prec_ppm"], z["recall_ppm"],
-            z["rr_ppm"], z["ndcg_ppm"]) == (1, 0, 0, 0, 0, 0)
 
 
 def test_reliability_report_ece(spark):
