@@ -23,6 +23,12 @@ differential tests, including hypothesis fuzz — tests/test_html_fast.py):
   sections) and for any parser state it cannot prove it handles —
   correctness never depends on the fast path being complete.
 
+The fast scanner copies the event semantics of one ``html.parser``
+source: CPython 3.11.7's. At import, a hash of the running interpreter's
+``html.parser`` source is compared with that pin; on a mismatch the fast
+path is switched off, with one warning, and every payload takes the
+stdlib twin.
+
 Span semantics (the per-turn invariant surface):
 
 * Spans are **Python-str codepoint offsets into the original input text**.
@@ -36,9 +42,13 @@ Deterministic by construction — no wall clock, no randomness, no I/O.
 
 from __future__ import annotations
 
+import hashlib
+import inspect
 import os
 import re
+import warnings
 from dataclasses import dataclass, field
+from html import parser as _html_parser
 from html import unescape
 from html.parser import (
     HTMLParser,
@@ -652,7 +662,29 @@ def _trim_block(block: _Block) -> tuple[str, list[tuple[int, int]]]:
     return "".join(out_parts), out_spans
 
 
-_FORCE_SLOW = os.environ.get("SPARK_GRAFT_HTML_SLOW", "") == "1"
+#: sha256 of ``inspect.getsource(html.parser)`` on CPython 3.11.7, the
+#: source whose regexes and tolerant-markup quirks ``_fast_collect`` copies.
+_HTML_PARSER_SHA256 = (
+    "2fc512ae95bed2746b5ba3fabb14fcebf3114ff808ce97d96214ddd613b253da"
+)
+
+
+def _parser_matches_pin() -> bool:
+    """True on the pinned ``html.parser``; otherwise warn and return False."""
+    try:
+        src = inspect.getsource(_html_parser)
+    except OSError:  # no source to compare counts as drift
+        src = ""
+    if hashlib.sha256(src.encode()).hexdigest() == _HTML_PARSER_SHA256:
+        return True
+    warnings.warn("html.parser differs from the source the fast HTML scanner "
+                  "reimplements; extract_html uses the stdlib twin",
+                  RuntimeWarning)
+    return False
+
+
+_FORCE_SLOW = (not _parser_matches_pin()
+               or os.environ.get("SPARK_GRAFT_HTML_SLOW", "") == "1")
 
 
 def extract_html_slow(text: str) -> HtmlExtraction:

@@ -12,7 +12,7 @@ Reference parity: ``PageSelection.TryParse`` / ``ResolveAgainst``
   extraction happens).
 
 This parse runs driver-side; the result is pushed into the scan as an
-``isin``/``between`` predicate *before* the extraction UDF stage
+``isin``/``between`` predicate *before* the extraction stage
 (predicate-pushdown analog of the reference's dispose-before-OCR loop,
 ``PdfProcessorFunction.cs:292-318``).
 """

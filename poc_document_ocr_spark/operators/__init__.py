@@ -1,2 +1,3 @@
-"""DataFrame operators: extraction UDF stage, window folds, review state,
-plus a training-data library (dedup, similarity, text stats, sampling)."""
+"""DataFrame operators: mapInArrow extraction stage, window folds, review
+state, plus a training-data library (dedup, similarity, text stats,
+sampling)."""

@@ -198,20 +198,6 @@ def parse_ocr_date(raw: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _empty_field_struct() -> Column:
-    """(null…, 'Pending') — contract guarantee 1+6, all keys present with
-    reviewed_* null at creation (``SchemaField.cs:13-63``)."""
-    return F.struct(
-        F.lit(None).cast("string").alias("value"),
-        F.lit(None).cast("string").alias("raw_text"),
-        F.lit(None).cast("double").alias("confidence"),
-        F.lit(None).cast("string").alias("reviewed_value"),
-        F.lit(None).cast("timestamp").alias("reviewed_at"),
-        F.lit(None).cast("string").alias("reviewed_by"),
-        F.lit("Pending").alias("status"),
-    )
-
-
 def _field_struct(cs: Column, name: str) -> Column:
     """SchemaField struct for catalog field ``name`` from the document's
     sorted contributions array ``cs`` (struct<t:int, field, raw, conf>).

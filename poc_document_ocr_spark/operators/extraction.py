@@ -1,16 +1,19 @@
-"""The extraction operator: Arrow-batched pandas UDF over the ``text`` column.
+"""The extraction operator: one Arrow map pass over the ``text`` column.
 
 Rebuild of the reference's per-page OCR stage (the single expensive hop,
 ``DocumentIntelligenceService.cs:72-201`` called from the per-page loop at
-``PdfProcessorFunction.cs:292-356``), as one vectorized UDF stage:
+``PdfProcessorFunction.cs:292-356``), as one vectorized Python stage — the
+package's only extraction boundary (:func:`extract_turns`):
 
-* JVM → Python transfer is Arrow-batched (``spark.sql.execution.arrow.*``);
-  the per-element Python work is the parser itself (like any tokenizer).
-* The UDF sees ONLY the ``text`` column — column pruning keeps the scan
-  narrow (the reference analog: only selected pages' streams reach OCR).
+* JVM ↔ Python transfer is Arrow record batches both ways, no pandas on
+  either side. Every input column goes back out as the incoming Arrow
+  buffer; only ``text`` is read into Python (one ``to_pylist()`` — the
+  parsers need Python strings anyway), and the four outputs are built as
+  Arrow arrays, the spans from flattened offsets.
 * Filters (turn selection, conv filters) must be applied BEFORE this stage;
-  Python UDFs are plan barriers, Catalyst will not push predicates through
-  them (SURVEY.md §7.4 trap 5).
+  a Python map is a plan barrier, Catalyst will not push predicates or
+  column pruning through it (SURVEY.md §7.4 trap 5). Columns that nothing
+  downstream reads still cross the boundary, so select them away first.
 
 Scale notes (100 TB): extraction is turn-local, so the stage runs under
 whatever partitioning the scan produced — no shuffle is introduced here.
@@ -21,27 +24,25 @@ handling (SURVEY.md §4 skew row).
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import dispatch
-from ..schema import EXTRACTION_DDL, EXTRACTION_TYPE
+from ..schema import EXTRACTION_TYPE
 
 __all__ = [
-    "extraction_col",
-    "extraction_diff",
     "extract_turns",
     "extract_turns_arrow",
-    "extract_turns_compact",
     "salted_repartition",
     "span_lint",
 ]
 
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Salted-hash repartition on (conv_id, turn_idx) ahead of the UDF stage.
+    """Salted-hash repartition on (conv_id, turn_idx) ahead of extraction.
 
     A SKEW/packing remedy, not a default: it inserts a full shuffle of the
     corpus before the map stage, and measured at 4 separate executor JVMs
@@ -64,213 +65,56 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> Data
     )
 
 
-def _rows_safe(texts, fn):
-    """Per-row error isolation: a payload whose extraction raises becomes a
-    ``rule='error'`` row instead of killing the whole task/batch (reference
-    constitution: one bad page must not abort the batch)."""
-    return [dispatch.extract_safe(t, fn) for t in texts]
-
-
-@F.pandas_udf(EXTRACTION_TYPE)
-def _extract_udf(text: pd.Series) -> pd.DataFrame:
-    rows = _rows_safe(text, dispatch.extract)
-    return pd.DataFrame(
-        {
-            "extracted_text": [r[0] for r in rows],
-            "spans": [
-                [{"start": s, "end": e} for (s, e) in r[1]] for r in rows
-            ],
-            "rule": [r[2] for r in rows],
-            "fmt": [r[3] for r in rows],
-        }
+def _spans_array(spans: list) -> pa.ListArray:
+    """``list<struct<start,end>>`` from flattened offsets and two int32
+    child arrays — no per-span dict, one ListArray assembly per batch."""
+    offsets = [0]
+    starts: list[int] = []
+    ends: list[int] = []
+    for sp in spans:
+        offsets.append(offsets[-1] + len(sp))
+        for s, e in sp:
+            starts.append(s)
+            ends.append(e)
+    struct = pa.StructArray.from_arrays(
+        [pa.array(starts, pa.int32()), pa.array(ends, pa.int32())],
+        ["start", "end"],
     )
-
-
-def extraction_col(text_col: str = "text", extract_fn=None) -> Column:
-    """The extraction struct column expression.
-
-    ``extract_fn`` injects an alternative per-payload extractor (captured by
-    value in the UDF closure — also the fault-injection seam for testing the
-    error-isolation path, analogous to the injected clock in PipelineConfig).
-    """
-    if extract_fn is None:
-        return _extract_udf(F.col(text_col))
-
-    @F.pandas_udf(EXTRACTION_TYPE)
-    def _udf(text: pd.Series) -> pd.DataFrame:
-        rows = _rows_safe(text, extract_fn)
-        return pd.DataFrame(
-            {
-                "extracted_text": [r[0] for r in rows],
-                "spans": [
-                    [{"start": s, "end": e} for (s, e) in r[1]] for r in rows
-                ],
-                "rule": [r[2] for r in rows],
-                "fmt": [r[3] for r in rows],
-            }
-        )
-
-    return _udf(F.col(text_col))
-
-
-def extract_turns_compact(
-    df: DataFrame,
-    keys: tuple[str, ...] = ("conv_id", "turn_idx"),
-    text_col: str = "text",
-    extract_fn=None,
-) -> DataFrame:
-    """mapInPandas extraction returning ONLY keys + extraction columns.
-
-    The fast path when downstream does not need the original payload
-    columns (the consolidation fold reads just ``extracted_text``): one
-    Arrow batch in (keys + text), one flat batch out — no struct column
-    assembly/disassembly. Measured at local[32], sf0.1: ~1.6× the
-    pandas-udf struct path (15.7s vs 24.8s median). Use
-    :func:`extract_turns` when the full input row must pass through.
-    """
-    import pandas as pd  # local import: executors resolve lazily
-
-    from ..functions import dispatch as _dispatch
-
-    # mapInPandas assigns columns POSITIONALLY — the declared schema must be
-    # in `keys` order (the yield order below), not input-schema order, or a
-    # caller passing keys in a different order gets silently mis-assigned
-    # columns. Look each key up by name; a missing key fails here, not at
-    # runtime inside an executor.
-    by_name = {f.name: f for f in df.schema.fields}
-    missing = [k for k in keys if k not in by_name]
-    if missing:
-        raise ValueError(f"extract_turns_compact: keys not in input: {missing}")
-    schema = ", ".join(
-        f"{k} {by_name[k].dataType.simpleString()}" for k in keys
-    ) + ", " + EXTRACTION_DDL
-
-    fn = extract_fn if extract_fn is not None else _dispatch.extract
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [_dispatch.extract_safe(t, fn) for t in pdf[text_col]]
-            out = {k: pdf[k].values for k in keys}
-            out["extracted_text"] = [r[0] for r in rows]
-            out["spans"] = [
-                [{"start": s, "end": e} for (s, e) in r[1]] for r in rows
-            ]
-            out["rule"] = [r[2] for r in rows]
-            out["fmt"] = [r[3] for r in rows]
-            yield pd.DataFrame(out)
-
-    return df.select(*keys, text_col).mapInPandas(gen, schema)
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
 
 
 def extract_turns(df: DataFrame, text_col: str = "text", extract_fn=None) -> DataFrame:
-    """Append extraction output columns to a transcripts DataFrame.
+    """Append ``extracted_text``, ``spans``, ``rule`` and ``fmt`` to ``df``.
 
-    Output adds: ``extracted_text``, ``spans``, ``rule``, ``fmt``.
-    Rows whose extraction raises come back as ``rule='error'`` (per-row
-    isolation — see :func:`..functions.dispatch.extract_safe`).
+    One Arrow map pass; every input column passes through unchanged
+    and in order. Rows whose extraction raises come back as
+    ``rule='error'`` (per-row isolation — see
+    :func:`..functions.dispatch.extract_safe`). ``extract_fn`` injects an
+    alternative per-payload extractor (None → ``dispatch.extract``); it is
+    also the fault-injection seam for testing the error-isolation path.
     """
-    with_struct = df.withColumn("_ex", extraction_col(text_col, extract_fn))
-    return (
-        with_struct.withColumn("extracted_text", F.col("_ex.extracted_text"))
-        .withColumn("spans", F.col("_ex.spans"))
-        .withColumn("rule", F.col("_ex.rule"))
-        .withColumn("fmt", F.col("_ex.fmt"))
-        .drop("_ex")
-    )
+    fn = extract_fn if extract_fn is not None else dispatch.extract
+    schema = T.StructType(df.schema.fields + EXTRACTION_TYPE.fields)
+    names = schema.fieldNames()
+    text_idx = df.columns.index(text_col)
 
+    def gen(batches):
+        for rb in batches:
+            rows = [
+                dispatch.extract_safe(t, fn)
+                for t in rb.column(text_idx).to_pylist()
+            ]
+            yield pa.RecordBatch.from_arrays(
+                rb.columns + [
+                    pa.array([r[0] for r in rows], pa.string()),
+                    _spans_array([r[1] for r in rows]),
+                    pa.array([r[2] for r in rows], pa.string()),
+                    pa.array([r[3] for r in rows], pa.string()),
+                ],
+                names,
+            )
 
-def extraction_diff(
-    old: DataFrame,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    group_col: str = "fmt",
-    text_col: str = "extracted_text",
-    span_cols: tuple[str, ...] = ("n_spans", "s0_start", "s0_end"),
-) -> DataFrame:
-    """Extractor-version regression audit: per group (normally the
-    dispatched format), how two extraction runs over the SAME units
-    differ — the corpus-scale gate a new extractor release must pass
-    before it replaces the old one. The north-rule invariant this engine
-    is built around is per-turn text equality under stable ordering
-    (reference parity: the golden-fixture pytest gate,
-    ``DocumentIntelligenceService.cs``-style output contracts); this
-    operator is that same invariant turned into a distributed query, so
-    a version bump reports exactly which formats drifted, by how many
-    characters, and whether span offsets moved — instead of a pass/fail
-    on a 500-row fixture.
-
-    ``old`` carries ``group_col`` (the dispatcher's verdict); ``new``
-    needs only ``(id, text, span cols)``. Units present on one side only
-    are counted per side under the old side's group (``'(new-only)'``
-    when the old row is absent — a new extractor inventing units is
-    itself a regression signal).
-
-    Equality is null-safe on every compared column (an empty-format unit
-    has NULL span fields on both sides — that's agreement, not drift).
-    ``text_equal_ppm`` is one integral division of exact BIGINTs;
-    ``sum_len_delta`` is an exact BIGINT sum of per-unit char deltas
-    (new − old), bounded by corpus chars — no overflow below ~9.2e18.
-
-    Shape at 10¹² turns: ONE full-outer equi-join on the unit id (both
-    sides corpus-cardinality — sort-merge under AQE, never broadcast;
-    unit ids are unique per side so the join cannot amplify), then one
-    groupBy(group) with map-side partials over a handful of formats.
-    Zero Python in the compare path.
-
-    Returns ``(grp, n_both, n_only_old, n_only_new, n_text_equal,
-    n_span_equal, text_equal_ppm, sum_len_delta)``.
-    """
-    o = old.select(
-        F.col(id_col).alias("_id"),
-        F.col(group_col).alias("_grp"),
-        F.col(text_col).alias("_to"),
-        *[F.col(c).alias(f"_o_{c}") for c in span_cols],
-    )
-    n = new.select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_tn"),
-        *[F.col(c).alias(f"_n_{c}") for c in span_cols],
-    )
-    # presence flags must not key on nullable payload columns — use a
-    # dedicated non-null marker per side
-    o = o.withColumn("_po", F.lit(1))
-    n = n.withColumn("_pn", F.lit(1))
-    j = o.join(n, "_id", "full_outer")
-    has_o = F.col("_po").isNotNull()
-    has_n = F.col("_pn").isNotNull()
-    both = has_o & has_n
-    span_eq = both
-    for c in span_cols:
-        span_eq = span_eq & F.col(f"_o_{c}").eqNullSafe(F.col(f"_n_{c}"))
-    text_eq = both & F.col("_to").eqNullSafe(F.col("_tn"))
-    return (
-        j.select(
-            F.coalesce("_grp", F.lit("(new-only)")).alias("grp"),
-            both.cast("long").alias("_b"),
-            (has_o & ~has_n).cast("long").alias("_oo"),
-            (has_n & ~has_o).cast("long").alias("_on"),
-            text_eq.cast("long").alias("_te"),
-            span_eq.cast("long").alias("_se"),
-            F.when(
-                both,
-                F.length(F.coalesce("_tn", F.lit("")))
-                - F.length(F.coalesce("_to", F.lit(""))),
-            ).otherwise(F.lit(0)).cast("long").alias("_ld"),
-        )
-        .groupBy("grp")
-        .agg(
-            F.sum("_b").alias("n_both"),
-            F.sum("_oo").alias("n_only_old"),
-            F.sum("_on").alias("n_only_new"),
-            F.sum("_te").alias("n_text_equal"),
-            F.sum("_se").alias("n_span_equal"),
-            F.expr(
-                "CAST(CAST(sum(_te) AS DECIMAL(38,0)) * 1000000"
-                " div greatest(sum(_b), 1) AS BIGINT)"
-            ).alias("text_equal_ppm"),
-            F.sum("_ld").alias("sum_len_delta"),
-        )
-    )
+    return df.mapInArrow(gen, schema)
 
 
 def extract_turns_arrow(
@@ -279,68 +123,13 @@ def extract_turns_arrow(
     text_col: str = "text",
     extract_fn=None,
 ) -> DataFrame:
-    """mapInArrow twin of :func:`extract_turns_compact` — no pandas on
-    either boundary.
-
-    The key columns pass through as the incoming Arrow buffers
-    (zero-copy — never materialized in Python), the texts come out of
-    Arrow via one ``to_pylist()`` (the parser needs Python strings
-    anyway), and the nested spans column is built as a
-    ``list<struct>`` pyarrow array directly instead of a pandas object
-    column that Arrow must re-infer. Measured at local[32], sf0.1:
-    11.0s vs 11.4-13.8s for the pandas path (~3-6% — the per-row
-    Python parser dominates both; the win is the boundary cost and
-    dropping the executor-side pandas dependency/memory). Output is
-    byte-identical to extract_turns_compact (pinned by test).
-    """
-    import pyarrow as pa  # local import: executors resolve lazily
-
-    from ..functions import dispatch as _dispatch
-
-    by_name = {f.name: f for f in df.schema.fields}
-    missing = [k for k in keys if k not in by_name]
-    if missing:
-        raise ValueError(f"extract_turns_arrow: keys not in input: {missing}")
-    schema = ", ".join(
-        f"{k} {by_name[k].dataType.simpleString()}" for k in keys
-    ) + ", " + EXTRACTION_DDL
-
-    fn = extract_fn if extract_fn is not None else _dispatch.extract
-
-    def gen(batches):
-        for rb in batches:
-            texts = rb.column(rb.schema.get_field_index(text_col)).to_pylist()
-            rows = [_dispatch.extract_safe(t, fn) for t in texts]
-            arrays = [rb.column(rb.schema.get_field_index(k)) for k in keys]
-            arrays.append(pa.array([r[0] for r in rows], pa.string()))
-            # spans as flattened offsets + two int32 child arrays — no
-            # per-span dict allocation, one ListArray assembly per batch
-            offsets = [0]
-            starts: list[int] = []
-            ends: list[int] = []
-            total = 0
-            for r in rows:
-                sp = r[1]
-                total += len(sp)
-                offsets.append(total)
-                for s, e in sp:
-                    starts.append(s)
-                    ends.append(e)
-            struct = pa.StructArray.from_arrays(
-                [pa.array(starts, pa.int32()), pa.array(ends, pa.int32())],
-                ["start", "end"],
-            )
-            arrays.append(
-                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
-            )
-            arrays.append(pa.array([r[2] for r in rows], pa.string()))
-            arrays.append(pa.array([r[3] for r in rows], pa.string()))
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                list(keys) + ["extracted_text", "spans", "rule", "fmt"],
-            )
-
-    return df.select(*keys, text_col).mapInArrow(gen, schema)
+    """``keys`` plus the four extraction columns of :func:`extract_turns`."""
+    # A projection of extract_turns, not a second boundary: it exists only
+    # because perfbench's workloads import it by name. Delete it once they
+    # call extract_turns.
+    return extract_turns(df.select(*keys, text_col), text_col, extract_fn).drop(
+        text_col
+    )
 
 
 def span_lint(

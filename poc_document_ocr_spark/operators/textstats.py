@@ -1536,7 +1536,7 @@ def compression_ratio(
     This is one of the repo's few Python stages, and it follows the
     codec rule: an Arrow-batched ``pandas_udf`` (zlib level 6 is
     deterministic for a given input), map-only, zero shuffles — the
-    same legitimacy class as the extraction/multimodal decoders. There
+    same legitimacy class as the extraction stage. There
     is deliberately NO DuckDB oracle (no zlib there); the operator is
     pinned by unit tests on known-entropy strings instead, and the
     driver records the weaker rows-only check.

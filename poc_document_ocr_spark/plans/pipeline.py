@@ -4,8 +4,8 @@ Rebuild of the reference's entry point A (SURVEY.md §3.1,
 ``PdfProcessorFunction.Run`` → decode → OCR loop → aggregate → fold →
 persist → checkpoint), as a Spark batch job:
 
-    read → turn-range filter (BEFORE the UDF barrier) → pandas-UDF extraction
-    → field contributions → forward-fill runs → consolidation folds
+    read → turn-range filter (BEFORE the Python barrier) → Arrow map
+    extraction → field contributions → forward-fill runs → consolidation folds
     → duplicate-skip anti-join → append output → lineage row per partition
 
 Checkpoint/resume model (north rule): work is split into ``n_buckets`` hash
@@ -57,9 +57,9 @@ class PipelineConfig:
     turn_range: str | None = None
     n_buckets: int = 8
     write_extracted: bool = True
-    #: opt-in pre-UDF salted shuffle — only for skewed/badly-packed inputs
-    #: (see operators.extraction.salted_repartition); the default path takes
-    #: its parallelism from input splits, shuffle-free
+    #: opt-in pre-extraction salted shuffle — only for skewed/badly-packed
+    #: inputs (see operators.extraction.salted_repartition); the default path
+    #: takes its parallelism from input splits, shuffle-free
     salt_extraction: bool = False
     #: injectable clock (driver-side only; executors never see wall time)
     clock: object = field(default=lambda: datetime.now(timezone.utc))
@@ -92,9 +92,10 @@ def extract_stage(
     salt: bool = False,
     extract_fn=None,
 ) -> DataFrame:
-    """Selection filter (pushed before the UDF barrier) + extraction.
+    """Selection filter (pushed before the Python barrier) + extraction.
 
-    The turn-range filter sits BEFORE the pandas UDF in the plan — excluded
+    The turn-range filter sits BEFORE the Arrow map extraction pass
+    (:func:`..operators.extraction.extract_turns`) in the plan — excluded
     turns never reach the expensive stage (reference FR-009 dispose-before-OCR,
     ``PdfProcessorFunction.cs:311-318``; SC-003 ≥80% cost cut).
 
@@ -120,7 +121,7 @@ def consolidate_stage(
     One linear plan (``consolidate_compact``): contributions and the
     per-turn identifier are column expressions over ``extracted_text``, so
     the extracted table is consumed exactly once — no multi-branch re-run of
-    the pandas-UDF stage and no intermediate persists (round 1's persisted
+    the extraction stage and no intermediate persists (round 1's persisted
     contribs/runs + pivot + headers join was the 4× local[32] cliff in
     BENCH_r01). Two shuffles end-to-end: the run window sort and the fold
     groupBy.

@@ -31,8 +31,8 @@ TRANSCRIPT_SCHEMA = T.StructType(
 
 # ---------------------------------------------------------------------------
 # Extraction output (reference analog: ExtractedData payload built in
-# DocumentIntelligenceService.cs:72-201, constrained to a typed struct here —
-# no dynamic maps cross the Arrow boundary)
+# DocumentIntelligenceService.cs:72-201, constrained here to four typed
+# columns that extraction appends — no dynamic maps cross the Arrow boundary)
 # ---------------------------------------------------------------------------
 
 SPAN_TYPE = T.StructType(
@@ -49,13 +49,6 @@ EXTRACTION_TYPE = T.StructType(
         T.StructField("rule", T.StringType(), True),
         T.StructField("fmt", T.StringType(), True),
     ]
-)
-
-# DDL string form for pandas_udf returnType
-EXTRACTION_DDL = (
-    "extracted_text string, "
-    "spans array<struct<start:int,end:int>>, "
-    "rule string, fmt string"
 )
 
 # ---------------------------------------------------------------------------
@@ -148,11 +141,3 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("error", T.StringType(), True),
     ]
 )
-
-#: Operation status enum (Operation.cs:60-67).
-OPERATION_STATUSES = ("NotStarted", "Running", "Succeeded", "Failed", "Cancelled")
-
-#: Review status / field status enums (ReviewStatus.cs:8-12, SchemaFieldStatus.cs:11-16).
-REVIEW_STATUSES = ("Pending", "InReview", "Reviewed")
-FIELD_STATUSES = ("Pending", "Confirmed", "Corrected")
-IDENTIFIER_SOURCES = ("Extracted", "Inferred")

@@ -1,8 +1,8 @@
 """SparkSession factory with scale-ready defaults.
 
 Local-mode settings mirror what a 1000-executor cluster deployment would set
-cluster-wide: AQE on (runtime re-plan + skew-join splitting), Arrow transport
-for the pandas-UDF extraction stage, UTC session time, shuffle partitions
+cluster-wide: AQE on (runtime re-plan + skew-join splitting), the Arrow batch
+size of the mapInArrow extraction stage, UTC session time, shuffle partitions
 sized to the parallelism rather than the 200 default.
 """
 

@@ -7,9 +7,10 @@ writes and the duplicate-skip anti-join, not from stream state (SURVEY
 
 * **Extraction streams.** Per-turn extraction is stateless and turn-local,
   so it runs safely under any micro-batch boundary: new transcript files →
-  the same Arrow-batched pandas UDF → append sink, with the checkpoint
-  giving exactly-once file tracking. This is the expensive stage, and the
-  one worth running incrementally at 100 TB/day arrival rates.
+  the same Arrow map pass as the batch job (``extract_turns``) → append
+  sink, with the checkpoint giving exactly-once file tracking. This is the
+  expensive stage, and the one worth running incrementally at 100 TB/day
+  arrival rates.
 * **Consolidation is incremental view maintenance.** The fold is
   conversation-grain and a micro-batch boundary can split a conversation,
   so per-batch folding would silently produce partial documents. Instead

@@ -234,29 +234,33 @@ def test_extract_safe_isolates_exceptions():
 
 
 def test_compact_extraction_rejects_unknown_key(spark):
-    from poc_document_ocr_spark.operators.extraction import (
-        extract_turns_compact,
-    )
+    """The compact (keys + extraction) projection fails at analysis, on
+    the driver, when a key is not in the input."""
+    from pyspark.errors import AnalysisException
+
+    from poc_document_ocr_spark.operators.extraction import extract_turns_arrow
 
     df = spark.createDataFrame(
         [("c", 0, "x")], "conv_id string, turn_idx int, text string"
     )
-    with pytest.raises(ValueError, match="nope"):
-        extract_turns_compact(df, keys=("conv_id", "nope"))
+    with pytest.raises(AnalysisException, match="nope"):
+        extract_turns_arrow(df, keys=("conv_id", "nope"))
 
 
 def test_compact_extraction_key_order_independent(spark):
-    """mapInPandas assigns columns positionally — passing keys in a
+    """mapInArrow assigns columns positionally — passing keys in a
     different order than the input schema must still label them right."""
-    from poc_document_ocr_spark.operators.extraction import (
-        extract_turns_compact,
-    )
+    from poc_document_ocr_spark.operators.extraction import extract_turns_arrow
 
     df = spark.createDataFrame(
         [("c1", 7, "hello world")],
         "conv_id string, turn_idx int, text string",
     )
-    r = extract_turns_compact(df, keys=("turn_idx", "conv_id")).collect()[0]
+    out = extract_turns_arrow(df, keys=("turn_idx", "conv_id"))
+    assert out.columns == [
+        "turn_idx", "conv_id", "extracted_text", "spans", "rule", "fmt"
+    ]
+    r = out.collect()[0]
     assert (r.turn_idx, r.conv_id, r.extracted_text) == (7, "c1", "hello world")
 
 
@@ -290,39 +294,37 @@ def test_selection_invalid(expr):
         TurnSelection.parse(expr)
 
 
-def test_compact_extraction_equals_struct_path(spark):
-    """extract_turns_compact (mapInPandas fast path) must produce exactly
-    the struct-udf path's extraction output."""
-    from poc_document_ocr_spark.operators.extraction import (
-        extract_turns,
-        extract_turns_compact,
+def test_extract_turns_passes_columns_through(spark):
+    """extract_turns hands every input column back unchanged and in
+    order — whatever the schema and column names, NULLs included — and
+    appends the four extraction columns, equal per row to
+    ``extract_safe(text)``. ``_ex`` is the name a struct-column
+    implementation would use for its scratch column."""
+    from datetime import datetime
+
+    from pyspark.sql import types as T
+
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+    from poc_document_ocr_spark.schema import EXTRACTION_TYPE
+
+    rows = [
+        (1, "<html><body><article><p>kept</p></article>"
+            "<footer>x</footer></body></html>", None, "a"),
+        (2, None, datetime(2024, 3, 1, 12, 30, 5, 123456), None),
+        (3, "plain text turn", datetime(1999, 12, 31, 23, 59, 59), "c"),
+        (4, "## Heading\n\nbody line", None, "d"),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, ts timestamp, _ex string"
     )
-    from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
-    from poc_document_ocr_spark.sources.datagen import generate
-
-    data = generate(n_convs=8, median_turns=5, seed=17, skew=False)
-    df = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
-
-    def rows(out):
-        return sorted(
-            (
-                r.conv_id,
-                r.turn_idx,
-                r.extracted_text,
-                tuple((s.start, s.end) for s in r.spans),
-                r.rule,
-                r.fmt,
-            )
-            for r in out.collect()
-        )
-
-    full = rows(
-        extract_turns(df).select(
-            "conv_id", "turn_idx", "extracted_text", "spans", "rule", "fmt"
-        )
-    )
-    compact = rows(extract_turns_compact(df))
-    assert compact == full and len(full) == len(data.golden)
+    out = extract_turns(df)
+    assert out.schema == T.StructType(df.schema.fields + EXTRACTION_TYPE.fields)
+    got = sorted(out.collect(), key=lambda r: r.doc_id)
+    assert [tuple(r)[:4] for r in got] == rows
+    for r in got:
+        ex = extract_safe(r.text)
+        assert (r.extracted_text, [(s.start, s.end) for s in r.spans],
+                r.rule, r.fmt) == (ex[0], list(ex[1]), ex[2], ex[3])
 
 
 # ---------------------------------------------------------------------------
@@ -413,19 +415,20 @@ class TestMarkdownExtraction:
         self._check_spans(doc, r)
 
 
-def test_extract_turns_arrow_matches_compact(spark):
-    from poc_document_ocr_spark.operators.extraction import (
-        extract_turns_arrow,
-        extract_turns_compact,
-    )
+def test_extract_turns_arrow_matches_golden(spark):
+    """The keys + extraction projection reproduces the generator's golden
+    text and format for every turn of a datagen corpus."""
+    from poc_document_ocr_spark.operators.extraction import extract_turns_arrow
     from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
     from poc_document_ocr_spark.sources.datagen import generate
 
     data = generate(n_convs=40, median_turns=5, seed=7, skew=False)
     turns = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
-    a = extract_turns_compact(turns).orderBy("conv_id", "turn_idx").collect()
-    b = extract_turns_arrow(turns).orderBy("conv_id", "turn_idx").collect()
-    assert a == b and len(a) > 0
+    got = {
+        (r.conv_id, r.turn_idx): (r.extracted_text, r.fmt)
+        for r in extract_turns_arrow(turns).collect()
+    }
+    assert got == data.golden and len(got) > 0
 
 
 def test_span_lint_catches_contract_violations(spark):

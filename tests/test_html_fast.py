@@ -177,6 +177,32 @@ def test_marked_section_bails_to_twin():
     _eq("<![CDATA[x]]><p>ok</p>")
 
 
+def test_parser_drift_routes_to_stdlib_twin(monkeypatch):
+    """An ``html.parser`` whose source differs from the pin switches the
+    fast scanner off with a warning; extract_html then answers from the
+    stdlib twin and never enters ``_fast_collect``."""
+    import sys
+
+    from poc_document_ocr_spark.functions import html_extract as hx
+
+    if sys.version_info[:3] == (3, 11, 7):
+        assert hx._parser_matches_pin()  # the pinned interpreter: fast path on
+
+    monkeypatch.setattr(hx, "_HTML_PARSER_SHA256", "0" * 64)
+    with pytest.warns(RuntimeWarning, match="html.parser"):
+        drifted = not hx._parser_matches_pin()
+    monkeypatch.setattr(hx, "_FORCE_SLOW", drifted)
+
+    def fast_collect_must_not_run(text):
+        raise AssertionError("fast scanner used under a drifted html.parser")
+
+    monkeypatch.setattr(hx, "_fast_collect", fast_collect_must_not_run)
+    for case in ("<p>hello</p>", "<article><p>a &amp b</p></article>"):
+        a, b = hx.extract_html(case), hx.extract_html_slow(case)
+        assert (a.extracted_text, a.spans, a.rule) == (
+            b.extracted_text, b.spans, b.rule)
+
+
 def test_fast_equals_slow_on_synthetic_corpus():
     from poc_document_ocr_spark.functions.dispatch import sniff_format
     from poc_document_ocr_spark.sources.datagen import generate_conv

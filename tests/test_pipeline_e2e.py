@@ -310,9 +310,11 @@ def test_cancellation_between_waves(spark, turns_df, tmp_path):
 def test_turn_range_filter_before_udf(spark, turns_df):
     out = extract_stage(turns_df, turn_range="1-2")
     assert set(r.turn_idx for r in out.select("turn_idx").distinct().collect()) == {1, 2}
-    # the filter must sit below the Python-UDF stage in the physical plan
+    # the filter must sit below the Python map stage in the physical plan,
+    # and that map is the one mapInArrow boundary — no pandas-UDF node
     plan = out._jdf.queryExecution().executedPlan().toString()
-    udf_pos = plan.find("ArrowEvalPython")
+    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+    udf_pos = plan.find("MapInArrow")
     filter_pos = plan.find("Filter")
     assert udf_pos != -1 and filter_pos != -1
     # deeper in the tree (= later in the string) executes earlier
@@ -438,7 +440,7 @@ def test_every_package_module_reachable_from_pipeline_roots():
              "sources.datagen", "session", "functions.datefold")
     library = ("operators.dedup", "operators.similarity",
                "operators.textstats", "operators.sampling", "operators.events",
-               "operators.preference", "operators.multimodal", "sources.textio")
+               "operators.preference")
     roots += library
     todo = set().union(*(with_parents(f"{name}.{r}") for r in roots))
     seen = set()

@@ -2062,44 +2062,6 @@ def test_template_segments_support_thresholds(spark):
     assert out[(1, t_maj)]["support_ppm"] == 666_666
 
 
-def test_extraction_diff_counts_and_null_safety(spark):
-    """Per-group diff stats: equal unit, drifted unit, only-old unit,
-    only-new unit; NULL span fields on both sides count as agreement."""
-    from poc_document_ocr_spark.operators.extraction import extraction_diff
-
-    cols = "doc_id long, fmt string, extracted_text string, n_spans long," \
-           " s0_start long, s0_end long"
-    old = spark.createDataFrame(
-        [
-            (1, "g", "same", 1, 0, 4),
-            (2, "g", "old text", 1, 0, 8),
-            (3, "g", "dropped", 1, 0, 7),
-            (4, "h", None, None, None, None),  # null unit, both sides
-        ],
-        cols,
-    )
-    new = spark.createDataFrame(
-        [
-            (1, "same", 1, 0, 4),
-            (2, "new text longer", 2, 5, 9),
-            (4, None, None, None, None),
-            (5, "ghost", 1, 0, 5),
-        ],
-        "doc_id long, extracted_text string, n_spans long,"
-        " s0_start long, s0_end long",
-    )
-    out = {r["grp"]: r for r in extraction_diff(old, new).collect()}
-    g, h, nn = out["g"], out["h"], out["(new-only)"]
-    assert (g["n_both"], g["n_only_old"], g["n_only_new"]) == (2, 1, 0)
-    assert g["n_text_equal"] == 1 and g["n_span_equal"] == 1
-    assert g["text_equal_ppm"] == 500_000
-    assert g["sum_len_delta"] == (15 - 8)
-    # NULL text and NULL spans on both sides = agreement, not drift
-    assert (h["n_both"], h["n_text_equal"], h["n_span_equal"]) == (1, 1, 1)
-    assert h["text_equal_ppm"] == 1_000_000
-    assert (nn["n_both"], nn["n_only_new"], nn["text_equal_ppm"]) == (0, 1, 0)
-
-
 def test_event_funnel_strict_ordering(spark):
     """Step i counts only users whose step-i event falls strictly after
     the first feasible step-(i-1) anchor; users entering mid-funnel
