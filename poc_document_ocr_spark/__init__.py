@@ -10,7 +10,7 @@ conversation/agent transcripts::
 Layers:
 
 * ``schema``      — single-source-of-truth catalog (13-field, merge sets, structs)
-* ``functions``   — pure-Python extraction engines (HTML/layout/dispatch/date/selection)
+* ``functions``   — pure-Python extraction engines (HTML/layout/markdown/dispatch/selection)
 * ``operators``   — DataFrame operators (mapInArrow extraction, forward-fill fold, field merge, review;
                     training-data library: dedup, similarity, text stats, sampling)
 * ``sources``     — table adapters (parquet dirs in sandbox; Iceberg in prod)

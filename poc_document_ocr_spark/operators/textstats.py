@@ -401,9 +401,8 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     (``aggregate`` higher-order function, linear per doc). Zero shuffles,
     zero joins — one scan at any corpus size (measured: the explode→
     2-groupBy formulation cost 71.7s over 1.88M docs; this form is one
-    pass). Per-document arrays assume docs fit a task's heap — the same
-    bound as ``consolidate_compact``, documented there. Documents with
-    fewer than 2 words report zero bigram counts.
+    pass). Per-document arrays assume a document's grams fit one task's
+    heap. Documents with fewer than 2 words report zero bigram counts.
     """
 
     def _top_run(arr_sql: str) -> str:

@@ -1,11 +1,11 @@
-"""The batch pipeline: transcripts → extraction → folds → consolidated records.
+"""The batch pipeline: transcripts → extraction → fold → consolidated records.
 
 Rebuild of the reference's entry point A (SURVEY.md §3.1,
 ``PdfProcessorFunction.Run`` → decode → OCR loop → aggregate → fold →
 persist → checkpoint), as a Spark batch job:
 
     read → turn-range filter (BEFORE the Python barrier) → Arrow map
-    extraction → field contributions → forward-fill runs → consolidation folds
+    extraction → field contributions → forward-fill runs → consolidation fold
     → duplicate-skip anti-join → append output → lineage row per partition
 
 Checkpoint/resume model (north rule): work is split into ``n_buckets`` hash
@@ -31,10 +31,11 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregation import consolidate_auto, consolidate_compact
+from ..operators.aggregation import consolidate, with_runs
 from ..operators.extraction import extract_turns, salted_repartition
+from ..operators.fields import best_extracted_id, contributions_array
 from ..functions.selection import TurnSelection
-from ..sources.catalog import Catalog
+from ..sources.catalog import Catalog, conv_bucket
 
 __all__ = [
     "PipelineConfig",
@@ -73,17 +74,6 @@ class PipelineConfig:
     #: injectable per-payload extractor (None → functions.dispatch.extract);
     #: also the fault-injection seam for testing error isolation
     extract_fn: object = None
-    #: automatic long-conversation fold guard: documents whose contribution
-    #: count exceeds this route through the long-format per-field fold
-    #: instead of the compact collect_list fold (north rule: explicit skew
-    #: handling for long conversations). The default sits at the compact
-    #: path's documented ~10⁶-contribution comfort bound; None disables the
-    #: guard (pure compact plan, one shuffle)
-    long_doc_threshold: int | None = 1_000_000
-
-
-def _bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
 
 def extract_stage(
@@ -113,30 +103,22 @@ def extract_stage(
     return extract_turns(turns, extract_fn=extract_fn)
 
 
-def consolidate_stage(
-    extracted: DataFrame, long_doc_threshold: int | None = None
-) -> DataFrame:
+def consolidate_stage(extracted: DataFrame) -> DataFrame:
     """Extracted turns → forward-fill runs → folded consolidated records.
 
-    One linear plan (``consolidate_compact``): contributions and the
-    per-turn identifier are column expressions over ``extracted_text``, so
-    the extracted table is consumed exactly once — no multi-branch re-run of
-    the extraction stage and no intermediate persists (round 1's persisted
-    contribs/runs + pivot + headers join was the 4× local[32] cliff in
-    BENCH_r01). Two shuffles end-to-end: the run window sort and the fold
-    groupBy.
-
-    ``long_doc_threshold`` arms the automatic long-document guard
-    (``consolidate_auto``): contribution-heavy documents take the
-    long-format per-field fold whose buffers are streaming aggregates, so
-    one million-field conversation cannot OOM a task. Row-identical output
-    either way; the guard costs one extra count window + a second (usually
-    empty) aggregation branch, so the hot batch path leaves it off and
-    ``run_pipeline`` arms it by default.
+    The per-turn field contributions and identifier are column expressions
+    over ``extracted_text`` (``operators.fields``), so the extracted table
+    is read once with no intermediate persists; runs are one window pass
+    (``with_runs``); :func:`..operators.aggregation.consolidate` folds each
+    document with streaming per-field aggregates, so one million-field
+    conversation cannot OOM a task.
     """
-    if long_doc_threshold is not None:
-        return consolidate_auto(extracted, threshold=long_doc_threshold)
-    return consolidate_compact(extracted)
+    t = extracted.select(
+        "conv_id",
+        "turn_idx",
+        contributions_array("extracted_text").alias("contribs"),
+    ).withColumn("extracted_id", best_extracted_id(F.col("contribs")))
+    return consolidate(with_runs(t))
 
 
 def _dedup_within_batch(records: DataFrame) -> DataFrame:
@@ -198,7 +180,7 @@ def run_pipeline(
         # unbucketed input: bucket is a computed column, so every wave scans
         # the full input — correct but O(n_buckets) scans; bucket the input
         # with Catalog.write_bucketed for large runs
-        turns = raw.withColumn(_BUCKET, _bucket_col(cfg.n_buckets))
+        turns = raw.withColumn(_BUCKET, conv_bucket(cfg.n_buckets))
         bucket_ids = list(range(cfg.n_buckets))
 
     completed: set[int] = set()
@@ -251,9 +233,7 @@ def run_pipeline(
                     extracted.withColumn("run_id", F.lit(cfg.run_id)),
                     cfg.extracted_table,
                 )
-            records = consolidate_stage(
-                extracted, long_doc_threshold=cfg.long_doc_threshold
-            )
+            records = consolidate_stage(extracted)
             # run correlation stamp (reference: cosmosEntity.OperationId,
             # PdfProcessorFunction.cs:197) — injected as a job arg, never
             # wall-clock inside executors

@@ -21,10 +21,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["Catalog"]
+__all__ = ["Catalog", "conv_bucket"]
+
+
+def conv_bucket(n_buckets: int, key: str = "conv_id") -> Column:
+    """The one hash bucket of a conversation: ``pmod(xxhash64(key), n)``.
+
+    Batch waves, the streaming sink's touched buckets and
+    :meth:`Catalog.write_bucketed` partitions all use it, so a bucket id
+    means the same conversations in every table."""
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
 
 
 class Catalog:
@@ -169,7 +178,7 @@ class Catalog:
         makes per-partition re-runs idempotent. Spark's dynamic partition
         overwrite replaces only the buckets present in ``df``.
         """
-        out = df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), buckets))
+        out = df.withColumn("bucket", conv_bucket(buckets, key))
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.extraction import extract_turns
 from ..schema import TRANSCRIPT_SCHEMA
+from ..sources.catalog import conv_bucket
 
 __all__ = [
     "stream_extract",
@@ -133,7 +134,6 @@ def stream_consolidate_to_catalog(
     available_now: bool = True,
     max_files: int | None = None,
     buckets: int = 32,
-    long_doc_threshold: int | None = None,
 ) -> StreamingQuery:
     """Incremental CONSOLIDATION — the view-maintenance step this module's
     docstring previously scoped out ('consolidation stays batch'). The
@@ -152,8 +152,7 @@ def stream_consolidate_to_catalog(
        across ALL runs/batches, so a conversation split over any number of
        micro-batches is folded over its COMPLETE turn set every time;
     3. re-fold those buckets through the exact batch ``consolidate_stage``
-       (optionally with the long-conversation guard armed) and
-       dynamic-overwrite the same buckets of the records table.
+       and dynamic-overwrite the same buckets of the records table.
 
     Idempotency: every write is a deterministic function of the extracted
     table's content, and both writes are dynamic partition overwrites — an
@@ -167,7 +166,7 @@ def stream_consolidate_to_catalog(
     def sink(batch_df, batch_id: int) -> None:
         consolidate_batch_sink(
             catalog, batch_df, batch_id, extracted_table, records_table,
-            run_id, buckets=buckets, long_doc_threshold=long_doc_threshold,
+            run_id, buckets=buckets,
         )
 
     writer = (
@@ -187,36 +186,38 @@ def consolidate_batch_sink(
     records_table: str,
     run_id: str,
     buckets: int = 32,
-    long_doc_threshold: int | None = None,
 ) -> None:
     """One micro-batch of the incremental consolidation (module-level so
     the crash/replay fault-injection test can drive it directly —
     foreachBatch may invoke this AGAIN with the same ``batch_id`` after a
-    mid-sink failure, and both writes must converge)."""
-    from ..plans.pipeline import consolidate_stage
+    mid-sink failure, and both writes must converge).
 
-    def bucket_of(col):
-        return F.pmod(F.xxhash64(col), F.lit(buckets)).cast("int")
+    ``batch_df`` is read by exactly one action, the landing write: the
+    touched buckets come from the partition just landed, so an extraction
+    pass upstream runs once per turn."""
+    from ..plans.pipeline import consolidate_stage
 
     landed = (
         batch_df.withColumn("run_id", F.lit(run_id))
         .withColumn("batch_id", F.lit(batch_id).cast("long"))
-        .withColumn("bucket", bucket_of(F.col("conv_id")))
+        .withColumn("bucket", conv_bucket(buckets))
     )
     catalog.overwrite_partitions(
         landed, extracted_table, part_col=("run_id", "batch_id", "bucket")
     )
+    table = catalog.read(extracted_table)
     touched = [
         r["bucket"]
-        for r in batch_df.select(
-            bucket_of(F.col("conv_id")).alias("bucket")
-        ).distinct().collect()
+        for r in table.filter(
+            (F.col("run_id") == run_id) & (F.col("batch_id") == batch_id)
+        )
+        .select("bucket")
+        .distinct()
+        .collect()
     ]
     if not touched:
         return
-    scope = catalog.read(extracted_table).filter(
-        F.col("bucket").isin(*touched)
-    )
+    scope = table.filter(F.col("bucket").isin(*touched))
     # turn-grain first-wins dedup across runs (FR-019 transposed to the
     # ingest layer): a later run started with a FRESH checkpoint re-lands
     # the same turns under a new run_id — without this, the bucket re-fold
@@ -235,7 +236,6 @@ def consolidate_batch_sink(
         .drop("_rn")
     )
     records = consolidate_stage(
-        scope.drop("run_id", "batch_id", "bucket"),
-        long_doc_threshold=long_doc_threshold,
-    ).withColumn("bucket", bucket_of(F.col("conv_id")))
+        scope.drop("run_id", "batch_id", "bucket")
+    ).withColumn("bucket", conv_bucket(buckets))
     catalog.overwrite_partitions(records, records_table, part_col="bucket")

@@ -3,18 +3,23 @@
 values verbatim, page→turn transposed (FIXTURES.md §3-4).
 """
 
-import pytest
+from datetime import datetime
+
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from poc_document_ocr_spark.operators.aggregation import (
     consolidate,
     parse_ocr_date,
-    run_headers,
-    with_local_index,
     with_runs,
 )
-from poc_document_ocr_spark.schema import FIELD_NAMES
+from poc_document_ocr_spark.schema import (
+    DATE_FIELDS,
+    FIELD_NAMES,
+    IDENTIFIER_FIELD,
+    MULTI_VALUE_FIELDS,
+    SIGNATURE_FIELDS,
+)
 
 
 def turns_df(spark, rows):
@@ -25,23 +30,27 @@ def turns_df(spark, rows):
     )
 
 
-def contribs_df(spark, rows):
-    """rows: (conv_id, run_id, field, turn_idx, raw_value, confidence)"""
-    return spark.createDataFrame(
-        rows,
-        "conv_id string, run_id int, field string, turn_idx int, "
-        "raw_value string, confidence double",
+def fold(spark, turns, contrib_rows):
+    """Fold ``turns`` — (conv_id, turn_idx, extracted_id) — with the
+    long-format fixture rows (conv_id, run_id, field, turn_idx, raw_value,
+    confidence) collected into each turn's ``contribs`` array; fixture
+    rows of turns not in ``turns`` are dropped."""
+    contribs = {}
+    for c, _run, field, t, raw, conf in contrib_rows:
+        contribs.setdefault((c, t), []).append((field, raw, conf))
+    df = spark.createDataFrame(
+        [(c, t, i, contribs.get((c, t), [])) for c, t, i in turns],
+        "conv_id string, turn_idx int, extracted_id string, contribs "
+        "array<struct<field string, raw_value string, confidence double>>",
     )
+    return consolidate(with_runs(df))
 
 
 def test_field_line_prefilter_matches_regex(spark):
     """The cheap pre-regex gate must keep EXACTLY the lines the full pattern
     keeps: the pattern allows any whitespace before ':' (\\s*), so a tab
     before the colon must survive the prefilter (round-3 advisor finding)."""
-    from poc_document_ocr_spark.operators.fields import (
-        contributions_array,
-        extract_field_contributions,
-    )
+    from poc_document_ocr_spark.operators.fields import contributions_array
 
     text = (
         "firstName\t: Ada [0.80]\n"       # tab before colon — regex keeps it
@@ -59,11 +68,6 @@ def test_field_line_prefilter_matches_regex(spark):
         ("lastName", "Lovelace", 0.70),
         ("identifier", "TK-1", 0.90),
     }
-    long_rows = {
-        (r.field, r.raw_value, r.confidence)
-        for r in extract_field_contributions(df).collect()
-    }
-    assert long_rows == expect
     arr = df.select(contributions_array().alias("cs")).collect()[0].cs
     assert {(c.field, c.raw_value, c.confidence) for c in arr} == expect
 
@@ -105,8 +109,7 @@ def test_runs_leading_orphans_synthetic_group(spark):
     assert m[1][1] is None and m[1][2] == "Inferred"
     assert m[3][0] == 1
 
-    headers = run_headers(with_runs(turns_df(spark, rows))).collect()
-    by_run = {h.run_id: h for h in headers}
+    by_run = {r.run_id: r for r in fold(spark, rows, []).collect()}
     assert by_run[0].doc_key == "unknown-conv9-1"
     assert by_run[0].turn_idxs == [1, 2]
     assert [p.source for p in by_run[0].provenance] == ["Inferred", "Inferred"]
@@ -132,23 +135,16 @@ def test_runs_out_of_order_input_sorted_first(spark):
     assert m[4][0] == m[5][0] != m[1][0]
 
 
-def test_local_reindex(spark):
-    df = turns_df(spark, [("c", 3, None), ("c", 7, None), ("c", 12, None)])
-    got = {r.turn_idx: r.local_idx for r in with_local_index(df).collect()}
-    assert got == {3: 1, 7: 2, 12: 3}
-
-
 # ---------------------------------------------------------------------------
 # Merge folds (FIXTURES.md §3 — values verbatim from MapperTests)
 # ---------------------------------------------------------------------------
 
 
 def fold_one(spark, rows, field):
-    """Fold the fixture through the production single-pass engine and
-    return the SchemaField struct for ``field``."""
+    """Fold the fixture through the production fold and return the
+    SchemaField struct for ``field``."""
     turn_keys = sorted({(r[0], r[3]) for r in rows})
-    turns = with_runs(turns_df(spark, [(c, t, None) for c, t in turn_keys]))
-    rec = consolidate(turns, contribs_df(spark, rows)).collect()[0]
+    rec = fold(spark, [(c, t, None) for c, t in turn_keys], rows).collect()[0]
     return rec[field]
 
 
@@ -271,9 +267,9 @@ def test_date_long_form_via_expression(spark):
 
 
 def test_consolidate_all_keys_present(spark):
-    turns = with_runs(turns_df(spark, [("c", 1, "TK-9")]))
-    contribs = contribs_df(spark, [("c", 1, "firstName", 1, "Ada", 0.9)])
-    out = consolidate(turns, contribs).collect()
+    out = fold(
+        spark, [("c", 1, "TK-9")], [("c", 1, "firstName", 1, "Ada", 0.9)]
+    ).collect()
     assert len(out) == 1
     rec = out[0]
     for name in FIELD_NAMES:
@@ -297,22 +293,18 @@ def test_signature_unrecognized_value_counted(spark):
         ("c", 1, "defendantSignature", 1, "maybe", 0.8),
         ("c", 1, "officerSignature", 2, "unsigned", 0.7),
     ]
-    turns = with_runs(turns_df(spark, [("c", 1, None), ("c", 2, None)]))
-    rec = consolidate(turns, contribs_df(spark, rows)).collect()[0]
+    rec = fold(spark, [("c", 1, None), ("c", 2, None)], rows).collect()[0]
     assert rec.sig_warnings == 1
     assert rec["defendantSignature"].value == "false"
     assert rec["officerSignature"].value == "false"
 
 
 def test_consolidate_provenance_and_counts(spark):
-    turns = with_runs(
-        turns_df(
-            spark,
-            [("c", 1, "TK-1"), ("c", 2, None), ("c", 3, None), ("c", 4, "TK-2")],
-        )
-    )
-    contribs = contribs_df(spark, [("c", 1, "notes", 1, "hello", 0.5)])
-    recs = {r.doc_key: r for r in consolidate(turns, contribs).collect()}
+    turns = [
+        ("c", 1, "TK-1"), ("c", 2, None), ("c", 3, None), ("c", 4, "TK-2")
+    ]
+    contribs = [("c", 1, "notes", 1, "hello", 0.5)]
+    recs = {r.doc_key: r for r in fold(spark, turns, contribs).collect()}
     assert set(recs) == {"TK-1", "TK-2"}
     r1 = recs["TK-1"]
     assert r1.turn_idxs == [1, 2, 3]
@@ -324,36 +316,114 @@ def test_consolidate_provenance_and_counts(spark):
     assert recs["TK-2"].turn_count == 1
 
 
-def test_consolidate_auto_equals_compact_at_any_threshold(spark):
-    """The auto router's output is row-identical to the compact fold no
-    matter where the threshold lands — all-compact, mixed, all-long."""
-    from poc_document_ocr_spark.operators.aggregation import (
-        consolidate_auto,
-        consolidate_compact,
-    )
+def _py_fold(turns):
+    """Independent plain-Python fold over ``(conv_id, turn_idx, contribs)``
+    rows, ``contribs`` a list of ``(field, raw_value, confidence)``:
+    forward-fill runs, the ``doc_key`` rule and the four merge rules.
+    Returns ``{(conv_id, run_id): record}`` in the fold's column names.
+    Dates: datagen emits only the compact form."""
+    neg = float("-inf")
+    run, carried, docs = {}, {}, {}
+    for conv, t, cs in sorted(turns, key=lambda r: (r[0], r[1])):
+        ids = [
+            (neg if c is None else c, r.strip())
+            for f, r, c in cs
+            if f == IDENTIFIER_FIELD and r and r.strip()
+        ]
+        eid = max(ids)[1] if ids else None
+        if eid is not None and eid != carried.get(conv):
+            run[conv], carried[conv] = run.get(conv, 0) + 1, eid
+        key = (conv, run.get(conv, 0))
+        docs.setdefault(key, (carried.get(conv), []))[1].append((t, eid, cs))
+    out = {}
+    for (conv, run_id), (ident, ts) in docs.items():
+        parts = [(t, f, r, c) for t, _, cs in ts for f, r, c in cs]
+        rec = out[(conv, run_id)] = {
+            "doc_key": ident or f"unknown-{conv}-{ts[0][0]}",
+            "turn_count": len(ts),
+            "turn_idxs": [t for t, _, _ in ts],
+            "first_turn": ts[0][0],
+            "provenance": [
+                {"turn_idx": t, "source": "Extracted" if e else "Inferred",
+                 "extracted_id": e}
+                for t, e, _ in ts
+            ],
+            "sig_warnings": sum(
+                f in SIGNATURE_FIELDS and r is not None
+                and r.lower() not in ("signed", "present", "unsigned")
+                for _, f, r, _ in parts
+            ),
+        }
+        for name in FIELD_NAMES:
+            ps = [(t, r, c) for t, f, r, c in parts if f == name]
+            value = raw_text = conf = None
+            if ps:  # FR-004: max confidence (null lowest), tie → lowest turn
+                _, value, conf = max(
+                    ps, key=lambda p: (neg if p[2] is None else p[2], -p[0])
+                )
+            if ps and name in SIGNATURE_FIELDS:  # FR-006
+                raws = [r.lower() for _, r, _ in ps if r]
+                value = "true" if {"signed", "present"} & set(raws) else "false"
+                conf = min((c for _, _, c in ps if c is not None), default=None)
+            elif ps and name in DATE_FIELDS:  # FR-002a
+                raw_text = value
+                try:
+                    value = f"{datetime.strptime(value, '%Y%b%d'):%Y-%m-%d}"
+                except (TypeError, ValueError):
+                    value = None
+            elif name in MULTI_VALUE_FIELDS:  # FR-005
+                nonws = [(r, c) for t, r, c in sorted(ps) if r and r.strip()]
+                value = "\n".join(r for r, _ in nonws) if nonws else None
+                confs = [c for _, c in nonws if c is not None]
+                conf = min(confs, default=0.0) if nonws else None
+            rec[name] = {
+                "value": value, "raw_text": raw_text, "confidence": conf,
+                "reviewed_value": None, "reviewed_at": None,
+                "reviewed_by": None, "status": "Pending",
+            }
+    return out
+
+
+def test_consolidate_stage_matches_python_oracle(spark):
+    """Every field of every record of ``consolidate_stage`` equals the
+    plain-Python fold over the same contributions collected to Python, on a
+    seeded datagen corpus that includes the 100×-median skew conversation."""
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+    from poc_document_ocr_spark.operators.fields import contributions_array
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
     from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
     from poc_document_ocr_spark.sources.datagen import generate
-    from poc_document_ocr_spark.operators.extraction import extract_turns
 
-    data = generate(n_convs=12, median_turns=6, seed=7, skew=False)
+    data = generate(n_convs=30, median_turns=4, seed=11, skew=True)
     ex = extract_turns(
         spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
     ).localCheckpoint()
-    compact = consolidate_compact(ex)
-    for threshold in (0, 2, 10**9):
-        auto = consolidate_auto(ex, threshold=threshold)
-        assert auto.columns == compact.columns
-        assert auto.exceptAll(compact).count() == 0
-        assert compact.exceptAll(auto).count() == 0
+    turns = [
+        (r.conv_id, r.turn_idx, [tuple(c) for c in r.cs])
+        for r in ex.select(
+            "conv_id", "turn_idx", contributions_array().alias("cs")
+        ).collect()
+    ]
+    want = _py_fold(turns)
+    skew = [v for (c, _), v in want.items() if c == "conv-11-00000"]
+    assert sum(v["turn_count"] for v in skew) == 400
+
+    got = {}
+    for r in consolidate_stage(ex).collect():
+        d = r.asDict(recursive=True)
+        got[(d.pop("conv_id"), d.pop("run_id"))] = d
+    assert got.keys() == want.keys()
+    for k in want:
+        assert got[k] == want[k], k
 
 
-def test_consolidate_auto_million_contribution_conversation(spark):
-    """North-rule skew guard: ONE conversation with 10⁶ field lines routes
-    through the long fold and completes with exact merge-rule output. The
-    long path's per-field aggregates are streaming (map-side partial), so
-    no task ever buffers the million contributions at once — the only
-    large object is the multi-value concat result itself."""
-    from poc_document_ocr_spark.operators.aggregation import consolidate_auto
+def test_consolidate_long_fold_million_contribution_conversation(spark):
+    """North-rule skew guard: ONE conversation with 10⁶ field lines folds
+    with exact merge-rule output. The fold's per-field aggregates are
+    streaming (map-side partial), so no task ever buffers the million
+    contributions at once — the only large object is the multi-value
+    concat result itself."""
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
 
     n_turns, lines_per_turn = 2000, 500  # = 10⁶ field lines
     # distributed text construction (never a driver-side string): each turn
@@ -373,7 +443,7 @@ def test_consolidate_auto_million_contribution_conversation(spark):
         FROM range({n_turns})
         """
     )
-    out = consolidate_auto(ex, threshold=10_000).collect()
+    out = consolidate_stage(ex).collect()
     assert len(out) == 1
     r = out[0]
     assert r["turn_count"] == n_turns

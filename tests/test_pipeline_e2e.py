@@ -393,10 +393,9 @@ def test_catalog_compaction_recovers_from_crash_windows(spark, tmp_path):
 def test_every_package_module_reachable_from_pipeline_roots():
     """Dead-code guard: every module of the package is imported, directly
     or transitively, from the batch job, the streaming job, the review
-    operators, the corpus generator, the session factory, the Python
-    reference of the date parser, or one of the training-data operator
-    modules kept as a library with their own table tests. A module none
-    of them reaches is code nothing runs."""
+    operators, the corpus generator, the session factory, or one of the
+    training-data operator modules kept as a library with their own table
+    tests. A module none of them reaches is code nothing runs."""
     import ast
     import pathlib
 
@@ -437,10 +436,9 @@ def test_every_package_module_reachable_from_pipeline_roots():
         return found & modules.keys()
 
     roots = ("plans.pipeline", "streaming.ingest", "operators.review",
-             "sources.datagen", "session", "functions.datefold")
+             "sources.datagen", "session")
     library = ("operators.dedup", "operators.similarity",
-               "operators.textstats", "operators.sampling", "operators.events",
-               "operators.preference")
+               "operators.textstats", "operators.sampling")
     roots += library
     todo = set().union(*(with_parents(f"{name}.{r}") for r in roots))
     seen = set()

@@ -3,7 +3,6 @@ DocumentReviewServiceTests + DocumentListFilterTests + ReviewUiHelpersTests
 semantics (transition rules, date validation, banding, primary page)."""
 
 import pytest
-from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from poc_document_ocr_spark.operators.aggregation import consolidate, with_runs
@@ -15,24 +14,25 @@ from poc_document_ocr_spark.operators.review import (
     filter_documents,
     is_valid_reviewed_date,
     primary_turn,
+    resolve_lock_requests,
 )
 from poc_document_ocr_spark.schema import FIELD_NAMES
 
 
 def _record(spark, contrib_rows, turns=None):
+    """Fold ``turns`` — (conv_id, turn_idx, extracted_id) — with the
+    long-format fixture rows (conv_id, run_id, field, turn_idx, raw_value,
+    confidence) collected into each turn's ``contribs`` array."""
     turns = turns or [("c", 1, "TK-1")]
-    t = with_runs(
-        spark.createDataFrame(
-            [Row(conv_id=c, turn_idx=i, extracted_id=x) for c, i, x in turns],
-            "conv_id string, turn_idx int, extracted_id string",
-        )
+    contribs = {}
+    for c, _run, field, t, raw, conf in contrib_rows:
+        contribs.setdefault((c, t), []).append((field, raw, conf))
+    t = spark.createDataFrame(
+        [(c, i, x, contribs.get((c, i), [])) for c, i, x in turns],
+        "conv_id string, turn_idx int, extracted_id string, contribs "
+        "array<struct<field string, raw_value string, confidence double>>",
     )
-    contribs = spark.createDataFrame(
-        contrib_rows,
-        "conv_id string, run_id int, field string, turn_idx int, "
-        "raw_value string, confidence double",
-    )
-    return consolidate(t, contribs)
+    return consolidate(with_runs(t))
 
 
 def _edit(rec, field, status, value, is_date=False):
@@ -284,3 +284,23 @@ def test_lock_state_machine_matches_reference_decision_table(spark):
     assert out[("d_seq", 2)]["granted"]
     r = out[("d_seq", 3)]
     assert r["granted"] and (r["held_by"], r["held_at"]) == (REV, B + 2)
+
+
+def test_lock_checkout_malformed_hold_denies_not_null(spark):
+    """A lock row with a holder but a NULL timestamp must DENY a stranger's
+    checkout with granted=false — not propagate NULL through the staleness
+    arithmetic (review finding: boolean consumers filtering granted=false
+    would silently miss the row)."""
+    locks = spark.createDataFrame(
+        [("d1", "other@x", None, None, None)],
+        "doc_key string, checked_out_by string, checked_out_at long, "
+        "last_checked_in_by string, last_checked_in_at long",
+    )
+    requests = spark.createDataFrame(
+        [("d1", 1, "me@x", "checkout", 1000)],
+        "doc_key string, seq int, reviewer string, action string, "
+        "req_ts long",
+    )
+    r = resolve_lock_requests(locks, requests).collect()[0]
+    assert r["granted"] is False and r["reason"] == "held"
+    assert r["held_by"] == "other@x"

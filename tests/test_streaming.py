@@ -210,3 +210,37 @@ def test_consolidate_sink_reingest_under_new_run_id_does_not_double_count(
     expect = consolidate_stage(batch)
     assert got.exceptAll(expect).count() == 0
     assert expect.exceptAll(got).count() == 0
+
+
+def test_consolidate_sink_extracts_each_turn_once(spark, tmp_path):
+    """The sink reads ``batch_df`` with one action, the landing write: the
+    touched buckets come from the landed partition, so the Arrow
+    extraction pass upstream calls its extractor once per turn. Calls are
+    counted across worker processes by appending to a file."""
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
+    from poc_document_ocr_spark.streaming.ingest import (
+        consolidate_batch_sink,
+    )
+
+    log = str(tmp_path / "calls")
+
+    def counting(text):
+        from poc_document_ocr_spark.functions import dispatch
+
+        with open(log, "a") as f:
+            f.write("1\n")
+        return dispatch.extract(text)
+
+    data = generate(n_convs=6, median_turns=5, seed=4, skew=False)
+    turns = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    consolidate_batch_sink(
+        cat, extract_turns(turns, extract_fn=counting), 0, "ex", "rec", "r1",
+        buckets=4,
+    )
+    with open(log) as f:
+        assert len(f.readlines()) == len(data.turns)
+    got = cat.read("rec").drop("bucket")
+    expect = consolidate_stage(extract_turns(turns))
+    assert got.exceptAll(expect).count() == 0
+    assert expect.exceptAll(got).count() == 0

@@ -654,62 +654,6 @@ def test_connected_components_raises_when_unconverged(spark):
         connected_components(pairs, max_iters=1)
 
 
-def test_asof_join_latest_at_or_before(spark):
-    from datetime import datetime
-
-    from poc_document_ocr_spark.operators.events import asof_join
-
-    t = lambda m: datetime(2024, 1, 1, 0, m)
-    left = spark.createDataFrame(
-        [(1, 1, t(5)), (2, 1, t(10)), (3, 1, t(2)), (4, 2, t(30))],
-        "event_id long, user_id long, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(1, t(3), 30.0), (1, t(10), 100.0), (2, t(40), 7.0)],
-        "user_id long, ts timestamp, ref_value double",
-    )
-    got = {
-        r.event_id: (r.asof_ts, r.ref_value)
-        for r in asof_join(left, right).collect()
-    }
-    assert got[1] == (t(3), 30.0)       # latest ref <= 00:05 is 00:03
-    assert got[2] == (t(10), 100.0)     # equal timestamps match (<=)
-    assert got[3] == (None, None)       # no ref yet -> nulls
-    assert got[4] == (None, None)       # user 2's only ref is later
-
-
-def test_interval_join_matches_plain_range_join(spark):
-    from datetime import datetime, timedelta
-
-    from poc_document_ocr_spark.operators.events import interval_join
-
-    base = datetime(2024, 1, 1)
-    pts = [(i, i % 3, base + timedelta(minutes=7 * i)) for i in range(60)]
-    ivs = [
-        (100 + j, j % 3, base + timedelta(minutes=50 * j),
-         base + timedelta(minutes=50 * j + 25))
-        for j in range(8)
-    ]
-    points = spark.createDataFrame(
-        pts, "event_id long, user_id long, ts timestamp"
-    )
-    intervals = spark.createDataFrame(
-        ivs, "interval_id long, user_id long, start_ts timestamp, "
-             "end_ts timestamp",
-    )
-    got = {
-        (r.event_id, r.interval_id)
-        for r in interval_join(points, intervals, bucket_minutes=10).collect()
-    }
-    # oracle: the naive cross check in Python
-    want = {
-        (p[0], v[0])
-        for p in pts for v in ivs
-        if p[1] == v[1] and v[2] <= p[2] <= v[3]
-    }
-    assert got == want and len(want) > 0
-
-
 def test_stratified_sample_rates_and_nesting(spark):
     from poc_document_ocr_spark.operators.sampling import (
         hash_sample,
@@ -1259,64 +1203,6 @@ def test_bigram_familiarity_top_w2_pruning(spark):
     assert 3 not in rows  # its only transition was pruned away
 
 
-def test_sliding_counts_each_event_in_two_windows(spark):
-    from poc_document_ocr_spark.operators.events import (
-        sliding_event_counts,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "2024-01-01 10:40:00", "click")],
-        "event_id long, ts string, event_type string",
-    ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) ts", "event_type")
-    rows = sorted(
-        (r["window_start"], r["n_events"])
-        for r in sliding_event_counts(df).collect()
-    )
-    assert rows == [
-        ("2024-01-01 10:00:00", 1),
-        ("2024-01-01 10:30:00", 1),
-    ]
-
-
-def test_trending_top_k_and_tiebreak(spark):
-    from poc_document_ocr_spark.operators.events import (
-        trending_event_types,
-    )
-
-    rows = [
-        (i, "2024-01-01 10:0%d:00" % (i % 6), t)
-        for i, t in enumerate(
-            ["a"] * 3 + ["b"] * 2 + ["c"] * 2 + ["d"] * 1
-        )
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, event_type string"
-    ).selectExpr("event_id", "CAST(ts AS TIMESTAMP) ts", "event_type")
-    got = [
-        (r["event_type"], r["n_events"], r["rnk"])
-        for r in sorted(
-            trending_event_types(df, k=3).collect(),
-            key=lambda r: r["rnk"],
-        )
-    ]
-    # a(3) first; b and c tie at 2 → alphabetical; d pruned by k=3
-    assert got == [("a", 3, 1), ("b", 2, 2), ("c", 2, 3)]
-
-
-def test_value_histogram_bins_and_shares(spark):
-    from poc_document_ocr_spark.operators.events import value_histogram
-
-    df = spark.createDataFrame(
-        [(1, 0.5), (2, 4.99), (3, 5.0), (4, 12.0)],
-        "event_id long, value double",
-    )
-    rows = {r["bin"]: r for r in value_histogram(df).collect()}
-    assert rows[0]["n"] == 2 and (rows[0]["lo"], rows[0]["hi"]) == (0.0, 5.0)
-    assert rows[1]["n"] == 1   # 5.0 lands in [5, 10)
-    assert rows[2]["n"] == 1
-    assert rows[0]["n_ppm"] == 2 * 1_000_000 // 4
-
-
 def test_lsh_incremental_pairs_cross_batch_only(spark):
     from poc_document_ocr_spark.operators.dedup import (
         lsh_incremental_pairs,
@@ -1669,28 +1555,6 @@ def test_cosine_topk_large_query_side_raises_with_capped_probe(spark):
     assert len(out) == 6
 
 
-def test_lock_checkout_malformed_hold_denies_not_null(spark):
-    """A lock row with a holder but a NULL timestamp must DENY a stranger's
-    checkout with granted=false — not propagate NULL through the staleness
-    arithmetic (review finding: boolean consumers filtering granted=false
-    would silently miss the row)."""
-    from poc_document_ocr_spark.operators.review import resolve_lock_requests
-
-    locks = spark.createDataFrame(
-        [("d1", "other@x", None, None, None)],
-        "doc_key string, checked_out_by string, checked_out_at long, "
-        "last_checked_in_by string, last_checked_in_at long",
-    )
-    requests = spark.createDataFrame(
-        [("d1", 1, "me@x", "checkout", 1000)],
-        "doc_key string, seq int, reviewer string, action string, "
-        "req_ts long",
-    )
-    r = resolve_lock_requests(locks, requests).collect()[0]
-    assert r["granted"] is False and r["reason"] == "held"
-    assert r["held_by"] == "other@x"
-
-
 def test_curriculum_order_is_exact_interleaved_permutation(spark):
     """curriculum_pos must be a permutation of 1..N equal to the rank of
     (src_rank, source) in lexicographic order — the closed-form interleave
@@ -1866,78 +1730,8 @@ def test_curriculum_closed_form_property(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-4 session-4 ops: Bradley-Terry, refusal, novelty, epochs, screen
+# more text-statistics and sampling ops: refusal, novelty, epochs, screen
 # ---------------------------------------------------------------------------
-
-
-def test_bt_strength_exact_integer_mm(spark):
-    """Pin the two MM updates against a pure-Python replay of the same
-    ppm integer arithmetic on a hand-sized match table: A beats B twice
-    and C once, B beats A once. Strengths must come out A > B > C with
-    the exact normalized ppm values."""
-    from poc_document_ocr_spark.operators.preference import bt_strength
-
-    matches = spark.createDataFrame(
-        [("A", "B"), ("A", "B"), ("B", "A"), ("A", "C")],
-        "winner string, loser string",
-    )
-    out = {r["variant"]: r for r in bt_strength(matches, iters=2).collect()}
-
-    n_ij = {("A", "B"): 3, ("B", "A"): 3, ("A", "C"): 1, ("C", "A"): 1}
-    wins = {"A": 3, "B": 1, "C": 0}
-    s = {"A": 1_000_000, "B": 1_000_000, "C": 1_000_000}
-    for _ in range(2):
-        denom = {
-            i: sum(
-                n * 1_000_000 // (s[i] + s[j])
-                for (pi, j), n in ((k, v) for k, v in n_ij.items())
-                if pi == i
-            )
-            for i in s
-        }
-        raw = {i: wins[i] * 1_000_000 // max(denom[i], 1) for i in s}
-        tot = sum(raw.values())
-        s = {i: raw[i] * (len(s) * 1_000_000) // tot for i in s}
-
-    assert out["A"]["n_matches"] == 4 and out["A"]["n_wins"] == 3
-    assert out["B"]["n_matches"] == 3 and out["B"]["n_wins"] == 1
-    assert out["C"]["n_matches"] == 1 and out["C"]["n_wins"] == 0
-    for v in ("A", "B", "C"):
-        assert out[v]["strength_ppm"] == s[v], v
-    assert (
-        out["A"]["strength_ppm"]
-        > out["B"]["strength_ppm"]
-        > out["C"]["strength_ppm"]
-    )
-
-
-def test_assistant_matches_pairing_and_ties(spark):
-    """Consecutive assistant turns pair within a conversation; longer
-    text wins, ties go to the earlier turn, same-variant pairs drop, and
-    NULL text counts as empty."""
-    from poc_document_ocr_spark.operators.preference import (
-        assistant_matches,
-    )
-
-    t = spark.createDataFrame(
-        [
-            ("c1", 1, "assistant", "m0", "longer text here"),
-            ("c1", 2, "user", "m1", "ignored"),
-            ("c1", 3, "assistant", "m1", "short"),
-            ("c1", 4, "assistant", "m1", "same variant -> no match"),
-            ("c1", 5, "assistant", "m2", None),
-            ("c2", 1, "assistant", "m0", "tie"),
-            ("c2", 2, "assistant", "m1", "tie"),
-        ],
-        "conv_id string, turn_idx int, role string, variant string,"
-        " text string",
-    )
-    got = sorted(
-        (r["winner"], r["loser"]) for r in assistant_matches(t).collect()
-    )
-    # c1: (m0 len16 vs m1 len5) -> m0; (m1 vs m1) dropped;
-    #     (m1 len25 vs m2 NULL->0) -> m1. c2: tie -> earlier (m0).
-    assert got == [("m0", "m1"), ("m0", "m1"), ("m1", "m2")]
 
 
 def test_refusal_stats_patterns_and_ppm(spark):
@@ -2060,32 +1854,6 @@ def test_template_segments_support_thresholds(spark):
     assert out[(1, t_maj)]["n_docs"] == 2
     assert out[(1, t_maj)]["cluster_size"] == 3
     assert out[(1, t_maj)]["support_ppm"] == 666_666
-
-
-def test_event_funnel_strict_ordering(spark):
-    """Step i counts only users whose step-i event falls strictly after
-    the first feasible step-(i-1) anchor; users entering mid-funnel
-    never count."""
-    from datetime import datetime
-
-    from poc_document_ocr_spark.operators.events import event_funnel
-
-    t = lambda s: datetime(2026, 1, 1, 0, 0, s)  # noqa: E731
-    rows = [
-        (1, "view", t(1)), (1, "click", t(2)), (1, "purchase", t(3)),
-        (2, "click", t(3)), (2, "view", t(5)),       # click precedes view
-        (3, "view", t(1)), (3, "click", t(2)),       # no purchase
-        (4, "purchase", t(1)),                       # enters mid-funnel
-    ]
-    ev = spark.createDataFrame(
-        rows, "user_id long, event_type string, ts timestamp"
-    )
-    out = {r["step_idx"]: r for r in event_funnel(ev).collect()}
-    assert [out[i]["n_users"] for i in range(3)] == [3, 2, 1]
-    assert out[0]["conv_from_prev_ppm"] == 1_000_000
-    assert out[1]["conv_from_prev_ppm"] == 666_666
-    assert out[2]["conv_from_prev_ppm"] == 500_000
-    assert out[2]["conv_from_first_ppm"] == 333_333
 
 
 def test_rule_overlap_pairs_and_dead_rules(spark):
