@@ -5,16 +5,23 @@ Rebuild of the reference's entry point A (SURVEY.md §3.1,
 persist → checkpoint), as a Spark batch job:
 
     read → turn-range filter (BEFORE the Python barrier) → Arrow map
-    extraction → field contributions → forward-fill runs → consolidation fold
-    → duplicate-skip anti-join → append output → lineage row per partition
+    extraction → land the bucket's extracted turns → read them back → field
+    contributions → forward-fill runs → consolidation fold → duplicate-skip
+    anti-join → append output → lineage row per bucket
 
 Checkpoint/resume model (north rule): work is split into ``n_buckets`` hash
 buckets of ``conv_id`` (production: Iceberg ``bucket(N, conv_id)`` partitions,
 so each wave's scan prunes to its bucket — no full rescans). A lineage row is
 committed per bucket; a re-run with the same ``run_id`` anti-joins completed
-buckets and processes only the remainder, and the duplicate-skip anti-join
-(FR-019, ``PdfProcessorFunction.cs:261-277``) makes the append idempotent
-even if a bucket died after writing output but before its lineage commit.
+buckets and processes only the remainder. A bucket that died before its
+lineage commit is redone exactly, whatever write it died after:
+
+* its extracted turns land with a dynamic partition overwrite of
+  ``(run_id, bucket)`` (Iceberg ``overwritePartitions()``, the reference's
+  ``overwrite:true`` blob writes), so the redo replaces them;
+* its records pass the duplicate-skip anti-join (FR-019,
+  ``PdfProcessorFunction.cs:261-277``), so records already appended are
+  skipped.
 
 Skew: extraction is turn-local, so the extraction stage runs under the scan's
 partitioning — a million-turn conversation does NOT serialize into one task.
@@ -57,7 +64,6 @@ class PipelineConfig:
     run_id: str = "run-0"
     turn_range: str | None = None
     n_buckets: int = 8
-    write_extracted: bool = True
     #: opt-in pre-extraction salted shuffle — only for skewed/badly-packed
     #: inputs (see operators.extraction.salted_repartition); the default path
     #: takes its parallelism from input splits, shuffle-free
@@ -162,9 +168,11 @@ def run_pipeline(
 ) -> dict:
     """Run (or resume) the pipeline; returns a summary dict.
 
-    One wave per remaining bucket: process → append output → commit lineage.
-    A killed run resumes by lineage anti-join; partially-written buckets are
-    healed by the doc_key duplicate-skip anti-join.
+    One wave per remaining bucket: extract once into the bucket's
+    ``(run_id, bucket)`` partition of the extracted table → fold that
+    partition → append the records not yet in the output → commit lineage.
+    A killed run resumes by lineage anti-join; a bucket that died mid-wave
+    re-lands its partition and its records are duplicate-skipped.
     """
     raw = catalog.read(cfg.input_table)
     phys_buckets = catalog.bucket_values(cfg.input_table)
@@ -217,40 +225,49 @@ def run_pipeline(
             break
         t0 = time.monotonic()
         bucket_turns = turns.filter(F.col(_BUCKET) == k).drop(_BUCKET)
-        extracted = extract_stage(
-            bucket_turns, cfg.turn_range, salt=cfg.salt_extraction,
-            extract_fn=cfg.extract_fn,
-        )
-        extracted = extracted.persist()
         try:
-            rows_in = extracted.count()
+            extracted = extract_stage(
+                bucket_turns, cfg.turn_range, salt=cfg.salt_extraction,
+                extract_fn=cfg.extract_fn,
+            ).withColumn("run_id", F.lit(cfg.run_id)).withColumn(
+                "bucket", F.lit(k)
+            )
+            # the wave's one extraction pass; a retried wave replaces its
+            # partition instead of appending a second copy
+            catalog.overwrite_partitions(
+                extracted, cfg.extracted_table, part_col=("run_id", "bucket")
+            )
+            # the fold reads what landed (a partition-pruned scan), read by
+            # the written schema: an empty wave lands no partition, and on
+            # the first wave leaves no file to infer one from
+            landed = catalog.read(
+                cfg.extracted_table, schema=extracted.schema
+            ).filter((F.col("run_id") == cfg.run_id) & (F.col("bucket") == k))
             rule_hits = {
                 r["rule"]: r["count"]
-                for r in extracted.groupBy("rule").count().collect()
+                for r in landed.groupBy("rule").count().collect()
             }
-            if cfg.write_extracted and rows_in:
-                catalog.append(
-                    extracted.withColumn("run_id", F.lit(cfg.run_id)),
-                    cfg.extracted_table,
+            rows_in = sum(rule_hits.values())
+            rows_out = 0
+            if rows_in:
+                records = consolidate_stage(landed)
+                # run correlation stamp (reference: cosmosEntity.OperationId,
+                # PdfProcessorFunction.cs:197) — injected as a job arg, never
+                # wall-clock inside executors
+                records = _dedup_within_batch(records).withColumn(
+                    "op_run_id", F.lit(cfg.run_id)
                 )
-            records = consolidate_stage(extracted)
-            # run correlation stamp (reference: cosmosEntity.OperationId,
-            # PdfProcessorFunction.cs:197) — injected as a job arg, never
-            # wall-clock inside executors
-            records = _dedup_within_batch(records).withColumn(
-                "op_run_id", F.lit(cfg.run_id)
-            )
-            n_records = records.count()
-            if catalog.exists(cfg.output_table):
-                new_records = dedup_against_existing(
-                    records, catalog.read(cfg.output_table)
-                )
-            else:
-                new_records = records
-            rows_out = new_records.count()
-            summary["skipped_duplicates"] += n_records - rows_out
-            if rows_out:
-                catalog.append(new_records, cfg.output_table)
+                n_records = records.count()
+                if catalog.exists(cfg.output_table):
+                    new_records = dedup_against_existing(
+                        records, catalog.read(cfg.output_table)
+                    )
+                else:
+                    new_records = records
+                rows_out = new_records.count()
+                summary["skipped_duplicates"] += n_records - rows_out
+                if rows_out:
+                    catalog.append(new_records, cfg.output_table)
             wall_ms = int((time.monotonic() - t0) * 1000)
             _commit_lineage(
                 spark, catalog, cfg, k, rows_in, rows_out, rule_hits, wall_ms,
@@ -285,8 +302,6 @@ def run_pipeline(
                 {"partition_id": k, "status": "Failed"}
             )
             raise
-        finally:
-            extracted.unpersist()
     return summary
 
 

@@ -7,6 +7,7 @@ jars (verified), so the adapter speaks parquet directories with identical
 logical behavior:
 
 * ``read(name)``      — full-scan with pushdown-friendly plain reads
+  (optionally by a given schema)
 * ``write(df, name)`` — idempotent overwrite (blob ``overwrite:true`` analog)
 * ``append(df, name)``— lineage-style append
 * dynamic-partition overwrite for per-partition idempotent re-runs
@@ -23,6 +24,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = ["Catalog", "conv_bucket"]
 
@@ -53,8 +55,14 @@ class Catalog:
     def exists(self, name: str) -> bool:
         return os.path.exists(self.path(name))
 
-    def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """Scan a table; with ``schema``, nothing is inferred from its files
+        (partition columns included), so a table with no data file reads
+        as empty."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self.path(name))
 
     def write_overwrite(self, df: DataFrame, name: str) -> None:
         """Full idempotent overwrite (blob overwrite:true analog)."""

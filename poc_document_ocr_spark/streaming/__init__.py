@@ -1,1 +1,1 @@
-from .ingest import stream_extract, stream_extract_to_catalog  # noqa: F401
+from .ingest import stream_consolidate_to_catalog  # noqa: F401

@@ -3,22 +3,23 @@
 The reference's queue trigger (``PdfProcessorFunction.cs:54-57``) delivers
 at-least-once batch dispatch; its idempotency comes from overwrite-true
 writes and the duplicate-skip anti-join, not from stream state (SURVEY
-§2.9). The streaming rebuild keeps that shape honest:
+§2.9). :func:`stream_consolidate_to_catalog` is the one streaming job, and
+it keeps that shape honest:
 
 * **Extraction streams.** Per-turn extraction is stateless and turn-local,
   so it runs safely under any micro-batch boundary: new transcript files →
-  the same Arrow map pass as the batch job (``extract_turns``) → append
-  sink, with the checkpoint giving exactly-once file tracking. This is the
-  expensive stage, and the one worth running incrementally at 100 TB/day
-  arrival rates.
+  the same Arrow map pass as the batch job (``extract_turns``), with the
+  checkpoint giving exactly-once file tracking. Each batch lands its turns
+  with a dynamic partition overwrite, so an at-least-once replay replaces
+  rather than duplicates (the batch job's waves land the same way).
 * **Consolidation is incremental view maintenance.** The fold is
   conversation-grain and a micro-batch boundary can split a conversation,
   so per-batch folding would silently produce partial documents. Instead
-  :func:`stream_consolidate_to_catalog` recomputes KEY-SCOPED: each batch
-  re-folds only the conv-hash buckets it touched, over those buckets'
-  COMPLETE accumulated turn history, and dynamic-overwrites the same
-  buckets of the records table — after any drain the records table equals
-  the batch pipeline's output (pinned by ``tests/test_streaming.py``).
+  each batch recomputes KEY-SCOPED: it re-folds only the conv-hash buckets
+  it touched, over those buckets' COMPLETE accumulated turn history, and
+  dynamic-overwrites the same buckets of the records table — after any
+  drain the records table equals the batch pipeline's output (pinned by
+  ``tests/test_streaming.py``).
 
 ``Trigger(availableNow=True)`` drains everything present then stops — the
 "process the backlog as one resumable job" mode used by the tests; drop it
@@ -36,8 +37,6 @@ from ..schema import TRANSCRIPT_SCHEMA
 from ..sources.catalog import conv_bucket
 
 __all__ = [
-    "stream_extract",
-    "stream_extract_to_catalog",
     "stream_consolidate_to_catalog",
     "consolidate_batch_sink",
 ]
@@ -52,77 +51,6 @@ def _source(spark: SparkSession, input_path: str, max_files: int | None):
     return reader.parquet(input_path)
 
 
-def stream_extract(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = True,
-    max_files: int | None = None,
-) -> StreamingQuery:
-    """File-source stream → per-turn extraction → parquet append sink.
-
-    The checkpoint tracks processed input files: a restart resumes with
-    already-extracted files skipped (the streaming analog of the lineage
-    anti-join resume in ``plans.pipeline``).
-    """
-    extracted = extract_turns(_source(spark, input_path, max_files))
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_extract_to_catalog(
-    spark: SparkSession,
-    catalog,
-    input_path: str,
-    extracted_table: str,
-    checkpoint_path: str,
-    run_id: str,
-    available_now: bool = True,
-    max_files: int | None = None,
-) -> StreamingQuery:
-    """foreachBatch variant: per-batch write through the Catalog with the
-    run-correlation stamp (reference: ``cosmosEntity.OperationId``), for
-    sinks the file sink can't express (Iceberg MERGE, lineage rows).
-
-    foreachBatch delivery is at-least-once: a micro-batch that fails after a
-    partial write but before the checkpoint commit is REPLAYED with the same
-    ``batch_id``. The sink is made idempotent by giving each batch its own
-    ``run_id=<r>/batch_id=<k>`` partition written with dynamic partition
-    overwrite — a replay replaces the partial partition instead of appending
-    duplicates (Iceberg analog: ``overwritePartitions()``; same shape as the
-    reference's overwrite-true blob writes, SURVEY §2.9). Partitioning on
-    ``(run_id, batch_id)`` rather than ``batch_id`` alone matters: a later
-    run started with a FRESH checkpoint restarts batch numbering at 0, and a
-    batch_id-only layout would silently overwrite the earlier run's
-    partitions in the same table (round-3 ADVICE finding)."""
-    extracted = extract_turns(_source(spark, input_path, max_files))
-
-    def sink(batch_df, batch_id: int) -> None:
-        catalog.overwrite_partitions(
-            batch_df.withColumn("run_id", F.lit(run_id)).withColumn(
-                "batch_id", F.lit(batch_id).cast("long")
-            ),
-            extracted_table,
-            part_col=("run_id", "batch_id"),
-        )
-
-    writer = (
-        extracted.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def stream_consolidate_to_catalog(
     spark: SparkSession,
     catalog,
@@ -135,18 +63,18 @@ def stream_consolidate_to_catalog(
     max_files: int | None = None,
     buckets: int = 32,
 ) -> StreamingQuery:
-    """Incremental CONSOLIDATION — the view-maintenance step this module's
-    docstring previously scoped out ('consolidation stays batch'). The
-    reason it had to stay batch is that a micro-batch boundary can split a
-    conversation; the fix is not per-batch folding but KEY-SCOPED
-    recomputation, the standard incremental-materialized-view shape:
+    """The streaming job: extraction and incremental CONSOLIDATION. A
+    micro-batch boundary can split a conversation, so the fold is not
+    per-batch but KEY-SCOPED recomputation, the standard
+    incremental-materialized-view shape:
 
     per micro-batch —
 
-    1. land the batch's extracted turns idempotently, partitioned by
-       ``(run_id, batch_id, bucket(conv_id))`` — replay-safe exactly like
-       :func:`stream_extract_to_catalog`, with the bucket dimension added
-       so step 2 can prune;
+    1. land the batch's extracted turns with a dynamic partition overwrite
+       of ``(run_id, batch_id, bucket(conv_id))``: a replayed batch replaces
+       its partial partitions instead of appending duplicates, and
+       ``run_id`` keeps a fresh checkpoint's restarted batch numbering from
+       overwriting an earlier run; the bucket dimension lets step 2 prune;
     2. re-read ONLY the conv-hash buckets the batch touched (a partition
        filter — at 100 TB this reads the affected slice, never the table)
        across ALL runs/batches, so a conversation split over any number of

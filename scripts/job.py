@@ -12,7 +12,9 @@ Reference analog: the queue message that launches one processing operation
 (``QueueMessage`` → ``PdfProcessorFunction.Run``); job args carry what the
 message carried (source, selection, operation id). Re-running with the same
 ``--run-id`` resumes from the lineage table (anti-join on completed
-buckets); output writes are idempotent under the duplicate-skip anti-join.
+buckets). A bucket that died mid-wave is redone exactly: its extracted
+turns replace their ``(run_id, bucket)`` partition of ``--extracted``, and
+its records pass the duplicate-skip anti-join into ``--output``.
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--turn-range", default=None,
                    help='print-dialog selection, e.g. "3-12, 15"')
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument("--no-write-extracted", action="store_true")
     p.add_argument(
         "--salt", action="store_true",
         help="pre-UDF salted repartition (skewed/badly-packed inputs only; "
@@ -69,7 +70,6 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         turn_range=args.turn_range,
         n_buckets=args.buckets,
-        write_extracted=not args.no_write_extracted,
         salt_extraction=args.salt,
     )
     summary = run_pipeline(spark, catalog, cfg)

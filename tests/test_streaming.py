@@ -1,15 +1,16 @@
 """Structured Streaming ingest tests: availableNow drain, checkpoint
-resume (new files only), and equality with the batch extraction path."""
+resume (new files only), and equality with the batch extraction and fold."""
 
 from pyspark.sql import functions as F
 
 from poc_document_ocr_spark.operators.extraction import extract_turns
+from poc_document_ocr_spark.plans.pipeline import consolidate_stage
 from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
 from poc_document_ocr_spark.sources.catalog import Catalog
 from poc_document_ocr_spark.sources.datagen import generate
 from poc_document_ocr_spark.streaming.ingest import (
-    stream_extract,
-    stream_extract_to_catalog,
+    consolidate_batch_sink,
+    stream_consolidate_to_catalog,
 )
 
 
@@ -17,63 +18,53 @@ def _write_wave(spark, path, n_convs, seed):
     data = generate(n_convs=n_convs, median_turns=5, seed=seed, skew=False)
     df = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
     df.coalesce(1).write.mode("append").parquet(path)
-    return df.count()
+    return df
 
 
-def _rows(spark, path):
+def _rows(df):
     return {
         (r.conv_id, r.turn_idx, r.extracted_text)
-        for r in spark.read.parquet(path).collect()
+        for r in df.select("conv_id", "turn_idx", "extracted_text").collect()
     }
 
 
 def test_stream_extract_drain_and_resume(spark, tmp_path):
+    """Two file waves through the streaming job with one checkpoint: each
+    drain lands exactly the batch extraction of the files it had not seen,
+    stamped with the job's run_id and a batch_id; a drain with nothing new
+    lands nothing; the records equal the batch fold over all input."""
     src = str(tmp_path / "in")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
+    cat = Catalog(spark, str(tmp_path / "wh"))
 
-    n1 = _write_wave(spark, src, n_convs=6, seed=11)
-    q = stream_extract(spark, src, out, ckpt)
-    q.awaitTermination(120)
-    got1 = _rows(spark, out)
-    assert len(got1) == n1
+    def drain():
+        q = stream_consolidate_to_catalog(
+            spark, cat, src, "ex", "rec", str(tmp_path / "ckpt"),
+            run_id="run-S", buckets=4,
+        )
+        q.awaitTermination(300)
+        return cat.read("ex")
 
+    wave1 = _write_wave(spark, src, n_convs=6, seed=11)
+    got1 = drain()
+    assert got1.count() == wave1.count()
     # streamed extraction ≡ batch extraction over the same input
-    batch = {
-        (r.conv_id, r.turn_idx, r.extracted_text)
-        for r in extract_turns(spark.read.parquet(src)).collect()
-    }
-    assert got1 == batch
+    assert _rows(got1) == _rows(extract_turns(spark.read.parquet(src)))
+    assert got1.filter(F.col("run_id") == "run-S").count() == got1.count()
+    assert "batch_id" in got1.columns
 
     # second wave: the checkpoint must skip wave-1 files
-    n2 = _write_wave(spark, src, n_convs=3, seed=22)
-    q2 = stream_extract(spark, src, out, ckpt)
-    q2.awaitTermination(120)
-    got2 = _rows(spark, out)
-    assert len(got2) == n1 + n2
-    assert got1 <= got2
+    wave2 = _write_wave(spark, src, n_convs=3, seed=22)
+    got2 = drain()
+    assert got2.count() == wave1.count() + wave2.count()
+    assert _rows(got2) - _rows(got1) == _rows(extract_turns(wave2))
 
-
-def test_stream_extract_foreach_batch_catalog(spark, tmp_path):
-    src = str(tmp_path / "in")
-    _write_wave(spark, src, n_convs=4, seed=33)
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    q = stream_extract_to_catalog(
-        spark, cat, src, "extracted_stream",
-        str(tmp_path / "ckpt2"), run_id="run-S",
-    )
-    q.awaitTermination(120)
-    got = cat.read("extracted_stream")
-    assert got.filter(F.col("run_id") == "run-S").count() == got.count()
-    assert got.count() == spark.read.parquet(src).count()
-    assert "batch_id" in got.columns
     # re-run with the same checkpoint: nothing new to process
-    q2 = stream_extract_to_catalog(
-        spark, cat, src, "extracted_stream",
-        str(tmp_path / "ckpt2"), run_id="run-S",
-    )
-    q2.awaitTermination(120)
-    assert cat.read("extracted_stream").count() == got.count()
+    assert drain().count() == got2.count()
+
+    got = cat.read("rec").drop("bucket")
+    expect = consolidate_stage(extract_turns(spark.read.parquet(src)))
+    assert got.exceptAll(expect).count() == 0
+    assert expect.exceptAll(got).count() == 0
 
 
 def test_stream_consolidate_incremental_equals_batch(spark, tmp_path):
@@ -81,15 +72,6 @@ def test_stream_consolidate_incremental_equals_batch(spark, tmp_path):
     batch): two waves splitting every conversation, one batch per file;
     final records table equals the batch fold, and re-running the drained
     stream from its checkpoint changes nothing (idempotent maintenance)."""
-    from poc_document_ocr_spark.operators.extraction import extract_turns
-    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
-    from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
-    from poc_document_ocr_spark.sources.catalog import Catalog
-    from poc_document_ocr_spark.sources.datagen import generate
-    from poc_document_ocr_spark.streaming.ingest import (
-        stream_consolidate_to_catalog,
-    )
-
     data = generate(n_convs=10, median_turns=6, seed=5, skew=False)
     turns = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
     src = str(tmp_path / "in")
@@ -130,15 +112,6 @@ def test_consolidate_sink_crash_mid_batch_then_replay_converges(
     the replay must converge to exactly the clean-run state (no duplicate
     extracted rows, records complete), because both writes are dynamic
     partition overwrites of deterministic content."""
-    from poc_document_ocr_spark.operators.extraction import extract_turns
-    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
-    from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
-    from poc_document_ocr_spark.sources.catalog import Catalog
-    from poc_document_ocr_spark.sources.datagen import generate
-    from poc_document_ocr_spark.streaming.ingest import (
-        consolidate_batch_sink,
-    )
-
     data = generate(n_convs=8, median_turns=5, seed=9, skew=False)
     turns = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
     batch = extract_turns(turns).localCheckpoint()
@@ -185,15 +158,6 @@ def test_consolidate_sink_reingest_under_new_run_id_does_not_double_count(
     """Review finding: a job restarted with a FRESH checkpoint re-lands the
     same turns under a new run_id; the bucket re-fold must first-wins dedup
     at turn grain or every re-ingested turn double-counts in the records."""
-    from poc_document_ocr_spark.operators.extraction import extract_turns
-    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
-    from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
-    from poc_document_ocr_spark.sources.catalog import Catalog
-    from poc_document_ocr_spark.sources.datagen import generate
-    from poc_document_ocr_spark.streaming.ingest import (
-        consolidate_batch_sink,
-    )
-
     data = generate(n_convs=6, median_turns=5, seed=3, skew=False)
     turns = spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
     batch = extract_turns(turns).localCheckpoint()
@@ -217,11 +181,6 @@ def test_consolidate_sink_extracts_each_turn_once(spark, tmp_path):
     touched buckets come from the landed partition, so the Arrow
     extraction pass upstream calls its extractor once per turn. Calls are
     counted across worker processes by appending to a file."""
-    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
-    from poc_document_ocr_spark.streaming.ingest import (
-        consolidate_batch_sink,
-    )
-
     log = str(tmp_path / "calls")
 
     def counting(text):
