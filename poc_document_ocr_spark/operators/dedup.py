@@ -39,7 +39,6 @@ __all__ = [
     "simhash_near_pairs",
     "connected_components",
     "canonical_docs",
-    "cross_split_leakage",
     "duplicate_ngram_spans",
     "decontaminate",
     "ngram_novelty",
@@ -480,54 +479,6 @@ def canonical_docs(
             F.col(f"_best.{id_col}").alias("canon_id"),
             (F.col(id_col) == F.col(f"_best.{id_col}")).alias("is_canon"),
         )
-    )
-
-
-def cross_split_leakage(
-    df: DataFrame,
-    weights: dict[str, float],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    seed: int = 0,
-) -> DataFrame:
-    """Train/test contamination audit: exact-content duplicates that span
-    different hash-split partitions. A document whose normalized content
-    also appears in another split inflates eval scores (the test set
-    "leaks" into training) — the check every split pipeline should run
-    AFTER splitting, because hash-splitting by id deliberately ignores
-    content (Lee et al. 2107.06499 §6.2 measure exactly this leakage in
-    public corpora).
-
-    Composes the engine's own primitives: :func:`~.sampling.hash_split`
-    labels (pure function of id), the normalized content fingerprint of
-    :func:`~.textstats.fingerprint`, then ONE groupBy(fingerprint) whose
-    distinct-split set is collected sorted (deterministic). Only
-    fingerprints spanning ≥ 2 splits survive — at 100 TB the output is
-    the (rare) leak list, not the corpus.
-
-    Returns ``(fingerprint, n_docs, n_splits, splits, first_doc)``;
-    ``splits`` is the '|'-joined sorted distinct split list.
-    """
-    from .sampling import hash_split
-
-    norm = F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "))
-    labeled = hash_split(
-        df.select(F.col(id_col), F.md5(norm).alias("fingerprint")),
-        weights,
-        id_col=id_col,
-        seed=seed,
-    )
-    return (
-        labeled.groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.size(F.collect_set("split")).cast("long").alias("n_splits"),
-            F.concat_ws(
-                "|", F.sort_array(F.collect_set("split"))
-            ).alias("splits"),
-            F.min(id_col).alias("first_doc"),
-        )
-        .filter(F.col("n_splits") >= 2)
     )
 
 
@@ -1134,8 +1085,7 @@ def dedup_survivorship(
     large negative ``bias_ppm`` = the source is being deduplicated away
     (usually correct for mirrors — but the audit is how you FIND OUT it
     happened, instead of discovering a silently vanished domain at
-    training time). Pairs with the mixture-drift monitor the same way
-    ``split_leakage`` pairs with ``cluster_split``.
+    training time).
 
     Shape: one co-keyed equi join of the (id, source) projection with the
     :func:`canonical_docs` output (both corpus-cardinality → sort-merge

@@ -1030,9 +1030,8 @@ def dsir_affinity(
     document's token occurrences, and ``affinity`` is ONE division of
     those integers (IEEE-identical in any engine) — a monotone proxy of
     the paper's log-likelihood-ratio for fixed document length. The
-    bucket key is the first ``bucket_chars`` hex chars of md5(token) —
-    the same engine-neutral hashing trick the hash-split carve uses
-    (:func:`~poc_document_ocr_spark.operators.sampling.hash_split`).
+    bucket key is the first ``bucket_chars`` hex chars of md5(token), an
+    engine-neutral hash.
 
     Scale: the bucket model is BOUNDED (16^bucket_chars rows — 256 at
     the default), i.e. a legitimate broadcast-class model artifact like
@@ -1166,10 +1165,9 @@ def heaps_law(
     ``maxid ≤ 2⁶³/buckets`` (every realistic corpus), switching to the
     overflow-safe divide-first width ``id DIV (maxid DIV buckets + 1)``
     beyond it — multiply-first overflows BIGINT under ANSI mode near
-    2⁶³/buckets (the round-3 mixture_weights overflow class), while
-    divide-first alone quantizes the width and can emit fewer than
-    ``buckets`` checkpoints on small id domains. The CASE is on the
-    scalar ``maxid``, replayed identically by the oracle.
+    2⁶³/buckets, while divide-first alone quantizes the width and can
+    emit fewer than ``buckets`` checkpoints on small id domains. The CASE
+    is on the scalar ``maxid``, replayed identically by the oracle.
 
     Returns ``(bucket, n_tokens, n_new_terms, cum_tokens, cum_terms)``.
     """
@@ -1605,11 +1603,11 @@ def screen_agreement(
 
     All arithmetic is exact ppm integer: ``po_ppm = (n11 + n00)·1e6 DIV
     n``; ``pe_ppm`` widens the marginal products to DECIMAL(38,0)
-    before the integral division (n² overflows BIGINT past ~3e9 rows —
-    the ``mixture_weights`` rule); and because κ may be NEGATIVE
-    (worse-than-chance disagreement) while Spark's ``div`` truncates
-    toward zero and DuckDB's ``//`` floors, the sign is factored out
-    explicitly so both engines divide non-negative integers only.
+    before the integral division (n² overflows BIGINT past ~3e9 rows);
+    and because κ may be NEGATIVE (worse-than-chance disagreement) while
+    Spark's ``div`` truncates toward zero and DuckDB's ``//`` floors, the
+    sign is factored out explicitly so both engines divide non-negative
+    integers only.
 
     Shape: ONE full-corpus aggregation to a single row (map-side
     partial — five counters per partition), nothing else. The join of
@@ -2044,8 +2042,7 @@ def quality_drift(
 ) -> DataFrame:
     """Per-source quality-drift monitor over crawl days.
 
-    ``mix_drift_report`` watches WHAT the corpus is made of;
-    this watches whether each source's quality screen keep-rate is
+    Watches whether each source's quality screen keep-rate is
     moving over time — the signal that a site redesigned, a crawler
     broke, or spam flooded in (a per-(source, day) keep-rate that falls
     off a cliff while the overall mix looks stable). Per source: the
@@ -2343,7 +2340,7 @@ def calibrate_scores(
     engines because no float division happens.
 
     Shape — skew-safe two-pass over the VALUE HISTOGRAM, never a
-    per-group row sort (the ``group_quantiles`` lesson: a
+    per-group row sort (a
     ``row_number().over(partitionBy(group).orderBy(score))`` funnels a
     dominant source through ONE task at 100 TB): the corpus-cardinality
     stage is exactly one map-side-combinable ``groupBy(group, score)``;

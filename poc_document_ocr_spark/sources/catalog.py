@@ -44,13 +44,7 @@ class Catalog:
         self.root = root
 
     def path(self, name: str) -> str:
-        # accept both bare table names and pre-suffixed files
-        p = os.path.join(self.root, name)
-        if not name.endswith(".parquet") and not os.path.isdir(p):
-            pq = p + ".parquet"
-            if os.path.exists(pq):
-                return pq
-        return p
+        return os.path.join(self.root, name)
 
     def exists(self, name: str) -> bool:
         return os.path.exists(self.path(name))
@@ -186,10 +180,6 @@ class Catalog:
         makes per-partition re-runs idempotent. Spark's dynamic partition
         overwrite replaces only the buckets present in ``df``.
         """
-        out = df.withColumn("bucket", conv_bucket(buckets, key))
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(self.path(name))
+        self.overwrite_partitions(
+            df.withColumn("bucket", conv_bucket(buckets, key)), name, "bucket"
         )

@@ -133,7 +133,9 @@ def consolidate_batch_sink(
     catalog.overwrite_partitions(
         landed, extracted_table, part_col=("run_id", "batch_id", "bucket")
     )
-    table = catalog.read(extracted_table)
+    # by the written schema: an empty first batch leaves a table with no
+    # data file, which then reads as empty instead of failing inference
+    table = catalog.read(extracted_table, schema=landed.schema)
     touched = [
         r["bucket"]
         for r in table.filter(

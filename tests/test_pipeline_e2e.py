@@ -549,8 +549,7 @@ def test_every_package_module_reachable_from_pipeline_roots():
 
     roots = ("plans.pipeline", "streaming.ingest", "operators.review",
              "sources.datagen", "session")
-    library = ("operators.dedup", "operators.textstats",
-               "operators.sampling")
+    library = ("operators.dedup", "operators.textstats")
     roots += library
     todo = set().union(*(with_parents(f"{name}.{r}") for r in roots))
     seen = set()

@@ -203,3 +203,22 @@ def test_consolidate_sink_extracts_each_turn_once(spark, tmp_path):
     expect = consolidate_stage(extract_turns(turns))
     assert got.exceptAll(expect).count() == 0
     assert expect.exceptAll(got).count() == 0
+
+
+def test_consolidate_sink_empty_first_batch(spark, tmp_path):
+    """An empty first micro-batch (an input file with no rows) lands no
+    data file; the sink reads the table back by the written schema, finds
+    no touched bucket and writes no records. The next batch folds as
+    usual."""
+    cat = Catalog(spark, str(tmp_path / "wh"))
+    empty = extract_turns(spark.createDataFrame([], TRANSCRIPT_SCHEMA))
+    consolidate_batch_sink(cat, empty, 0, "ex", "rec", "r1", buckets=4)
+    assert not cat.exists("rec")
+
+    data = generate(n_convs=4, median_turns=5, seed=6, skew=False)
+    batch = extract_turns(spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA))
+    consolidate_batch_sink(cat, batch, 1, "ex", "rec", "r1", buckets=4)
+    got = cat.read("rec").drop("bucket")
+    expect = consolidate_stage(batch)
+    assert got.exceptAll(expect).count() == 0
+    assert expect.exceptAll(got).count() == 0

@@ -1,5 +1,4 @@
-"""Table tests for the training-data operators: dedup, text analysis,
-sampling.
+"""Table tests for the training-data operators: dedup and text analysis.
 
 Mirrors the reference's table-test style (``DateFieldParserTests``): small
 fixed inputs, exact expected outputs.
@@ -12,19 +11,6 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from poc_document_ocr_spark.operators.dedup import (
-    exact_dedup_groups,
-    lsh_candidate_pairs,
-    minhash_signatures,
-    ngram_jaccard,
-    word_shingles,
-)
-from poc_document_ocr_spark.operators.textstats import (
-    fingerprint,
-    lang_id,
-    token_stats,
-)
-
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
@@ -36,6 +22,8 @@ def _docs(spark, rows):
 
 
 def test_exact_dedup_groups(spark):
+    from poc_document_ocr_spark.operators.dedup import exact_dedup_groups
+
     df = _docs(
         spark,
         [(1, "a b c"), (2, "a b c"), (3, "different text"), (9, "a b c")],
@@ -50,6 +38,8 @@ def test_exact_dedup_groups(spark):
 
 
 def test_word_shingles_exact_set(spark):
+    from poc_document_ocr_spark.operators.dedup import word_shingles
+
     df = _docs(spark, [(1, "a b c d"), (2, "x y")])
     got = sorted(
         (r.doc_id, r.shingle) for r in word_shingles(df, n=3).collect()
@@ -59,12 +49,19 @@ def test_word_shingles_exact_set(spark):
 
 
 def test_shingles_distinct(spark):
+    from poc_document_ocr_spark.operators.dedup import word_shingles
+
     df = _docs(spark, [(1, "a b a b a b")])
     got = {r.shingle for r in word_shingles(df, n=3).collect()}
     assert got == {"a b a", "b a b"}
 
 
 def test_minhash_identical_docs_identical_sigs(spark):
+    from poc_document_ocr_spark.operators.dedup import (
+        minhash_signatures,
+        word_shingles,
+    )
+
     df = _docs(spark, [(1, "w1 w2 w3 w4 w5"), (2, "w1 w2 w3 w4 w5")])
     sigs = minhash_signatures(word_shingles(df))
     rows = sigs.collect()
@@ -74,6 +71,12 @@ def test_minhash_identical_docs_identical_sigs(spark):
 
 
 def test_lsh_pairs_identical_docs(spark):
+    from poc_document_ocr_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        word_shingles,
+    )
+
     df = _docs(
         spark,
         [
@@ -88,6 +91,11 @@ def test_lsh_pairs_identical_docs(spark):
 
 
 def test_ngram_jaccard_exact_value(spark):
+    from poc_document_ocr_spark.operators.dedup import (
+        ngram_jaccard,
+        word_shingles,
+    )
+
     # doc1: shingles {a b c, b c d}; doc2: {a b c, b c e}
     df = _docs(spark, [(1, "a b c d"), (2, "a b c e")])
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
@@ -102,6 +110,8 @@ def test_ngram_jaccard_exact_value(spark):
 
 
 def test_token_stats_values(spark):
+    from poc_document_ocr_spark.operators.textstats import token_stats
+
     df = _docs(spark, [(1, "the cat sat")])
     r = token_stats(df).collect()[0]
     assert (r.n_chars, r.n_tokens, r.n_alpha_chars) == (11, 3, 9)
@@ -110,6 +120,8 @@ def test_token_stats_values(spark):
 
 
 def test_lang_id_markers_and_tiebreak(spark):
+    from poc_document_ocr_spark.operators.textstats import lang_id
+
     df = _docs(
         spark,
         [
@@ -123,6 +135,8 @@ def test_lang_id_markers_and_tiebreak(spark):
 
 
 def test_fingerprint_normalizes_case_and_space(spark):
+    from poc_document_ocr_spark.operators.textstats import fingerprint
+
     df = _docs(spark, [(1, "  Hello   World "), (2, "hello world")])
     rows = fingerprint(df).collect()
     fps = {r.doc_id: r.fingerprint for r in rows}
@@ -130,7 +144,7 @@ def test_fingerprint_normalizes_case_and_space(spark):
 
 
 # ---------------------------------------------------------------------------
-# similarity
+# near-duplicate hashing and quality
 # ---------------------------------------------------------------------------
 
 
@@ -187,7 +201,12 @@ def test_simhash_near_dup_low_hamming(spark):
 def test_minhash_scale_profile_band_separation(spark):
     """At SCALE_PROFILE (128 hashes, 16 bands × 8 rows) a true near-dup
     pair must share a band; a low-Jaccard pair must not."""
-    from poc_document_ocr_spark.operators.dedup import SCALE_PROFILE
+    from poc_document_ocr_spark.operators.dedup import (
+        SCALE_PROFILE,
+        lsh_candidate_pairs,
+        minhash_signatures,
+        word_shingles,
+    )
 
     base = " ".join(f"tok{i}" for i in range(60))
     near = " ".join(f"tok{i}" for i in range(59)) + " tokX"  # J ≈ 0.93
@@ -249,7 +268,7 @@ def test_winnow_fingerprints_properties(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected components / IVF ANN / repetition / tf-idf (round 3)
+# connected components / repetition / tf-idf (round 3)
 # ---------------------------------------------------------------------------
 
 
@@ -330,78 +349,8 @@ def test_tfidf_topterms_ranking(spark):
 
 
 # ---------------------------------------------------------------------------
-# sampling / packing / chunking / redaction / composition (round 3)
+# chunking / redaction / composition (round 3)
 # ---------------------------------------------------------------------------
-
-
-def test_hash_split_deterministic_and_partitioning_invariant(spark):
-    from poc_document_ocr_spark.operators.sampling import hash_split
-
-    df = spark.range(2000).withColumnRenamed("id", "doc_id")
-    w = {"train": 0.8, "val": 0.1, "test": 0.1}
-    a = {r.doc_id: r.split for r in hash_split(df, w).collect()}
-    b = {
-        r.doc_id: r.split
-        for r in hash_split(df.repartition(13), w).collect()
-    }
-    assert a == b                      # partitioning does not move labels
-    n = len(a)
-    frac = {s: sum(1 for v in a.values() if v == s) / n for s in w}
-    # uniform hash: within a few points of the requested weights
-    assert abs(frac["train"] - 0.8) < 0.05
-    assert abs(frac["val"] - 0.1) < 0.03
-    assert abs(frac["test"] - 0.1) < 0.03
-
-
-def test_hash_sample_is_nested_and_seed_sensitive(spark):
-    from poc_document_ocr_spark.operators.sampling import hash_sample
-
-    df = spark.range(2000).withColumnRenamed("id", "doc_id")
-    keep10 = {r.doc_id for r in hash_sample(df, 0.1, seed=3).collect()}
-    keep25 = {r.doc_id for r in hash_sample(df, 0.25, seed=3).collect()}
-    assert keep10 <= keep25            # thresholds nest for a fixed seed
-    assert abs(len(keep25) / 2000 - 0.25) < 0.04
-    other = {r.doc_id for r in hash_sample(df, 0.25, seed=4).collect()}
-    assert other != keep25             # seed actually changes the sample
-
-
-def test_shard_assign_range_and_stability(spark):
-    from poc_document_ocr_spark.operators.sampling import shard_assign
-
-    df = spark.range(1000).withColumnRenamed("id", "doc_id")
-    rows = shard_assign(df, n_shards=8).collect()
-    assert {r.shard for r in rows} == set(range(8))
-    # every shard gets a non-trivial share (uniformity sanity)
-    counts = [sum(1 for r in rows if r.shard == s) for s in range(8)]
-    assert min(counts) > 1000 / 8 / 3
-
-
-def test_pack_contiguous_budget_and_positions(spark):
-    from poc_document_ocr_spark.operators.sampling import pack_contiguous
-
-    rows = [(s, i, 40) for s in (0, 1) for i in range(10)]
-    df = spark.createDataFrame(
-        rows, "shard int, doc_id long, n_tokens long"
-    )
-    got = pack_contiguous(df, budget=100).collect()
-    by_pack = {}
-    for r in got:
-        by_pack.setdefault((r.shard, r.pack_id), []).append(r)
-    # 10 docs x 40 tokens at budget 100: packs of sizes 3,2,3,2 (a doc that
-    # STARTS before the boundary stays in the earlier pack)
-    sizes = sorted(
-        len(v) for (s, p), v in by_pack.items() if s == 0
-    )
-    assert sizes == [2, 2, 3, 3]
-    for members in by_pack.values():
-        assert sorted(r.pack_pos for r in members) == list(
-            range(len(members))
-        )
-    # deterministic: same input, same packs at different parallelism
-    again = pack_contiguous(df.repartition(7), budget=100).collect()
-    assert {(r.shard, r.doc_id, r.pack_id) for r in again} == {
-        (r.shard, r.doc_id, r.pack_id) for r in got
-    }
 
 
 def test_chunk_text_windows_and_tail(spark):
@@ -527,93 +476,6 @@ def test_connected_components_raises_when_unconverged(spark):
         connected_components(pairs, max_iters=1)
 
 
-def test_stratified_sample_rates_and_nesting(spark):
-    from poc_document_ocr_spark.operators.sampling import (
-        hash_sample,
-        stratified_sample,
-    )
-
-    rows = [(i, "en" if i % 2 == 0 else "fr") for i in range(2000)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string")
-    kept = stratified_sample(
-        df, {"en": 0.2, "fr": 1.0}, strata_col="lang"
-    ).collect()
-    en = [r for r in kept if r.lang == "en"]
-    fr = [r for r in kept if r.lang == "fr"]
-    assert len(fr) == 1000                       # rate 1.0 keeps everything
-    assert abs(len(en) / 1000 - 0.2) < 0.05
-    # nests with the global sampler at the same seed: the en-kept set IS
-    # hash_sample(0.2) restricted to en
-    glob = {r.doc_id for r in hash_sample(df, 0.2).collect()}
-    assert {r.doc_id for r in en} == {d for d in glob if d % 2 == 0}
-    # unlisted strata use default_rate (0 -> dropped entirely)
-    none = stratified_sample(df, {"zz": 1.0}, strata_col="lang").count()
-    assert none == 0
-
-
-def test_group_quantiles_discrete_exact(spark):
-    from poc_document_ocr_spark.operators.sampling import group_quantiles
-
-    rows = [("a", i, (i + 1) * 10) for i in range(9)] + [("b", 100, 7)]
-    df = spark.createDataFrame(rows, "lang string, doc_id long, n_tokens long")
-    got = {
-        (r.lang, r.q): r.value for r in group_quantiles(df).collect()
-    }
-    # group a: values 10..90, n=9 -> idx floor(q*8): p25->20? floor(2.0)=2 ->30
-    assert got[("a", 250)] == 30
-    assert got[("a", 500)] == 50
-    assert got[("a", 750)] == 70
-    assert got[("a", 950)] == 80        # floor(0.95*8)=7 -> value 80
-    # singleton group: every quantile is the one value
-    assert got[("b", 250)] == 7 and got[("b", 950)] == 7
-
-
-def test_group_quantiles_ties_and_skew_shape(spark):
-    """Ties collapse into one histogram bucket (same answer as the old
-    per-group row sort: the lowest-ranked duplicate), and the plan carries
-    no row_number window over the raw rows — the skew fix for a dominant
-    group."""
-    from poc_document_ocr_spark.operators.sampling import group_quantiles
-
-    # group 'a' dominated by value 5 (ties), n=10 -> idx(0.5*9)=4 -> 5
-    rows = [("a", i, 5) for i in range(8)] + [
-        ("a", 8, 1), ("a", 9, 9),
-    ]
-    df = spark.createDataFrame(rows, "lang string, doc_id long, n_tokens long")
-    q = group_quantiles(df, qs=(0.0, 0.5, 1.0))
-    got = {(r.lang, r.q): r.value for r in q.collect()}
-    assert got[("a", 0)] == 1
-    assert got[("a", 500)] == 5
-    assert got[("a", 1000)] == 9
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "row_number" not in plan
-
-
-def test_group_quantiles_approx_matches_exact(spark):
-    """The one-pass approx_percentile twin returns actual data values
-    within the sketch's rank-error bound of the exact path — here (narrow
-    distinct domain, high accuracy) it matches the exact answer."""
-    from poc_document_ocr_spark.operators.sampling import (
-        group_quantiles,
-        group_quantiles_approx,
-    )
-
-    rows = [("a", i, (i % 37) + 1) for i in range(500)] + [
-        ("b", i, i) for i in range(100)
-    ]
-    df = spark.createDataFrame(rows, "lang string, doc_id long, n_tokens long")
-    exact = {
-        (r.lang, r.q): r.value for r in group_quantiles(df).collect()
-    }
-    approx = {
-        (r.lang, r.q): r.value
-        for r in group_quantiles_approx(df).collect()
-    }
-    assert exact.keys() == approx.keys()
-    for key, v in exact.items():
-        assert abs(approx[key] - v) <= 1, (key, v, approx[key])
-
-
 def test_bpe_token_count_vs_whitespace(spark):
     from poc_document_ocr_spark.operators.textstats import bpe_token_count
 
@@ -630,91 +492,6 @@ def test_bpe_token_count_vs_whitespace(spark):
     assert got[2].n_bpe_tokens == 8
     assert got[2].tokens_per_100_words == 400
     assert got[3].n_bpe_tokens == 0 and got[3].tokens_per_100_words is None
-
-
-def test_corpus_curation_ladder_composes(spark):
-    """End-to-end composition of the curation ladder: quality gate ->
-    exact-dup keepers -> near-dup cluster keepers -> deterministic split
-    -> shard -> pack. Asserts the invariants a production pass relies on,
-    at two different parallelism levels."""
-    from poc_document_ocr_spark.operators.dedup import (
-        connected_components,
-        exact_dedup_groups,
-    )
-    from poc_document_ocr_spark.operators.sampling import (
-        hash_split,
-        pack_contiguous,
-        shard_assign,
-    )
-
-    base = [
-        (i, "the quick brown fox jumps over dog number " + " ".join(
-            f"w{(i * 7 + j) % 19}" for j in range(20)))
-        for i in range(40)
-    ]
-    # exact copies of 0-9 at +100, near-copies of 10-19 at +200
-    rows = (
-        base
-        + [(i + 100, t) for i, t in base[:10]]
-        + [(i + 200, t + " tail") for i, t in base[10:20]]
-        + [(300, "x"), (301, "")]          # low-quality junk
-    )
-    docs = _docs(spark, rows)
-
-    # 1. quality gate: junk drops, real docs survive
-    from poc_document_ocr_spark.operators.textstats import quality_score
-
-    kept = quality_score(docs).filter(F.col("keep")).select("doc_id")
-    kept_ids = {r.doc_id for r in kept.collect()}
-    assert 300 not in kept_ids and 301 not in kept_ids
-    assert set(range(40)) <= kept_ids
-
-    # 2. exact dedup: each copied text keeps exactly its min doc_id
-    groups = exact_dedup_groups(docs.join(kept, "doc_id"))
-    for r in groups.filter(F.col("n_copies") > 1).collect():
-        assert r.keeper_id < 100
-    # 3. near-dup clustering over shingle-LSH pairs: near-copies cluster
-    #    with their source, keeper = min id
-    pairs = lsh_candidate_pairs(
-        minhash_signatures(word_shingles(docs.join(kept, "doc_id")))
-    )
-    comp = {
-        r.node: r.component for r in connected_components(pairs).collect()
-    }
-    for i in range(10, 20):
-        if (i + 200) in comp:               # near-copy clustered
-            assert comp[i + 200] == comp.get(i, comp[i + 200])
-
-    # 4. carve the deduped survivors; determinism across repartition
-    survivors = docs.join(kept, "doc_id").filter(F.col("doc_id") < 100)
-    split_a = {
-        r.doc_id: r.split
-        for r in hash_split(survivors, {"train": 0.8, "val": 0.2}).collect()
-    }
-    split_b = {
-        r.doc_id: r.split
-        for r in hash_split(
-            survivors.repartition(11), {"train": 0.8, "val": 0.2}
-        ).collect()
-    }
-    assert split_a == split_b
-
-    # 5. shard + pack: every pack (except possibly each shard's last) is
-    #    over budget only by at most one straddling doc
-    with_tokens = survivors.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_tokens"),
-    )
-    packed = pack_contiguous(
-        shard_assign(with_tokens, n_shards=4), budget=60
-    ).collect()
-    tot = {}
-    for r in packed:
-        tot.setdefault((r.shard, r.pack_id), 0)
-        tot[(r.shard, r.pack_id)] += r.n_tokens
-    max_doc = max(r.n_tokens for r in packed)
-    for (s, p), t in tot.items():
-        assert t < 60 + max_doc             # straddle bound, never runaway
 
 
 def test_segment_dedup_keeps_first_occurrence(spark):
@@ -797,26 +574,6 @@ def test_lm_quality_model_is_per_language(spark):
     rows = {r["doc_id"]: r for r in lm_quality_bands(df).collect()}
     assert rows[1]["score_key"] == 1_000_000_000 // 4
     assert rows[2]["score_key"] == 1_000_000_000
-
-
-def test_mixture_weights_upsamples_low_resource(spark):
-    from poc_document_ocr_spark.operators.sampling import mixture_weights
-
-    # en: 4 docs × 4 tokens = 16; fr: 1 doc × 1 token
-    df = spark.createDataFrame(
-        [(i, "en", "a b c d") for i in range(4)] + [(9, "fr", "a")],
-        "doc_id long, lang string, text string",
-    )
-    rows = {r["lang"]: r for r in mixture_weights(df).collect()}
-    assert rows["en"]["n_tokens"] == 16 and rows["fr"]["n_tokens"] == 1
-    # natural shares in ppm (integer floor division)
-    assert rows["en"]["p_ppm"] == 16 * 1_000_000 // 17
-    assert rows["fr"]["p_ppm"] == 1 * 1_000_000 // 17
-    # sqrt temperature: weights ∝ 4e6 : 1e6 → 800000 : 200000 ppm
-    assert rows["en"]["w_ppm"] == 800_000
-    assert rows["fr"]["w_ppm"] == 200_000
-    # low-resource fr is up-sampled (>1×), high-resource en down-sampled
-    assert rows["fr"]["up_x1000"] > 1000 > rows["en"]["up_x1000"]
 
 
 def test_blocklist_hits_counts_and_verdict(spark):
@@ -924,66 +681,6 @@ def test_canonical_docs_keep_best_policy(spark):
     assert rows[7]["cluster_size"] == 1
 
 
-def test_cross_split_leakage_flags_cross_split_dups_only(spark):
-    from poc_document_ocr_spark.operators.dedup import cross_split_leakage
-    from poc_document_ocr_spark.operators.sampling import _hex_threshold
-
-    # pick two ids landing in different halves of the hash space (the
-    # split is a pure function of (id, seed), so choose fixture ids by
-    # computing the same key here)
-    thr = _hex_threshold(0.5)
-    key = lambda i: hashlib.md5(f"{i}:0".encode()).hexdigest()[:8]
-    lo = next(i for i in range(100) if key(i) < thr)
-    hi = next(i for i in range(100) if key(i) >= thr)
-    lo2 = next(i for i in range(100) if key(i) < thr and i != lo)
-    df = _docs(
-        spark,
-        [
-            (lo, "Shared   Text"),      # same normalized content,
-            (hi, "shared text"),        # different splits → leak
-            (lo2, "same side only"),
-            (99999, "unique content"),
-        ],
-    )
-    out = cross_split_leakage(df, {"a": 0.5, "b": 0.5}).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["fingerprint"] == hashlib.md5(b"shared text").hexdigest()
-    assert (r["n_docs"], r["n_splits"], r["splits"]) == (2, 2, "a|b")
-    assert r["first_doc"] == min(lo, hi)
-
-
-def test_curation_funnel_stage_counts(spark):
-    from poc_document_ocr_spark.operators.sampling import curation_funnel
-
-    df = _docs(
-        spark,
-        [
-            (1, "good clean prose with enough words here"),
-            (2, "Good   clean prose with enough words here"),  # dup of 1
-            (3, "spam spam spam spam junk junk junk here"),    # blocklisted
-            (4, "x"),                                          # quality drop
-            (5, "another perfectly fine document with words"),
-        ],
-    )
-    rows = curation_funnel(df, {"train": 1.0}).collect()
-    by_stage = {}
-    for r in rows:
-        by_stage.setdefault(r["stage"], []).append(r)
-    assert by_stage["raw"][0]["n_docs"] == 5
-    assert by_stage["quality"][0]["n_docs"] == 4      # drops 4
-    assert by_stage["blocklist"][0]["n_docs"] == 3    # drops 3
-    assert by_stage["dedup"][0]["n_docs"] == 2        # 1≡2 collapse
-    finals = {r["split"]: r["n_docs"] for r in by_stage["final"]}
-    assert finals == {"train": 2}
-    # dedup keeps the min-id copy: the train split must be computed from
-    # ids {1, 5}, not {2, 5} — both land in train under weight 1.0 anyway,
-    # so additionally pin the monotone funnel property
-    ns = [by_stage[s][0]["n_docs"]
-          for s in ("raw", "quality", "blocklist", "dedup")]
-    assert ns == sorted(ns, reverse=True)
-
-
 def test_bigram_familiarity_top_w2_pruning(spark):
     from poc_document_ocr_spark.operators.textstats import (
         bigram_familiarity,
@@ -1037,80 +734,6 @@ def test_lsh_incremental_pairs_cross_batch_only(spark):
     assert got == [(1, 10), (2, 11)]
 
 
-def test_length_trim_bounds_per_group(spark):
-    from poc_document_ocr_spark.operators.sampling import length_trim
-
-    # en lengths 1..20 → p5 idx floor(.05*19)=0 → lo=1; p95 idx
-    # floor(.95*19)=18 → hi=19; so 20 is trimmed, everything else kept.
-    # fr has a single row: both bounds equal its value → kept.
-    rows = [(i, "en", i) for i in range(1, 21)] + [(100, "fr", 7)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, lang string, n_tokens long"
-    )
-    out = {r["doc_id"]: r for r in length_trim(df).collect()}
-    assert (out[1]["lo_v"], out[1]["hi_v"]) == (1, 19)
-    assert out[1]["keep"] and out[19]["keep"]
-    assert not out[20]["keep"]
-    assert out[100]["keep"] and out[100]["lo_v"] == 7
-
-
-def test_apply_mixture_downsamples_only_overrepresented(spark):
-    from poc_document_ocr_spark.operators.sampling import apply_mixture
-
-    # language A dominates token mass; B is the low-resource tail
-    rows = [(i, "A", "w " * 50) for i in range(90)]
-    rows += [(1000 + i, "B", "w " * 10) for i in range(10)]
-    df = spark.createDataFrame(
-        [(i, l, t.strip()) for i, l, t in rows],
-        "doc_id long, lang string, text string",
-    )
-    out = {r["lang"]: r for r in apply_mixture(df).collect()}
-    a, b = out["A"], out["B"]
-    # under-represented language keeps EVERYTHING and is marked up-sampled
-    assert b["n_docs_kept"] == b["n_docs_in"] == 10
-    assert b["up_x1000"] > 1000
-    # over-represented language is strictly downsampled, near its target:
-    # kept/in ≈ up_x1000/1000 (hash granularity ±, but never above target
-    # by more than the binomial spread at n=90)
-    assert a["up_x1000"] < 1000
-    assert 0 < a["n_docs_kept"] < a["n_docs_in"]
-    # determinism: same input → identical kept counts
-    out2 = {r["lang"]: r for r in apply_mixture(df).collect()}
-    assert {k: v["n_docs_kept"] for k, v in out.items()} == {
-        k: v["n_docs_kept"] for k, v in out2.items()
-    }
-
-
-def test_curriculum_order_is_exact_interleaved_permutation(spark):
-    """curriculum_pos must be a permutation of 1..N equal to the rank of
-    (src_rank, source) in lexicographic order — the closed-form interleave
-    must match the order-by it replaces."""
-    from poc_document_ocr_spark.operators.sampling import curriculum_order
-
-    rows = [
-        (i, f"src{i % 3}", (i * 7919) % 40 + (1 if i % 3 == 0 else 0))
-        for i in range(60)
-    ]
-    # skewed source: src0 gets 20 extra docs
-    rows += [(100 + i, "src0", (i * 31) % 40) for i in range(20)]
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, n_chars long"
-    )
-    out = curriculum_order(df).collect()
-    n = len(rows)
-    assert sorted(r["curriculum_pos"] for r in out) == list(range(1, n + 1))
-    # closed form == explicit sort by (src_rank, source)
-    explicit = sorted(out, key=lambda r: (r["src_rank"], r["source"]))
-    for pos, r in enumerate(explicit, start=1):
-        assert r["curriculum_pos"] == pos
-    # per-source ranks are dense 1..cnt
-    by_src = {}
-    for r in out:
-        by_src.setdefault(r["source"], []).append(r["src_rank"])
-    for s, ranks in by_src.items():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1)), s
-
-
 def test_heaps_law_cumulatives_and_totals(spark):
     from poc_document_ocr_spark.operators.textstats import heaps_law
 
@@ -1132,28 +755,9 @@ def test_heaps_law_cumulatives_and_totals(spark):
     assert cums == sorted(cums)
 
 
-def test_k_anonymity_bands(spark):
-    from poc_document_ocr_spark.operators.sampling import k_anonymity
-
-    rows = (
-        [(i, "s1", "en", 10) for i in range(12)]  # one group of 12
-        + [(100, "s2", "en", 10)]  # unique
-        + [(200 + i, "s3", "fr", 10) for i in range(3)]  # rare (3)
-    )
-    df = spark.createDataFrame(
-        rows, "doc_id long, source string, lang string, n_chars long"
-    )
-    out = {r["risk_band"]: r for r in k_anonymity(df).collect()}
-    assert out["anonymous"]["n_groups"] == 1
-    assert out["anonymous"]["n_docs"] == 12
-    assert out["unique"]["n_docs"] == 1
-    assert out["rare"]["n_docs"] == 3
-
-
 def test_heaps_law_no_overflow_on_large_ids(spark):
     """Bucketing must divide first: multiply-first overflows BIGINT under
-    ANSI mode once ids approach 2^63/buckets (the mixture_weights
-    overflow class from the round-3 advisory)."""
+    ANSI mode once ids approach 2^63/buckets."""
     from poc_document_ocr_spark.operators.textstats import heaps_law
 
     big = 2**62
@@ -1206,41 +810,8 @@ def test_dedup_weights_keeps_null_text_rows(spark):
     assert out[1]["weight_ppm"] == 1000000
 
 
-def test_curriculum_closed_form_property(spark):
-    """Property check over randomized skew shapes: for ANY (source,
-    n_chars) distribution — including heavy duplicates and single-source
-    corpora — the closed-form interleave equals the rank of
-    (src_rank, source) under an explicit lexicographic sort."""
-    from hypothesis import given, settings, strategies as st
-
-    from poc_document_ocr_spark.operators.sampling import curriculum_order
-
-    @settings(max_examples=10, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.sampled_from(["a", "b", "c", "dd"]),
-                      st.integers(min_value=0, max_value=5)),
-            min_size=1, max_size=40,
-        )
-    )
-    def prop(pairs):
-        rows = [(i, src, n) for i, (src, n) in enumerate(pairs)]
-        df = spark.createDataFrame(
-            rows, "doc_id long, source string, n_chars long"
-        )
-        out = curriculum_order(df).collect()
-        assert sorted(r["curriculum_pos"] for r in out) == list(
-            range(1, len(rows) + 1)
-        )
-        explicit = sorted(out, key=lambda r: (r["src_rank"], r["source"]))
-        for pos, r in enumerate(explicit, start=1):
-            assert r["curriculum_pos"] == pos
-
-    prop()
-
-
 # ---------------------------------------------------------------------------
-# more text-statistics and sampling ops: refusal, novelty, epochs, screen
+# more text-statistics and dedup ops: refusal, novelty, templates
 # ---------------------------------------------------------------------------
 
 
@@ -1284,31 +855,6 @@ def test_ngram_novelty_distinct_grams_and_short_docs(spark):
     assert out[1]["novelty_ppm"] == 500_000
     # doc 2: 4 positional grams but 3 DISTINCT; only 'a b c' is seen
     assert out[2]["n_grams"] == 3 and out[2]["n_unseen"] == 2
-
-
-def test_epoch_schedule_decomposition(spark):
-    from poc_document_ocr_spark.operators.sampling import (
-        epoch_schedule,
-        mixture_weights,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "en", "w " * 400), (2, "yo", "w " * 4)],
-        "doc_id long, lang string, text string",
-    )
-    mw = {r["lang"]: r for r in mixture_weights(df).collect()}
-    out = {r["lang"]: r for r in epoch_schedule(df).collect()}
-    for lang in ("en", "yo"):
-        up = mw[lang]["up_x1000"]
-        assert out[lang]["up_x1000"] == up
-        assert out[lang]["full_epochs"] == up // 1000
-        assert out[lang]["frac_x1000"] == up % 1000
-        assert (
-            out[lang]["planned_tokens"]
-            == mw[lang]["n_tokens"] * up // 1000
-        )
-    # sqrt temperature up-samples the low-resource language
-    assert out["yo"]["full_epochs"] >= 1 and out["en"]["up_x1000"] <= 1000
 
 
 def test_template_segments_support_thresholds(spark):
@@ -1366,63 +912,6 @@ def test_rule_overlap_pairs_and_dead_rules(spark):
     assert (ab["n_a"], ab["n_b"], ab["n_both"]) == (3, 2, 2)
     assert ab["jaccard_ppm"] == 666_666
     assert (ac["n_both"], ac["jaccard_ppm"]) == (0, 0)
-
-
-def test_group_sample_k_deterministic_fixed_size(spark):
-    """Exactly k rows per group, ranks 1..k, byte-identical across
-    calls, different seed draws a different sample."""
-    from poc_document_ocr_spark.operators.sampling import group_sample_k
-
-    df = spark.createDataFrame(
-        [(i % 2, i) for i in range(60)], "src long, doc_id long"
-    )
-    s1 = group_sample_k(df, "src", 5, seed=0).collect()
-    s2 = group_sample_k(df, "src", 5, seed=0).collect()
-    assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))
-    by_src = {}
-    for r in s1:
-        by_src.setdefault(r["src"], []).append(r["sample_rank"])
-    assert all(sorted(v) == [1, 2, 3, 4, 5] for v in by_src.values())
-    s3 = group_sample_k(df, "src", 5, seed=1).collect()
-    assert {r["doc_id"] for r in s3} != {r["doc_id"] for r in s1}
-
-
-def test_cluster_split_zero_leakage(spark):
-    """Every near-dup candidate pair lands in ONE split (the property
-    doc-hash splitting violates), and every member of a component gets
-    its component's label."""
-    from poc_document_ocr_spark.operators.dedup import (
-        connected_components,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        word_shingles,
-    )
-    from poc_document_ocr_spark.operators.sampling import hash_split
-
-    base = [
-        (i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(30)))
-        for i in range(40)
-    ]
-    near = [(i + 1000, t + " tail") for i, t in base if i % 2 == 0]
-    corpus = spark.createDataFrame(base + near, "doc_id long, text string")
-    pairs = lsh_candidate_pairs(minhash_signatures(word_shingles(corpus)))
-    comp = connected_components(pairs)
-    comps = (
-        corpus.select("doc_id")
-        .join(comp, corpus["doc_id"] == comp["node"], "left")
-        .select(
-            "doc_id", F.coalesce("component", "doc_id").alias("component")
-        )
-    )
-    out = hash_split(
-        comps, {"train": 0.8, "val": 0.1, "test": 0.1}, id_col="component"
-    )
-    split_of = {r["doc_id"]: r["split"] for r in out.collect()}
-    got_pairs = pairs.collect()
-    assert len(got_pairs) >= 15  # the planted twins actually paired up
-    for r in got_pairs:
-        assert split_of[r["id_a"]] == split_of[r["id_b"]], (r, split_of)
-    assert len(set(split_of.values())) >= 2  # splits actually differ
 
 
 def test_compression_ratio_entropy_tails(spark):
@@ -1567,44 +1056,6 @@ def test_pmi_collocations_exact_replay(spark):
     )
 
 
-def test_mix_drift_report_exact_tvd(spark):
-    from pyspark.sql import functions as F
-
-    from poc_document_ocr_spark.operators.sampling import mix_drift_report
-
-    # snapshot A: web 3, code 1  → shares 750000 / 250000 ppm
-    # snapshot B: web 1, code 3  → shares 250000 / 750000 ppm
-    # TVD = (|+500000| + |-500000|) / 2 = 500000 ppm
-    df = spark.createDataFrame(
-        [("web", True)] * 3 + [("code", True)]
-        + [("web", False)] + [("code", False)] * 3,
-        "source string, in_a boolean",
-    )
-    rows = {r["source"]: r for r in
-            mix_drift_report(df, F.col("in_a")).collect()}
-    assert rows["web"]["n_a"] == 3 and rows["web"]["n_b"] == 1
-    assert rows["web"]["p_a_ppm"] == 750_000
-    assert rows["web"]["delta_ppm"] == -500_000
-    assert rows["code"]["delta_ppm"] == 500_000
-    assert all(r["tvd_ppm"] == 500_000 for r in rows.values())
-
-
-def test_mix_drift_report_empty_snapshot_no_divzero(spark):
-    from pyspark.sql import functions as F
-
-    from poc_document_ocr_spark.operators.sampling import mix_drift_report
-
-    # all rows in snapshot A: p_b's total is zero — nullif turns the
-    # ANSI div-by-zero abort into NULL shares, and the report still
-    # returns one row per source
-    df = spark.createDataFrame(
-        [("web", True), ("code", True)], "source string, in_a boolean"
-    )
-    rows = mix_drift_report(df, F.col("in_a")).collect()
-    assert len(rows) == 2
-    assert all(r["p_b_ppm"] is None for r in rows)
-
-
 def test_source_boilerplate_share(spark):
     from pyspark.sql import functions as F
 
@@ -1626,40 +1077,6 @@ def test_source_boilerplate_share(spark):
         assert rows[s]["n_fp"] == 2 and rows[s]["n_dup_fp"] == 1
         assert rows[s]["n_boiler_fp"] == 1
         assert rows[s]["dup_share_ppm"] == 500_000
-
-
-def test_source_frequency_cap_caps_heavy_source(spark):
-    from poc_document_ocr_spark.operators.sampling import (
-        source_frequency_cap,
-    )
-
-    # heavy: 200 docs capped at 50 (keep_ppm 250000); light: 10 docs,
-    # under the cap → keep_ppm 1000000 and everything kept
-    rows = [(i, "heavy") for i in range(200)] + [
-        (1000 + i, "light") for i in range(10)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    out = {r["source"]: r for r in source_frequency_cap(df, 50).collect()}
-    assert out["heavy"]["n_docs_in"] == 200
-    assert out["heavy"]["keep_ppm"] == 250_000
-    # hash-binomial around 50; deterministic, loose envelope
-    assert 25 <= out["heavy"]["n_docs_kept"] <= 80
-    assert out["light"]["keep_ppm"] == 1_000_000
-    assert out["light"]["n_docs_kept"] == 10
-
-
-def test_source_frequency_cap_deterministic_and_composable(spark):
-    from poc_document_ocr_spark.operators.sampling import source_cap_kept
-
-    df = spark.createDataFrame(
-        [(i, "s") for i in range(100)], "doc_id long, source string"
-    )
-    a = {r["doc_id"]: r["kept"] for r in source_cap_kept(df, 30).collect()}
-    b = {
-        r["doc_id"]: r["kept"]
-        for r in source_cap_kept(df.repartition(7), 30).collect()
-    }
-    assert a == b  # pure function of (id, seed, counts)
 
 
 def test_snapshot_diff_classifies_all_states(spark):
@@ -1813,33 +1230,6 @@ def test_lsh_calibration_exact_on_identical_pair(spark):
     assert r["mean_abs_err_ppm"] == 0
 
 
-def test_weighted_sample_k_exact_k_and_determinism(spark):
-    from poc_document_ocr_spark.operators.sampling import weighted_sample_k
-
-    rows = [(i, 1000 if i % 2 == 0 else 1) for i in range(400)]
-    df = spark.createDataFrame(rows, "doc_id long, w_ppm long")
-    out = weighted_sample_k(df, k=50).collect()
-    assert len(out) == 50
-    # 1000:1 weights → the heavy class must dominate the pick
-    heavy = sum(1 for r in out if r["weight"] == 1000)
-    assert heavy >= 45
-    # deterministic under repartitioning
-    again = weighted_sample_k(df.repartition(7), k=50).collect()
-    assert sorted(r["doc_id"] for r in out) == sorted(
-        r["doc_id"] for r in again
-    )
-
-
-def test_weighted_sample_k_excludes_nonpositive(spark):
-    from poc_document_ocr_spark.operators.sampling import weighted_sample_k
-
-    df = spark.createDataFrame(
-        [(1, 0), (2, -5), (3, 10)], "doc_id long, w_ppm long"
-    )
-    out = weighted_sample_k(df, k=10).collect()
-    assert [r["doc_id"] for r in out] == [3]
-
-
 def test_reextract_plan_classifies_and_sizes_work(spark):
     from poc_document_ocr_spark.operators.dedup import reextract_plan
 
@@ -1967,53 +1357,6 @@ def test_fleiss_kappa_negative_and_degenerate(spark):
     assert u["pe_ppm"] == 1_000_000 and u["kappa_ppm"] is None
 
 
-def test_mix_concentration_hand_computed(spark):
-    from poc_document_ocr_spark.operators.sampling import mix_concentration
-
-    df = spark.createDataFrame(
-        [("a", 1), ("b", 1), ("c", 2)], "source string, w long"
-    )
-    (r,) = mix_concentration(df, weight_col="w").collect()
-    assert r["n_groups"] == 3 and r["total_w"] == 4
-    assert r["top1_ppm"] == 500_000
-    # shares 250000,250000,500000 -> hhi = sum(sq) div 1e6
-    assert r["hhi_ppm"] == (
-        250_000**2 + 250_000**2 + 500_000**2
-    ) // 1_000_000
-    # sorted weights 1,1,2: iw = 9 -> (2*9 - 4*4) * 1e6 div 12
-    assert r["gini_ppm"] == 2 * 1_000_000 // 12
-
-
-def test_mix_concentration_uniform_and_count_weight(spark):
-    from poc_document_ocr_spark.operators.sampling import mix_concentration
-
-    rows = [(s,) for s in ["a", "b", "c", "d"] for _ in range(5)]
-    df = spark.createDataFrame(rows, "source string")
-    (r,) = mix_concentration(df).collect()  # weight = row count
-    assert r["n_groups"] == 4 and r["total_w"] == 20
-    assert r["gini_ppm"] == 0
-    assert r["hhi_ppm"] == 250_000
-    assert r["top1_ppm"] == 250_000
-
-
-def test_padding_waste_pad_overflow_and_fill(spark):
-    from poc_document_ocr_spark.operators.sampling import padding_waste
-
-    rows = [
-        ("s", 0, 1, 10),  # exactly at budget
-        ("s", 1, 2, 4), ("s", 1, 3, 3),  # under: pad 3
-        ("s", 2, 4, 13),  # over: overflow 3
-    ]
-    df = spark.createDataFrame(
-        rows, "shard string, pack_id long, doc_id long, n_tokens long"
-    )
-    (r,) = padding_waste(df, budget=10).collect()
-    assert r["n_packs"] == 3 and r["n_docs"] == 4
-    assert r["used_tokens"] == 30 and r["capacity"] == 30
-    assert r["pad_tokens"] == 3 and r["overflow_tokens"] == 3
-    assert r["fill_ppm"] == 27 * 1_000_000 // 30
-
-
 def test_lsh_band_sweep_identical_pair_all_configs(spark):
     from poc_document_ocr_spark.operators.dedup import (
         lsh_band_sweep,
@@ -2069,76 +1412,6 @@ def test_script_mix_flags_blended_words_only(spark):
     assert out[4]["mixed_ppm"] == 1_000_000 // 2
 
 
-def test_epoch_shuffle_reproducible_and_epoch_decorrelated(spark):
-    """Same seed => identical audit; different epochs => different
-    permutation fingerprints; counts conserve the corpus per epoch."""
-    from poc_document_ocr_spark.operators.sampling import (
-        epoch_shuffle_audit,
-    )
-
-    docs = spark.createDataFrame(
-        [(i,) for i in range(200)], "doc_id long"
-    )
-    a = epoch_shuffle_audit(docs, n_epochs=2, seed=7).collect()
-    b = epoch_shuffle_audit(docs, n_epochs=2, seed=7).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-    per_epoch = {}
-    for r in a:
-        per_epoch.setdefault(r["epoch"], []).append(r)
-    assert {e: sum(r["n_docs"] for r in rs) for e, rs in per_epoch.items()} \
-        == {0: 200, 1: 200}
-    # shard membership is epoch-independent, but the order inside a
-    # shard is not: at least one shard's fingerprint must change
-    fp0 = {r["shard"]: r["order_fp"] for r in per_epoch[0]}
-    fp1 = {r["shard"]: r["order_fp"] for r in per_epoch[1]}
-    assert set(fp0) == set(fp1)
-    assert any(fp0[s] != fp1[s] for s in fp0)
-    # and a different seed reshards
-    c = epoch_shuffle_audit(docs, n_epochs=1, seed=8).collect()
-    n7 = {r["shard"]: r["n_docs"] for r in per_epoch[0]}
-    n8 = {r["shard"]: r["n_docs"] for r in c}
-    assert n7 != n8
-
-
-def test_maxlen_sweep_matches_padding_waste_pointwise(spark):
-    """The sweep at a single budget equals padding_waste's global rollup
-    at that budget — same packing, same accounting."""
-    from poc_document_ocr_spark.operators.sampling import (
-        maxlen_sweep,
-        pack_contiguous,
-        padding_waste,
-        shard_assign,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, 7 + (i * 13) % 40) for i in range(300)],
-        "doc_id long, n_tokens long",
-    )
-    sharded = shard_assign(docs, n_shards=4, seed=0)
-    sweep = {
-        r["budget"]: r
-        for r in maxlen_sweep(sharded, budgets=(64, 128)).collect()
-    }
-    for b in (64, 128):
-        packed = pack_contiguous(sharded, budget=b)
-        pw = padding_waste(packed, budget=b).collect()
-        want = {
-            "n_packs": sum(r["n_packs"] for r in pw),
-            "n_docs": sum(r["n_docs"] for r in pw),
-            "used_tokens": sum(r["used_tokens"] for r in pw),
-            "pad_tokens": sum(r["pad_tokens"] for r in pw),
-            "overflow_tokens": sum(r["overflow_tokens"] for r in pw),
-        }
-        got = sweep[b]
-        for k, v in want.items():
-            assert got[k] == v, (b, k, got[k], v)
-        assert got["capacity"] == got["n_packs"] * b
-        # fill ppm: filled = used - overflow (tokens beyond budget are
-        # exactly the ones not counted by least(tok, budget))
-        filled = want["used_tokens"] - want["overflow_tokens"]
-        assert got["fill_ppm"] == filled * 10**6 // got["capacity"]
-
-
 def test_vocab_coverage_exact_counts(spark):
     """Coverage at each V equals the brute-force top-V token share,
     including a V that lands inside a tie class and a V past the
@@ -2171,68 +1444,6 @@ def test_vocab_coverage_exact_counts(spark):
     # exactly one row per requested size — the class-boundary and
     # past-the-end branches must not double-match
     assert sorted(out) == [2, 4, 99]
-
-
-def test_pack_mixing_purity_histogram(spark):
-    """Hand-checked pack purity: sources co-packed within one shard
-    roll up into the right n_sources bucket with exact token shares."""
-    from poc_document_ocr_spark.operators.sampling import pack_mixing
-
-    # single shard, ordered by doc_id; budget 10 cuts packs at
-    # exclusive-prefix-sum 0..9 / 10..19 / ...
-    rows = [
-        (1, 0, "s1", 6),   # pack 0 (before=0)
-        (2, 0, "s1", 3),   # pack 0 (before=6)
-        (3, 0, "s2", 5),   # pack 0 (before=9) -> straddles, starts in 0
-        (4, 0, "s2", 7),   # pack 1 (before=14)
-        (5, 0, "s2", 2),   # pack 2 (before=21)
-    ]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, shard int, source string, n_tokens long"
-    )
-    out = {r["n_sources"]: r for r in pack_mixing(docs, 10).collect()}
-    # pack 0: s1=9, s2=5 -> 2 sources, 14 tokens, top 9
-    # pack 1: s2=7 -> 1 source; pack 2: s2=2 -> 1 source
-    assert out[2]["n_packs"] == 1
-    assert out[2]["pack_tokens"] == 14
-    assert out[2]["top_source_tokens"] == 9
-    assert out[2]["purity_ppm"] == 9 * 10**6 // 14
-    assert out[1]["n_packs"] == 2
-    assert out[1]["pack_tokens"] == 9
-    assert out[1]["top_source_tokens"] == 9
-    assert out[1]["purity_ppm"] == 10**6
-
-
-def test_data_budget_epochs_and_cap(spark):
-    """Hand-checked epochs-to-exhaustion: demand = B·w_ppm div 1e6,
-    epochs_x1000 = 1000·demand div available, cap flag exact."""
-    from poc_document_ocr_spark.operators.sampling import (
-        data_budget,
-        mixture_weights,
-    )
-
-    rows = [
-        ("en", " ".join(["w"] * 90)),   # 90 tokens
-        ("fr", " ".join(["w"] * 10)),   # 10 tokens
-    ]
-    df = spark.createDataFrame(rows, "lang string, text string")
-    w = {r["lang"]: r["w_ppm"] for r in mixture_weights(df).collect()}
-    out = {
-        r["lang"]: r
-        for r in data_budget(
-            df, budget_tokens=200, repeat_cap_x1000=4000
-        ).collect()
-    }
-    for lang, avail in (("en", 90), ("fr", 10)):
-        demand = w[lang] * 200 // 10**6
-        r = out[lang]
-        assert r["demand_tokens"] == demand
-        assert r["epochs_x1000"] == demand * 1000 // avail
-        assert r["over_cap"] == (r["epochs_x1000"] > 4000)
-    # α=0.5 up-samples fr (w≈0.25 vs natural 0.10): the 200-token budget
-    # demands ~5 epochs of fr's 10 tokens but only ~1.7 of en's 90
-    assert out["fr"]["over_cap"] is True
-    assert out["en"]["over_cap"] is False
 
 
 def test_pii_spread_repeat_and_span(spark):
@@ -2509,60 +1720,6 @@ def test_prefix_join_completeness_property(spark):
         assert got == want
 
     prop()
-
-
-def test_pack_order_gain_measures_sorted_fill(spark):
-    """Shortest-first packing fixes the pathological arrival order
-    (big doc first straddles every boundary); gain_ppm is the exact
-    fill delta and existing pack_contiguous defaults are unchanged."""
-    from poc_document_ocr_spark.operators.sampling import (
-        pack_contiguous,
-        pack_order_gain,
-    )
-
-    # one shard; budget 10. arrival (by id): 9,9,2,2,2 ->
-    # packs: [9],[9,2(start in pack1? prefix sums 0,9,18,20,22 ->
-    # pack ids 0,0,1,2,2] -> pack0={9,9}=18 (overflow 8), pack1={2}=2
-    # (pad 8), pack2={2,2}=4 (pad 6)
-    rows = [(0, 1, 9), (0, 2, 9), (0, 3, 2), (0, 4, 2), (0, 5, 2)]
-    df = spark.createDataFrame(rows, "shard int, doc_id long, n_tokens long")
-    out = pack_order_gain(df, budget=10).collect()
-    assert len(out) == 1
-    r = out[0]
-    # arrival: packs (18, 2, 4) -> filled min(.,10) = 10+2+4 = 16/30
-    assert r["fill_arrival_ppm"] == 16 * 10**6 // 30
-    assert r["overflow_arrival"] == 8
-    # sorted (2,2,2,9,9): prefix 0,2,4,6,15 -> packs 0,0,0,0,1 ->
-    # pack0 = 2+2+2+9 = 15 (overflow 5), pack1 = 9 (pad 1)
-    assert r["fill_sorted_ppm"] == 19 * 10**6 // 20
-    assert r["overflow_sorted"] == 5
-    assert r["gain_ppm"] == r["fill_sorted_ppm"] - r["fill_arrival_ppm"]
-    # default order unchanged: pack ids by doc_id
-    packs = {
-        row["doc_id"]: row["pack_id"]
-        for row in pack_contiguous(df, 10).collect()
-    }
-    assert packs == {1: 0, 2: 0, 3: 1, 4: 2, 5: 2}
-
-
-def test_ess_report_kish(spark):
-    """Uniform weights give ESS = n (efficiency 1e6 ppm); one dominant
-    weight collapses ESS toward 1."""
-    from poc_document_ocr_spark.operators.sampling import ess_report
-
-    rows = (
-        [("u", 500_000)] * 4             # uniform -> ESS 4
-        + [("d", 1_000_000)] + [("d", 1)] * 9   # dominated -> ESS ~ 1
-    )
-    df = spark.createDataFrame(rows, "source string, w_ppm long")
-    out = {r["source"]: r for r in ess_report(df).collect()}
-    u = out["u"]
-    assert (u["n_docs"], u["ess_docs"], u["ess_ppm"]) == (4, 4, 1_000_000)
-    d = out["d"]
-    sw = 1_000_000 + 9
-    sww = 1_000_000**2 + 9
-    assert d["ess_docs"] == sw * sw // sww == 1
-    assert d["ess_ppm"] == (sw * sw // sww) * 10**6 // 10
 
 
 def test_reliability_report_ece(spark):
