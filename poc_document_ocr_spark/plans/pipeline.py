@@ -42,6 +42,7 @@ from ..operators.aggregation import consolidate, with_runs
 from ..operators.extraction import extract_turns, salted_repartition
 from ..operators.fields import best_extracted_id, contributions_array
 from ..functions.selection import TurnSelection
+from ..schema import LINEAGE_SCHEMA
 from ..sources.catalog import Catalog, conv_bucket
 
 __all__ = [
@@ -193,7 +194,10 @@ def run_pipeline(
 
     completed: set[int] = set()
     if catalog.exists(cfg.lineage_table):
-        lineage = catalog.read(cfg.lineage_table)
+        # read by the written schema, like the output and extracted tables:
+        # a write killed inside the table's first commit leaves only
+        # ``_temporary/``, no file to infer a schema from
+        lineage = catalog.read(cfg.lineage_table, schema=LINEAGE_SCHEMA)
         completed = {
             r.partition_id
             for r in lineage.filter(
@@ -260,7 +264,8 @@ def run_pipeline(
                 n_records = records.count()
                 if catalog.exists(cfg.output_table):
                     new_records = dedup_against_existing(
-                        records, catalog.read(cfg.output_table)
+                        records,
+                        catalog.read(cfg.output_table, schema=records.schema),
                     )
                 else:
                     new_records = records
@@ -310,8 +315,6 @@ def _commit_lineage(
     error: str | None = None,
 ):
     now = cfg.clock() if callable(cfg.clock) else cfg.clock
-    from ..schema import LINEAGE_SCHEMA
-
     row = [
         (cfg.run_id, k, rows_in, rows_out, rule_hits, wall_ms, status, now,
          error)

@@ -9,6 +9,7 @@
 * duplicate-skip idempotency: full re-run appends nothing new.
 """
 
+import os
 from collections import Counter
 
 import pytest
@@ -167,27 +168,46 @@ class _Crash(Exception):
 
 
 class _CrashAfterFirstWrite:
-    """Catalog proxy that raises right after the first write to ``table``,
-    whichever write primitive made it."""
+    """Catalog proxy that crashes at the first write to ``table``, whichever
+    write primitive made it: ``"after"`` the write commits, or ``"during"``
+    it as a killed driver does. That leaves under the table's path what a
+    killed Spark write leaves (an attempt file under ``_temporary/``, no
+    committed data file), and lands no later write, not even the wave's
+    Failed lineage marker."""
 
-    def __init__(self, inner, table):
-        self.inner, self.table, self.fired = inner, table, False
+    def __init__(self, inner, table, when):
+        self.inner, self.table, self.when = inner, table, when
+        self.fired = False
 
     def __getattr__(self, name):
         return getattr(self.inner, name)
 
-    def _wrote(self, name):
-        if name == self.table and not self.fired:
-            self.fired = True
-            raise _Crash(f"crash after writing {name}")
+    def _write(self, name, write):
+        if self.fired and self.when == "during":
+            raise _Crash(f"killed before writing {name}")
+        if name != self.table or self.fired:
+            return write()
+        self.fired = True
+        if self.when == "after":
+            write()
+        else:
+            attempt = os.path.join(
+                self.inner.path(name), "_temporary", "0", "_temporary",
+                "attempt_0",
+            )
+            os.makedirs(attempt)
+            with open(os.path.join(attempt, "part-00000.snappy.parquet"),
+                      "wb") as f:
+                f.write(b"PAR1")
+        raise _Crash(f"crash {self.when} writing {name}")
 
     def append(self, df, name):
-        self.inner.append(df, name)
-        self._wrote(name)
+        self._write(name, lambda: self.inner.append(df, name))
 
     def overwrite_partitions(self, df, name, part_col):
-        self.inner.overwrite_partitions(df, name, part_col)
-        self._wrote(name)
+        self._write(
+            name, lambda: self.inner.overwrite_partitions(df, name, part_col)
+        )
 
 
 @pytest.fixture(scope="module")
@@ -199,20 +219,28 @@ def two_bucket_output(spark, turns_df, tmp_path_factory):
     return _collect_sorted(cat.read(cfg.output_table).drop("op_run_id"))
 
 
+_CRASH_POINTS = [
+    (table, when)
+    for when in ("after", "during")
+    for table in ("extracted_turns", "consolidated", "lineage")
+]
+
+
 @pytest.mark.parametrize(
-    "table", ["extracted_turns", "consolidated", "lineage"]
+    "table, when", _CRASH_POINTS,
+    ids=[t if w == "after" else f"{t}-{w}" for t, w in _CRASH_POINTS],
 )
 def test_resume_exact_at_every_crash_point(
-    spark, turns_df, data, two_bucket_output, tmp_path, table
+    spark, turns_df, data, two_bucket_output, tmp_path, table, when
 ):
-    """A wave killed right after its first write to any of the three
-    tables, then resumed under the same run_id, leaves every table as an
-    uninterrupted run would: the output equal, each extracted turn once,
+    """A wave killed right after, or inside, its first write to any of the
+    three tables, then resumed under the same run_id, leaves every table as
+    an uninterrupted run would: the output equal, each extracted turn once,
     and one Succeeded lineage row per bucket."""
     cat = Catalog(spark, str(tmp_path))
     cat.write_overwrite(turns_df, "transcripts")
     cfg = PipelineConfig(run_id="run-X", n_buckets=2)
-    crashing = _CrashAfterFirstWrite(cat, table)
+    crashing = _CrashAfterFirstWrite(cat, table, when)
     with pytest.raises(_Crash):
         run_pipeline(spark, crashing, cfg)
     assert crashing.fired
@@ -549,7 +577,7 @@ def test_every_package_module_reachable_from_pipeline_roots():
 
     roots = ("plans.pipeline", "streaming.ingest", "operators.review",
              "sources.datagen", "session")
-    library = ("operators.dedup", "operators.textstats")
+    library = ("operators.textstats",)
     roots += library
     todo = set().union(*(with_parents(f"{name}.{r}") for r in roots))
     seen = set()

@@ -1,4 +1,4 @@
-"""Table tests for the training-data operators: dedup and text analysis.
+"""Table tests for the training-data text-analysis operators (``textstats``).
 
 Mirrors the reference's table-test style (``DateFieldParserTests``): small
 fixed inputs, exact expected outputs.
@@ -14,94 +14,6 @@ from pyspark.sql import functions as F
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-# ---------------------------------------------------------------------------
-# dedup
-# ---------------------------------------------------------------------------
-
-
-def test_exact_dedup_groups(spark):
-    from poc_document_ocr_spark.operators.dedup import exact_dedup_groups
-
-    df = _docs(
-        spark,
-        [(1, "a b c"), (2, "a b c"), (3, "different text"), (9, "a b c")],
-    )
-    out = {
-        r.fingerprint: (r.keeper_id, r.n_copies)
-        for r in exact_dedup_groups(df).collect()
-    }
-    h = hashlib.md5(b"a b c").hexdigest()
-    assert out[h] == (1, 3)
-    assert len(out) == 2
-
-
-def test_word_shingles_exact_set(spark):
-    from poc_document_ocr_spark.operators.dedup import word_shingles
-
-    df = _docs(spark, [(1, "a b c d"), (2, "x y")])
-    got = sorted(
-        (r.doc_id, r.shingle) for r in word_shingles(df, n=3).collect()
-    )
-    # 4 words -> 2 shingles; 2 words -> none
-    assert got == [(1, "a b c"), (1, "b c d")]
-
-
-def test_shingles_distinct(spark):
-    from poc_document_ocr_spark.operators.dedup import word_shingles
-
-    df = _docs(spark, [(1, "a b a b a b")])
-    got = {r.shingle for r in word_shingles(df, n=3).collect()}
-    assert got == {"a b a", "b a b"}
-
-
-def test_minhash_identical_docs_identical_sigs(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        minhash_signatures,
-        word_shingles,
-    )
-
-    df = _docs(spark, [(1, "w1 w2 w3 w4 w5"), (2, "w1 w2 w3 w4 w5")])
-    sigs = minhash_signatures(word_shingles(df))
-    rows = sigs.collect()
-    s1 = sorted((r.k, r.h) for r in rows if r.doc_id == 1)
-    s2 = sorted((r.k, r.h) for r in rows if r.doc_id == 2)
-    assert s1 == s2 and len(s1) == 8
-
-
-def test_lsh_pairs_identical_docs(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        word_shingles,
-    )
-
-    df = _docs(
-        spark,
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "alpha beta gamma delta epsilon zeta"),
-            (3, "totally unrelated content words here now"),
-        ],
-    )
-    pairs = lsh_candidate_pairs(minhash_signatures(word_shingles(df)))
-    got = sorted((r.id_a, r.id_b) for r in pairs.collect())
-    assert got == [(1, 2)]
-
-
-def test_ngram_jaccard_exact_value(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        ngram_jaccard,
-        word_shingles,
-    )
-
-    # doc1: shingles {a b c, b c d}; doc2: {a b c, b c e}
-    df = _docs(spark, [(1, "a b c d"), (2, "a b c e")])
-    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    r = ngram_jaccard(word_shingles(df), pairs).collect()[0]
-    assert (r.inter, r.union_n) == (1, 3)
-    assert r.jaccard == pytest.approx(1 / 3)
 
 
 # ---------------------------------------------------------------------------
@@ -144,82 +56,8 @@ def test_fingerprint_normalizes_case_and_space(spark):
 
 
 # ---------------------------------------------------------------------------
-# near-duplicate hashing and quality
+# fingerprints and quality
 # ---------------------------------------------------------------------------
-
-
-def test_simhash_identical_docs_zero_hamming(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        simhash64,
-        simhash_near_pairs,
-    )
-
-    df = _docs(
-        spark,
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta"),
-            (2, "alpha beta gamma delta epsilon zeta eta theta"),
-            (3, "utterly different words compose this other document body"),
-        ],
-    )
-    fps = simhash64(df)
-    vals = {r.doc_id: r.simhash for r in fps.collect()}
-    assert vals[1] == vals[2] and len(vals[1]) == 16
-    assert vals[1] != vals[3]
-    pairs = simhash_near_pairs(fps, max_hamming=7).collect()
-    assert [(r.id_a, r.id_b, r.hamming) for r in pairs] == [(1, 2, 0)]
-
-
-def test_simhash_near_dup_low_hamming(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        simhash64,
-        simhash_hamming,
-    )
-
-    base = " ".join(f"w{i}" for i in range(40))
-    near = base + " extra"
-    df = _docs(spark, [(1, base), (2, near)])
-    fps = simhash64(df)
-    a = fps.filter(F.col("doc_id") == 1).select(
-        F.col("simhash").alias("sh_a")
-    )
-    b = fps.filter(F.col("doc_id") == 2).select(
-        F.col("simhash").alias("sh_b")
-    )
-    d = (
-        a.crossJoin(b)
-        .select(
-            simhash_hamming(F.col("sh_a"), F.col("sh_b")).alias("d")
-        )
-        .collect()[0]
-        .d
-    )
-    # one word added to 40 → only a handful of bit flips
-    assert 0 < d <= 12, d
-
-
-def test_minhash_scale_profile_band_separation(spark):
-    """At SCALE_PROFILE (128 hashes, 16 bands × 8 rows) a true near-dup
-    pair must share a band; a low-Jaccard pair must not."""
-    from poc_document_ocr_spark.operators.dedup import (
-        SCALE_PROFILE,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        word_shingles,
-    )
-
-    base = " ".join(f"tok{i}" for i in range(60))
-    near = " ".join(f"tok{i}" for i in range(59)) + " tokX"  # J ≈ 0.93
-    far = " ".join(f"other{i}" for i in range(30)) + " tok1 tok2 tok3"
-    df = _docs(spark, [(1, base), (2, near), (3, far)])
-    sigs = minhash_signatures(
-        word_shingles(df), num_hashes=SCALE_PROFILE["num_hashes"]
-    )
-    pairs = lsh_candidate_pairs(
-        sigs, rows_per_band=SCALE_PROFILE["rows_per_band"]
-    )
-    got = sorted((r.id_a, r.id_b) for r in pairs.collect())
-    assert got == [(1, 2)]
 
 
 def test_quality_score_rules(spark):
@@ -268,44 +106,8 @@ def test_winnow_fingerprints_properties(spark):
 
 
 # ---------------------------------------------------------------------------
-# connected components / repetition / tf-idf (round 3)
+# repetition / tf-idf (round 3)
 # ---------------------------------------------------------------------------
-
-
-def test_connected_components_chain_and_islands(spark):
-    from poc_document_ocr_spark.operators.dedup import connected_components
-
-    # a 4-chain (needs label propagation across hops), a 2-island, and a
-    # triangle sharing a vertex with a pair (merge through the shared vertex)
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (22, 20),
-         (22, 30)],
-        "id_a long, id_b long",
-    )
-    got = {
-        r.node: r.component for r in connected_components(pairs).collect()
-    }
-    assert got == {
-        1: 1, 2: 1, 3: 1, 4: 1,
-        10: 10, 11: 10,
-        20: 20, 21: 20, 22: 20, 30: 20,
-    }
-
-
-def test_connected_components_converges_on_long_chain(spark):
-    from poc_document_ocr_spark.operators.dedup import connected_components
-
-    # pointer doubling: a 16-vertex chain needs ~log2(16) rounds, not 16 —
-    # cap max_iters well below the chain length to prove the compression hop
-    n = 16
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "id_a long, id_b long"
-    )
-    got = {
-        r.node: r.component
-        for r in connected_components(pairs, max_iters=8).collect()
-    }
-    assert got == {i: 0 for i in range(n + 1)}
 
 
 def test_repetition_stats_exact_counts(spark):
@@ -419,63 +221,6 @@ def test_corpus_composition_rollup_levels(spark):
     assert len(rows) == 6
 
 
-def test_duplicate_ngram_spans_merging(spark):
-    from poc_document_ocr_spark.operators.dedup import duplicate_ngram_spans
-
-    shared = " ".join(f"s{i}" for i in range(6))       # 6 shared words
-    df = _docs(spark, [
-        (1, f"u1 u2 {shared} u3 u4"),                  # shared at pos 3..8
-        (2, f"{shared} v1 v2 v3"),                     # shared at pos 1..6
-        (3, "w1 w2 w3 w4 w5 w6 w7 w8"),                # unique: no spans
-    ])
-    got = duplicate_ngram_spans(df, n=4).collect()
-    spans = {r.doc_id: (r.span_start, r.span_end, r.n_grams) for r in got}
-    # doc 1: grams at positions 3,4,5 (each 4 words) merge into 3..8
-    assert spans[1] == (3, 8, 3)
-    assert spans[2] == (1, 6, 3)
-    assert 3 not in spans
-    for r in got:
-        assert r.span_words == r.span_end - r.span_start + 1
-
-
-def test_duplicate_ngram_spans_ignores_intra_doc_repeats(spark):
-    from poc_document_ocr_spark.operators.dedup import duplicate_ngram_spans
-
-    # the repeated phrase lives in ONE document only -> not cross-doc dup
-    df = _docs(spark, [
-        (1, "a b c d x a b c d"),
-        (2, "e f g h i j k l"),
-    ])
-    assert duplicate_ngram_spans(df, n=4).count() == 0
-
-
-def test_decontaminate_flags_overlap(spark):
-    from poc_document_ocr_spark.operators.dedup import decontaminate
-
-    leak = "q1 q2 q3 q4 q5 q6 q7 q8"                   # exactly one 8-gram
-    corpus = _docs(spark, [
-        (1, f"pre {leak} post"),                       # contains the 8-gram
-        (2, "c1 c2 c3 c4 c5 c6 c7 c8 c9"),             # clean
-        (3, "tiny doc"),                               # < n words: clean
-    ])
-    bench = _docs(spark, [(100, leak)])
-    got = {r.doc_id: r for r in decontaminate(corpus, bench, n=8).collect()}
-    assert got[1].contaminated and got[1].n_overlap == 1
-    assert got[1].n_grams == 3                          # 10 words -> 3 grams
-    assert not got[2].contaminated and got[2].n_overlap == 0
-    assert not got[3].contaminated and got[3].n_grams == 0
-
-
-def test_connected_components_raises_when_unconverged(spark):
-    from poc_document_ocr_spark.operators.dedup import connected_components
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(64)], "id_a long, id_b long"
-    )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(pairs, max_iters=1)
-
-
 def test_bpe_token_count_vs_whitespace(spark):
     from poc_document_ocr_spark.operators.textstats import bpe_token_count
 
@@ -492,48 +237,6 @@ def test_bpe_token_count_vs_whitespace(spark):
     assert got[2].n_bpe_tokens == 8
     assert got[2].tokens_per_100_words == 400
     assert got[3].n_bpe_tokens == 0 and got[3].tokens_per_100_words is None
-
-
-def test_segment_dedup_keeps_first_occurrence(spark):
-    from poc_document_ocr_spark.operators.dedup import segment_dedup
-
-    # doc 1 and doc 2 share their first 4-word segment; doc 2's second
-    # segment is unique; doc 3 repeats doc 1's segment twice internally
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d"),
-            (2, "a b c d x y z w"),
-            (3, "a b c d a b c d"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in segment_dedup(df, n=4).collect()
-    }
-    # doc 1 owns the global first occurrence of 'a b c d'
-    assert out[1]["clean_text"] == "a b c d"
-    assert (out[1]["n_segments"], out[1]["n_kept"], out[1]["n_dropped"]) == (
-        1, 1, 0,
-    )
-    # doc 2 loses the shared segment, keeps its unique one
-    assert out[2]["clean_text"] == "x y z w"
-    assert out[2]["n_dropped"] == 1
-    # doc 3 loses BOTH copies (first occurrence lives in doc 1)
-    assert out[3]["clean_text"] == ""
-    assert (out[3]["n_segments"], out[3]["n_kept"]) == (2, 0)
-
-
-def test_segment_dedup_partial_tail_segment(spark):
-    from poc_document_ocr_spark.operators.dedup import segment_dedup
-
-    df = spark.createDataFrame(
-        [(1, "a b c d e")], "doc_id long, text string"
-    )
-    row = segment_dedup(df, n=4).collect()[0]
-    # 5 words → one full segment + a 1-word remainder segment
-    assert row["n_segments"] == 2
-    assert row["clean_text"] == "a b c d e"
 
 
 def test_lm_quality_bands_orders_rare_tokens_to_tail(spark):
@@ -657,30 +360,6 @@ def test_bigram_familiarity_conditional_ppm(spark):
     assert r2[6]["familiarity_ppm"] > r2[5]["familiarity_ppm"]
 
 
-def test_canonical_docs_keep_best_policy(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        canonical_docs,
-        connected_components,
-    )
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "id_a long, id_b long"
-    )
-    comp = connected_components(pairs)
-    docs = spark.createDataFrame(
-        # cluster {1,2,3}: scores 5,9,9 → canon 2 (max score, tie min id);
-        # doc 7 never appears in pairs → singleton keeps itself
-        [(1, 5), (2, 9), (3, 9), (7, 4)],
-        "doc_id long, score long",
-    )
-    rows = {r["doc_id"]: r for r in canonical_docs(docs, comp).collect()}
-    assert all(rows[i]["canon_id"] == 2 for i in (1, 2, 3))
-    assert all(rows[i]["cluster_size"] == 3 for i in (1, 2, 3))
-    assert rows[2]["is_canon"] and not rows[1]["is_canon"]
-    assert rows[7]["canon_id"] == 7 and rows[7]["is_canon"]
-    assert rows[7]["cluster_size"] == 1
-
-
 def test_bigram_familiarity_top_w2_pruning(spark):
     from poc_document_ocr_spark.operators.textstats import (
         bigram_familiarity,
@@ -698,40 +377,6 @@ def test_bigram_familiarity_top_w2_pruning(spark):
     }
     assert rows[1]["familiarity_ppm"] == 1_000_000
     assert 3 not in rows  # its only transition was pruned away
-
-
-def test_lsh_incremental_pairs_cross_batch_only(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        lsh_incremental_pairs,
-        minhash_signatures,
-        word_shingles,
-    )
-
-    existing = _docs(
-        spark,
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "totally different old content here now"),
-        ],
-    )
-    new = _docs(
-        spark,
-        [
-            (10, "alpha beta gamma delta epsilon zeta"),   # dup of 1
-            (11, "totally different old content here now"),  # dup of 2
-            (12, "brand new unique words never seen before"),
-        ],
-    )
-    got = sorted(
-        (r["existing_id"], r["new_id"])
-        for r in lsh_incremental_pairs(
-            minhash_signatures(word_shingles(existing)),
-            minhash_signatures(word_shingles(new)),
-        ).collect()
-    )
-    # cross-batch dups found; 10↔11 (new↔new, not dups anyway) and the
-    # unique doc 12 produce nothing
-    assert got == [(1, 10), (2, 11)]
 
 
 def test_heaps_law_cumulatives_and_totals(spark):
@@ -787,31 +432,8 @@ def test_normalize_text_controls_whitespace_trim(spark):
     assert out[4]["n_removed"] == 0
 
 
-def test_dedup_weights_inverse_cluster_size(spark):
-    from poc_document_ocr_spark.operators.dedup import dedup_weights
-
-    rows = [(1, "same"), (2, "same"), (3, "same"), (4, "unique")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in dedup_weights(df).collect()}
-    assert len(out) == 4  # every row kept
-    assert out[1]["weight_ppm"] == 333333 and out[1]["n_copies"] == 3
-    assert out[4]["weight_ppm"] == 1000000 and out[4]["n_copies"] == 1
-
-
-def test_dedup_weights_keeps_null_text_rows(spark):
-    from poc_document_ocr_spark.operators.dedup import dedup_weights
-
-    rows = [(1, "x"), (2, None), (3, None), (4, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = {r["doc_id"]: r for r in dedup_weights(df).collect()}
-    assert len(out) == 4  # NULL-text rows are kept
-    # NULL hashes as '' -> docs 2,3,4 form one cluster of 3
-    assert out[2]["n_copies"] == 3 and out[4]["n_copies"] == 3
-    assert out[1]["weight_ppm"] == 1000000
-
-
 # ---------------------------------------------------------------------------
-# more text-statistics and dedup ops: refusal, novelty, templates
+# more text statistics: refusal, screens, collocations, calibration
 # ---------------------------------------------------------------------------
 
 
@@ -832,62 +454,6 @@ def test_refusal_stats_patterns_and_ppm(spark):
     assert out["g1"]["n_rows"] == 4 and out["g1"]["n_refusals"] == 2
     assert out["g1"]["refusal_ppm"] == 500_000
     assert out["g2"]["n_refusals"] == 0 and out["g2"]["refusal_ppm"] == 0
-
-
-def test_ngram_novelty_distinct_grams_and_short_docs(spark):
-    from poc_document_ocr_spark.operators.dedup import ngram_novelty
-
-    df = _docs(
-        spark,
-        [
-            (10, "a b c d"),          # reference: grams {abc, bcd}
-            (1, "a b c x"),           # abc seen, bcx new -> 500000
-            (2, "a b c a b c"),       # distinct grams: abc, bca, cab
-            (3, "too short"),         # <3 words -> absent
-        ],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in ngram_novelty(df, F.col("doc_id") == 10).collect()
-    }
-    assert set(out) == {1, 2}
-    assert out[1]["n_grams"] == 2 and out[1]["n_unseen"] == 1
-    assert out[1]["novelty_ppm"] == 500_000
-    # doc 2: 4 positional grams but 3 DISTINCT; only 'a b c' is seen
-    assert out[2]["n_grams"] == 3 and out[2]["n_unseen"] == 2
-
-
-def test_template_segments_support_thresholds(spark):
-    """Hand-built clusters: a 3-doc cluster whose universal segment
-    (support 3/3) and 2/3-majority segment are kept while a 1/3 segment
-    is dropped, and a singleton doc that is excluded entirely."""
-    from poc_document_ocr_spark.operators.dedup import template_segments
-
-    t_all = "a b c d e f g h"          # in every cluster member
-    t_maj = "i j k l m n o p"          # in 2 of 3
-    t_one = "q r s t u v w x"          # in 1 of 3
-    docs = spark.createDataFrame(
-        [
-            (1, f"{t_all} {t_maj}"),
-            (2, f"{t_all} {t_maj}"),
-            (3, f"{t_all} {t_one}"),
-            (9, t_all),                # singleton cluster — excluded
-        ],
-        "doc_id long, text string",
-    )
-    comps = spark.createDataFrame(
-        [(1, 1), (2, 1), (3, 1), (9, 9)], "doc_id long, component long"
-    )
-    out = {
-        (r["component"], r["segment"]): r
-        for r in template_segments(docs, comps, n=8, tau_ppm=600_000).collect()
-    }
-    assert set(out) == {(1, t_all), (1, t_maj)}
-    assert out[(1, t_all)]["n_docs"] == 3
-    assert out[(1, t_all)]["support_ppm"] == 1_000_000
-    assert out[(1, t_maj)]["n_docs"] == 2
-    assert out[(1, t_maj)]["cluster_size"] == 3
-    assert out[(1, t_maj)]["support_ppm"] == 666_666
 
 
 def test_rule_overlap_pairs_and_dead_rules(spark):
@@ -1079,24 +645,6 @@ def test_source_boilerplate_share(spark):
         assert rows[s]["dup_share_ppm"] == 500_000
 
 
-def test_snapshot_diff_classifies_all_states(spark):
-    from poc_document_ocr_spark.operators.dedup import snapshot_diff
-
-    a = spark.createDataFrame(
-        [(1, "s", "alpha"), (2, "s", "beta"), (3, "s", "gamma")],
-        "doc_id long, source string, text string",
-    )
-    b = spark.createDataFrame(
-        # 1 unchanged, 2 changed, 3 removed, 4 added
-        [(1, "s", "alpha"), (2, "s", "beta2"), (4, "s", "delta")],
-        "doc_id long, source string, text string",
-    )
-    (r,) = snapshot_diff(a, b).collect()
-    assert r["n_added"] == 1 and r["n_removed"] == 1
-    assert r["n_changed"] == 1 and r["n_same"] == 1
-    assert r["churn_ppm"] == 750_000
-
-
 def test_number_support_flags_introduced_numbers(spark):
     from poc_document_ocr_spark.operators.textstats import number_support
 
@@ -1119,53 +667,6 @@ def test_number_support_flags_introduced_numbers(spark):
     assert out["c1"]["unsupported_ppm"] == 1_000_000 // 3
 
 
-def test_source_pair_matrix_cells_and_shares(spark):
-    from poc_document_ocr_spark.operators.dedup import source_pair_matrix
-
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3)], "id_a long, id_b long"
-    )
-    srcs = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b")], "doc_id long, source string"
-    )
-    rows = {
-        (r["source_a"], r["source_b"]): r
-        for r in source_pair_matrix(pairs, srcs).collect()
-    }
-    # (1,2) is within-source a; (1,3) and (2,3) cross a<->b — and the
-    # unordered normalization folds both orientations into one cell
-    assert rows[("a", "a")]["n_pairs"] == 1
-    assert rows[("a", "b")]["n_pairs"] == 2
-    assert rows[("a", "a")]["share_ppm"] == 1_000_000 // 3
-    assert rows[("a", "b")]["share_ppm"] == 2_000_000 // 3
-
-
-def test_dedup_survivorship_bias_signs(spark):
-    from poc_document_ocr_spark.operators.dedup import dedup_survivorship
-
-    srcs = spark.createDataFrame(
-        [(1, "a"), (2, "a"), (3, "b"), (4, "b"), (5, "b")],
-        "doc_id long, source string",
-    )
-    canon = spark.createDataFrame(
-        [(1, True), (2, False), (3, True), (4, True), (5, False)],
-        "doc_id long, is_canon boolean",
-    )
-    out = {
-        r["source"]: r for r in dedup_survivorship(srcs, canon).collect()
-    }
-    a, b = out["a"], out["b"]
-    assert (a["n_docs"], a["n_kept"]) == (2, 1)
-    assert (b["n_docs"], b["n_kept"]) == (3, 2)
-    assert a["drop_ppm"] == 500_000 and b["drop_ppm"] == 333_333
-    # a's kept share (1/3) trails its corpus share (2/5) → negative bias;
-    # b gains exactly what a loses on the ppm grid (modulo div rounding)
-    assert a["corpus_share_ppm"] == 400_000
-    assert a["kept_share_ppm"] == 333_333
-    assert a["bias_ppm"] == -66_667
-    assert b["bias_ppm"] == 666_666 - 600_000
-
-
 def test_encoding_screen_counts_each_family(spark):
     from poc_document_ocr_spark.operators.textstats import encoding_screen
 
@@ -1184,70 +685,6 @@ def test_encoding_screen_counts_each_family(spark):
     assert out[3]["n_ctrl"] == 2 and out[3]["n_replacement"] == 0
     # one U+00C3 lead + one bare U+00E2 marker
     assert out[4]["n_mojibake"] == 2 and not out[4]["clean"]
-
-
-def test_novelty_curve_first_seen_shares(spark):
-    from poc_document_ocr_spark.operators.dedup import novelty_curve
-
-    rows = [
-        (1, "a", 0), (2, "b", 0),          # day 0: both new
-        (3, "a", 1), (4, "c", 1), (5, "c", 1),  # day 1: a re-fetch, c new
-        (6, "a", 2),                        # day 2: nothing new
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, day long")
-    out = {r["day"]: r for r in novelty_curve(df).collect()}
-    assert out[0]["n_fp"] == 2 and out[0]["novelty_ppm"] == 1_000_000
-    assert out[1]["n_docs"] == 3 and out[1]["n_fp"] == 2
-    assert out[1]["n_new_fp"] == 1 and out[1]["novelty_ppm"] == 500_000
-    assert out[2]["novelty_ppm"] == 0
-
-
-def test_lsh_calibration_exact_on_identical_pair(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        lsh_calibration,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        word_shingles,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "w0 w1 w2 w3 w4 w5 w6 w7"),
-         (2, "w0 w1 w2 w3 w4 w5 w6 w7"),
-         (3, "x0 x1 x2 x3 x4 x5 x6 x7")],
-        "doc_id long, text string",
-    )
-    sh = word_shingles(docs)
-    sigs = minhash_signatures(sh)
-    pairs = lsh_candidate_pairs(sigs)
-    out = lsh_calibration(sh, sigs, pairs).collect()
-    # only the identical pair (1,2) is a candidate: 8/8 matches, exact
-    # jaccard 1.0, zero estimator error
-    assert len(out) == 1
-    (r,) = out
-    assert r["matches"] == 8 and r["n_pairs"] == 1
-    assert r["est_ppm"] == 1_000_000
-    assert r["mean_exact_ppm"] == 1_000_000
-    assert r["mean_abs_err_ppm"] == 0
-
-
-def test_reextract_plan_classifies_and_sizes_work(spark):
-    from poc_document_ocr_spark.operators.dedup import reextract_plan
-
-    prev = spark.createDataFrame(
-        [(1, "s", "alpha"), (2, "s", "beta"), (3, "s", "gamma")],
-        "doc_id long, source string, text string",
-    )
-    curr = spark.createDataFrame(
-        # 1 unchanged (skip), 2 changed, 3 removed (tombstone), 4 added
-        [(1, "s", "alpha"), (2, "s", "beta22"), (4, "s", "dd")],
-        "doc_id long, source string, text string",
-    )
-    (r,) = reextract_plan(prev, curr).collect()
-    assert r["n_docs"] == 3 and r["n_reextract"] == 2
-    assert r["n_skip"] == 1 and r["n_tombstone"] == 1
-    # work = chars of changed doc 2 ('beta22'=6) + added doc 4 ('dd'=2)
-    assert r["work_chars"] == 8
-    assert r["saved_ppm"] == 333_333
 
 
 def test_screen_confusion_exact_metrics_and_null_denominators(spark):
@@ -1357,38 +794,6 @@ def test_fleiss_kappa_negative_and_degenerate(spark):
     assert u["pe_ppm"] == 1_000_000 and u["kappa_ppm"] is None
 
 
-def test_lsh_band_sweep_identical_pair_all_configs(spark):
-    from poc_document_ocr_spark.operators.dedup import (
-        lsh_band_sweep,
-        minhash_signatures,
-        word_shingles,
-    )
-    import pytest
-
-    text = "the quick brown fox jumps over the lazy dog tonight"
-    docs = spark.createDataFrame(
-        [(1, text), (2, text), (3, "completely different words here now")],
-        "doc_id long, text string",
-    )
-    sigs = minhash_signatures(word_shingles(docs), num_hashes=16)
-    rows = {
-        r["rows_per_band"]: r
-        for r in lsh_band_sweep(
-            sigs, num_hashes=16, rows_per_band_configs=(2, 4, 8)
-        ).collect()
-    }
-    assert set(rows) == {2, 4, 8}
-    for rpb, r in rows.items():
-        assert r["n_bands"] == 16 // rpb
-        # the identical pair matches every band at every config
-        assert r["n_pairs"] >= 1
-        assert r["n_strong"] >= 1  # est = 1e6 for the identical pair
-    # the wider the band, the (weakly) fewer candidates
-    assert rows[2]["n_pairs"] >= rows[8]["n_pairs"]
-    with pytest.raises(ValueError):
-        lsh_band_sweep(sigs, num_hashes=16, rows_per_band_configs=(3,))
-
-
 def test_script_mix_flags_blended_words_only(spark):
     """Blending scripts WITHIN a word flags; alternating scripts BETWEEN
     words (legit code-switching) stays clean."""
@@ -1472,40 +877,6 @@ def test_pii_spread_repeat_and_span(spark):
     assert out["c1"]["n_hits"] == 2       # within-turn repeat counted
     assert out["c1"]["n_repeated"] == 0   # ...but it's still one turn
     assert out["c1"]["max_spread"] == 0
-
-
-def test_edit_distance_verify_hand_checked(spark):
-    """Levenshtein + sim_ppm on hand-computed pairs, including the
-    len-gap lower bound and the empty-string edge."""
-    from poc_document_ocr_spark.operators.dedup import edit_distance_verify
-
-    docs = spark.createDataFrame(
-        [
-            (1, "kitten"),
-            (2, "sitting"),
-            (3, "kitten"),
-            (4, ""),
-            (5, ""),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (4, 5), (1, 4)], "id_a long, id_b long"
-    )
-    out = {
-        (r["id_a"], r["id_b"]): r
-        for r in edit_distance_verify(docs, pairs).collect()
-    }
-    r = out[(1, 2)]
-    assert (r["lev_dist"], r["len_gap"]) == (3, 1)
-    assert r["sim_ppm"] == (7 - 3) * 10**6 // 7
-    assert r["lev_dist"] >= r["len_gap"]   # DP-free lower bound holds
-    r = out[(1, 3)]
-    assert (r["lev_dist"], r["sim_ppm"]) == (0, 10**6)
-    r = out[(4, 5)]                         # both empty: identical
-    assert (r["lev_dist"], r["sim_ppm"]) == (0, 10**6)
-    r = out[(1, 4)]                         # vs empty: all deletions
-    assert (r["lev_dist"], r["sim_ppm"]) == (6, 0)
 
 
 def test_calibrate_scores_mapping(spark):
@@ -1650,78 +1021,6 @@ def test_length_token_fit_perfect_line(spark):
     assert 0 <= r["r2_ppm"] < 1000000
 
 
-def test_prefix_join_exact_and_complete(spark):
-    """Known Jaccard values at t=0.6: a pair exactly AT threshold is
-    kept, below-threshold and disjoint pairs are not; jac_ppm exact."""
-    from poc_document_ocr_spark.operators.dedup import (
-        prefix_similarity_join,
-    )
-
-    sets = {
-        1: ["a", "b", "c", "d", "e"],
-        2: ["a", "b", "c", "d", "f"],   # J(1,2)=4/6=0.667 -> kept
-        3: ["x", "y", "z"],             # disjoint
-        4: ["a", "b"],                  # J(1,4)=2/5=0.4 -> dropped
-        5: ["a", "b", "c"],
-        6: ["a", "b", "c", "g", "h"],   # J(5,6)=3/5=0.6 exactly -> kept
-    }
-    rows = [(i, s) for i, ss in sets.items() for s in ss]
-    sh = spark.createDataFrame(rows, "doc_id long, shingle string")
-    out = {
-        (r["id_a"], r["id_b"]): r
-        for r in prefix_similarity_join(sh, t_ppm=600_000).collect()
-    }
-    # brute-force ground truth at t=0.6
-    import itertools
-
-    expect = {}
-    for i, j in itertools.combinations(sorted(sets), 2):
-        a, b = set(sets[i]), set(sets[j])
-        inter, union = len(a & b), len(a | b)
-        if inter * 1_000_000 >= 600_000 * union:
-            expect[(i, j)] = (inter, union)
-    assert sorted(out) == sorted(expect)
-    assert (out[(1, 2)]["inter"], out[(1, 2)]["union_n"]) == (4, 6)
-    assert out[(1, 2)]["jac_ppm"] == 4 * 1_000_000 // 6
-    assert out[(5, 6)]["jac_ppm"] == 600_000
-
-
-def test_prefix_join_completeness_property(spark):
-    """Property over randomized set families: the prefix-filtered join
-    returns EXACTLY the brute-force qualifying pairs (no misses — the
-    prefix-filter completeness theorem — and no extras)."""
-    import itertools
-
-    from hypothesis import given, settings, strategies as st
-
-    from poc_document_ocr_spark.operators.dedup import (
-        prefix_similarity_join,
-    )
-
-    @settings(max_examples=6, deadline=None)
-    @given(
-        st.lists(
-            st.sets(st.sampled_from("abcdefghij"), min_size=1, max_size=8),
-            min_size=2, max_size=8,
-        )
-    )
-    def prop(families):
-        rows = [(i, s) for i, ss in enumerate(families) for s in ss]
-        sh = spark.createDataFrame(rows, "doc_id long, shingle string")
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in prefix_similarity_join(sh, t_ppm=500_000).collect()
-        }
-        want = set()
-        for i, j in itertools.combinations(range(len(families)), 2):
-            a, b = families[i], families[j]
-            if len(a & b) * 1_000_000 >= 500_000 * len(a | b):
-                want.add((i, j))
-        assert got == want
-
-    prop()
-
-
 def test_reliability_report_ece(spark):
     """Perfectly calibrated bin has gap 0; anti-calibrated bin carries
     the gap; ECE is the n-weighted mean."""
@@ -1745,38 +1044,3 @@ def test_reliability_report_ece(spark):
     assert b2["ece_ppm"] == b9["ece_ppm"] == 4 * 950_000 // 8
 
 
-def test_similarity_curve_cumulative(spark):
-    """Bucketing and from-above cumulative counts are exact."""
-    from poc_document_ocr_spark.operators.dedup import similarity_curve
-
-    pairs = spark.createDataFrame(
-        [(1, 2, 999_999), (1, 3, 950_000), (2, 3, 830_000),
-         (4, 5, 610_000), (6, 7, 600_000)],
-        "id_a long, id_b long, jac_ppm long",
-    )
-    out = {r["bucket_lo_ppm"]: r for r in similarity_curve(pairs).collect()}
-    assert sorted(out) == [600_000, 800_000, 900_000]
-    assert out[900_000]["n_pairs"] == 2
-    assert out[900_000]["n_at_or_above"] == 2
-    assert out[800_000]["n_at_or_above"] == 3
-    assert out[600_000]["n_pairs"] == 2
-    assert out[600_000]["n_at_or_above"] == 5
-
-
-def test_prefix_join_candidate_guard(spark):
-    """max_candidates aborts before verification when the duplicate
-    structure makes the exact pair set blow up."""
-    import pytest
-
-    from poc_document_ocr_spark.operators.dedup import (
-        prefix_similarity_join,
-    )
-
-    # 10 identical sets -> 45 true pairs, every prefix token shared
-    rows = [(i, s) for i in range(10) for s in ("a", "b", "c")]
-    sh = spark.createDataFrame(rows, "doc_id long, shingle string")
-    with pytest.raises(ValueError, match="max_candidates"):
-        prefix_similarity_join(sh, t_ppm=600_000, max_candidates=10)
-    # generous cap passes through and returns all 45 exact pairs
-    out = prefix_similarity_join(sh, t_ppm=600_000, max_candidates=100)
-    assert out.count() == 45
