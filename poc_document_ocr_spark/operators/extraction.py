@@ -36,33 +36,8 @@ from ..schema import EXTRACTION_TYPE
 __all__ = [
     "extract_turns",
     "extract_turns_arrow",
-    "salted_repartition",
     "span_lint",
 ]
-
-
-def salted_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Salted-hash repartition on (conv_id, turn_idx) ahead of extraction.
-
-    A SKEW/packing remedy, not a default: it inserts a full shuffle of the
-    corpus before the map stage, and measured at 4 separate executor JVMs
-    that shuffle DOUBLED extraction time (24.5s vs 12.3s at sf0.1) — in
-    multi-process topologies shuffle blocks cross process/disk boundaries.
-    The default extraction path instead runs under the scan's own
-    partitioning and gets its parallelism from input splits
-    (``spark.sql.files.maxPartitionBytes`` vs file sizes). Reach for the
-    salt only when the layout defeats that: pathological file-packing
-    (thousands of tiny files → a handful of splits) or an input where one
-    split holds a disproportionate share of the *bytes-per-turn* cost.
-    Extraction is turn-local, so the salt may include ``turn_idx`` — a
-    million-turn conversation spreads across all partitions.
-    Default width: 4× the cluster's default parallelism.
-    """
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 4
-    return df.repartition(
-        num_partitions, F.xxhash64(F.col("conv_id"), F.col("turn_idx"))
-    )
 
 
 def _spans_array(spans: list) -> pa.ListArray:

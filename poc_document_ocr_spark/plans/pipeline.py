@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregation import consolidate, with_runs
-from ..operators.extraction import extract_turns, salted_repartition
+from ..operators.extraction import extract_turns
 from ..operators.fields import best_extracted_id, contributions_array
 from ..functions.selection import TurnSelection
 from ..schema import LINEAGE_SCHEMA
@@ -65,10 +65,6 @@ class PipelineConfig:
     run_id: str = "run-0"
     turn_range: str | None = None
     n_buckets: int = 8
-    #: opt-in pre-extraction salted shuffle — only for skewed/badly-packed
-    #: inputs (see operators.extraction.salted_repartition); the default path
-    #: takes its parallelism from input splits, shuffle-free
-    salt_extraction: bool = False
     #: injectable clock (driver-side only; executors never see wall time)
     clock: object = field(default=lambda: datetime.now(timezone.utc))
     #: cancel sentinel, polled between bucket waves (reference: the
@@ -86,7 +82,6 @@ class PipelineConfig:
 def extract_stage(
     turns: DataFrame,
     turn_range: str | None = None,
-    salt: bool = False,
     extract_fn=None,
 ) -> DataFrame:
     """Selection filter (pushed before the Python barrier) + extraction.
@@ -96,17 +91,13 @@ def extract_stage(
     turns never reach the expensive stage (reference FR-009 dispose-before-OCR,
     ``PdfProcessorFunction.cs:311-318``; SC-003 ≥80% cost cut).
 
-    Shuffle-free by default: extraction is turn-local and runs under the
-    scan's partitioning (size input splits via
-    ``spark.sql.files.maxPartitionBytes``). ``salt=True`` inserts the
-    salted repartition for skewed or badly-packed inputs — a measured 2×
-    cost on multi-process topologies, so it is opt-in.
+    Shuffle-free: extraction is turn-local and runs under the scan's
+    partitioning (size input splits via
+    ``spark.sql.files.maxPartitionBytes``).
     """
     sel = TurnSelection.parse(turn_range)
     if not sel.is_all:
         turns = turns.filter(F.col("turn_idx").isin(*sel.turns))
-    if salt:
-        turns = salted_repartition(turns)
     return extract_turns(turns, extract_fn=extract_fn)
 
 
@@ -231,8 +222,7 @@ def run_pipeline(
         bucket_turns = turns.filter(F.col(_BUCKET) == k).drop(_BUCKET)
         try:
             extracted = extract_stage(
-                bucket_turns, cfg.turn_range, salt=cfg.salt_extraction,
-                extract_fn=cfg.extract_fn,
+                bucket_turns, cfg.turn_range, extract_fn=cfg.extract_fn,
             ).withColumn("run_id", F.lit(cfg.run_id)).withColumn(
                 "bucket", F.lit(k)
             )

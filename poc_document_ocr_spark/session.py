@@ -70,17 +70,6 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", _driver_java_opts())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # AQE sizes broadcast candidates by COMPRESSED shuffle bytes; a
-        # string-keyed relation (md5 fingerprints, terms) deserializes
-        # 10-20x bigger, so a "64 MB" side can be a >1 GB in-memory
-        # relation — the default 1g maxResultSize then kills the
-        # broadcast collect (hit by winnow containment at 1.88M docs:
-        # 1082 MiB from 11 tasks). The relation itself is fine — one
-        # copy in the local JVM, and on a real cluster the driver is
-        # provisioned for its broadcast duty — so raise the collect
-        # ceiling rather than shrinking the threshold and losing the
-        # broadcast wins everywhere else.
-        .config("spark.driver.maxResultSize", "4g")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -96,80 +96,6 @@ class Catalog:
             if d.startswith("bucket=")
         )
 
-    def compact(self, name: str) -> dict:
-        """Small-file compaction: rewrite every leaf partition of a table
-        into ONE file, content-identical (Iceberg analog:
-        ``rewrite_data_files`` / bin-pack maintenance).
-
-        Why it exists: the incremental streaming sink lands one partition
-        per ``(run_id, batch_id, bucket)`` — correct and replay-safe, but a
-        long-running ingest accumulates thousands of small files per bucket
-        and scan task-scheduling overhead starts to dominate (the classic
-        small-file problem at 100 TB). Compaction is the offline
-        maintenance pass that restores fat scan splits.
-
-        Implementation: one job writes the compacted copy to a temp
-        sibling directory — read the table, hash-repartition on the
-        physical partition columns (each leaf partition's rows land in one
-        task, so each directory is rewritten as one file; hash collisions
-        merge tasks, never split directories) — then the table flips to
-        the new copy by rename. Iceberg analog: ``rewrite_data_files``
-        commits a NEW snapshot and never mutates live files; the rename
-        pair is this adapter's snapshot flip. Every crash window is
-        recoverable and recovery runs automatically on entry: a leftover
-        ``__compact_tmp`` (died mid-write) is discarded; a leftover
-        ``__compact_old`` WITH the table present (died before cleanup) is
-        discarded; ``__compact_old`` with the table ABSENT (died between
-        the two renames) is renamed back — so the table is never left
-        half-compacted or missing past the next call/read.
-        Returns ``{"files_before": n, "files_after": m}``.
-        """
-        import shutil
-
-        path = self.path(name)
-        old = path.rstrip("/") + "__compact_old"
-        tmp = path.rstrip("/") + "__compact_tmp"
-        # crash recovery from a previous compaction attempt
-        if os.path.exists(old) and not os.path.exists(path):
-            os.rename(old, path)  # died between the two renames
-        if os.path.exists(old):
-            shutil.rmtree(old)  # died before cleanup; new table is live
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)  # died mid-write; tmp is incomplete
-
-        def data_files(p: str) -> list[str]:
-            out = []
-            for root, _dirs, files in os.walk(p):
-                out += [
-                    os.path.join(root, f)
-                    for f in files
-                    if f.endswith(".parquet")
-                ]
-            return out
-
-        before = len(data_files(path))
-        df = self.spark.read.parquet(path)
-        # physical partition columns = the directory levels (key=value)
-        parts = []
-        probe = data_files(path)[0] if before else ""
-        for seg in os.path.relpath(probe, path).split(os.sep)[:-1]:
-            if "=" in seg:
-                parts.append(seg.split("=", 1)[0])
-        if parts:
-            n_parts = max(df.select(*parts).distinct().count(), 1)
-            (
-                df.repartition(n_parts, *[F.col(c) for c in parts])
-                .write.mode("overwrite")
-                .partitionBy(*parts)
-                .parquet(tmp)
-            )
-        else:
-            df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-        return {"files_before": before, "files_after": len(data_files(path))}
-
     def write_bucketed(
         self, df: DataFrame, name: str, key: str = "conv_id", buckets: int = 32
     ) -> None:

@@ -37,11 +37,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--turn-range", default=None,
                    help='print-dialog selection, e.g. "3-12, 15"')
     p.add_argument("--buckets", type=int, default=64)
-    p.add_argument(
-        "--salt", action="store_true",
-        help="pre-UDF salted repartition (skewed/badly-packed inputs only; "
-        "costs a full shuffle — default path parallelizes via input splits)",
-    )
     args = p.parse_args(argv)
 
     # import after arg parsing so --help works without a JVM; when launched
@@ -70,7 +65,6 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         turn_range=args.turn_range,
         n_buckets=args.buckets,
-        salt_extraction=args.salt,
     )
     summary = run_pipeline(spark, catalog, cfg)
     print(json.dumps(summary))

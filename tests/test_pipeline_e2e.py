@@ -461,75 +461,6 @@ def test_turn_range_filter_before_udf(spark, turns_df):
     assert filter_pos > udf_pos, "turn-range filter not below the UDF barrier"
 
 
-def test_catalog_compaction_preserves_content_and_merges_files(
-    spark, tmp_path
-):
-    """Small-file maintenance: many appends fragment a bucketed table;
-    compact() rewrites each leaf partition to one file with byte-identical
-    content and intact partition pruning."""
-    from pyspark.sql import functions as F
-
-    from poc_document_ocr_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    # fragment: 6 appends x 3 shuffle files into bucket partitions
-    for i in range(6):
-        df = spark.range(i * 100, (i + 1) * 100).select(
-            F.col("id"),
-            F.pmod(F.col("id"), F.lit(4)).cast("int").alias("bucket"),
-            (F.col("id") * 2).alias("v"),
-        ).repartition(3)
-        df.write.mode("append").partitionBy("bucket").parquet(cat.path("t"))
-
-    before = sorted(tuple(r) for r in cat.read("t").collect())
-    stats = cat.compact("t")
-    assert stats["files_before"] > stats["files_after"]
-    assert stats["files_after"] == 4  # one file per bucket partition
-    after = sorted(tuple(r) for r in cat.read("t").collect())
-    assert after == before
-    # partition pruning still works on the compacted layout
-    one = cat.read("t").filter(F.col("bucket") == 2)
-    p = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in p
-    assert len(before) == 600
-
-
-def test_catalog_compaction_recovers_from_crash_windows(spark, tmp_path):
-    """Every compaction crash window self-heals on the next call: stale
-    tmp is discarded, stale old-with-live-table is discarded, and
-    old-without-live-table (died between the two renames) is restored."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from poc_document_ocr_spark.sources.catalog import Catalog
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    for i in range(3):
-        spark.range(i * 10, (i + 1) * 10).select(
-            F.col("id"),
-            F.pmod(F.col("id"), F.lit(2)).cast("int").alias("bucket"),
-        ).write.mode("append").partitionBy("bucket").parquet(cat.path("t"))
-    before = sorted(r["id"] for r in cat.read("t").collect())
-
-    # window 1: died between the renames — table gone, old present
-    path = cat.path("t")
-    os.rename(path, path + "__compact_old")
-    stats = cat.compact("t")  # must restore then compact
-    assert sorted(r["id"] for r in cat.read("t").collect()) == before
-    assert stats["files_after"] == 2
-    assert not os.path.exists(path + "__compact_old")
-
-    # window 2: died before cleanup — both table and old present
-    shutil.copytree(path, path + "__compact_old")
-    os.makedirs(path + "__compact_tmp")
-    cat.compact("t")
-    assert sorted(r["id"] for r in cat.read("t").collect()) == before
-    assert not os.path.exists(path + "__compact_old")
-    assert not os.path.exists(path + "__compact_tmp")
-
-
 def test_every_package_module_reachable_from_pipeline_roots():
     """Dead-code guard: every module of the package is imported, directly
     or transitively, from the batch job, the streaming job, the review
@@ -586,3 +517,26 @@ def test_every_package_module_reachable_from_pipeline_roots():
         seen.add(mod)
         todo |= imports(mod) - seen
     assert sorted(modules.keys() - seen) == []
+
+
+def test_every_package_all_entry_resolves():
+    """Export guard: each name a package module lists in ``__all__`` is an
+    attribute of that module, so ``from module import *`` cannot fail on
+    a stale entry left by a deletion."""
+    import importlib
+    import pathlib
+
+    import poc_document_ocr_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    checked, stale = 0, []
+    for path in sorted(root.rglob("*.py")):
+        parts = path.relative_to(root).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        mod = importlib.import_module(".".join((pkg.__name__, *parts)))
+        exports = getattr(mod, "__all__", ())
+        checked += bool(exports)
+        stale += [f"{mod.__name__}.{n}" for n in exports
+                  if not hasattr(mod, n)]
+    assert checked and stale == []
