@@ -93,50 +93,33 @@ _LONG_PAT = (
     r"OCTOBER|NOVEMBER|DECEMBER)\s*,?\s*(\d{4})\s*$"
 )
 
-_SHORT_MONTHS = {
-    "JAN": 1, "FEB": 2, "MAR": 3, "APR": 4, "MAY": 5, "JUN": 6,
-    "JUL": 7, "AUG": 8, "SEP": 9, "OCT": 10, "NOV": 11, "DEC": 12,
-}
-_LONG_MONTHS = {
-    "JANUARY": 1, "FEBRUARY": 2, "MARCH": 3, "APRIL": 4, "MAY": 5,
-    "JUNE": 6, "JULY": 7, "AUGUST": 8, "SEPTEMBER": 9, "OCTOBER": 10,
-    "NOVEMBER": 11, "DECEMBER": 12,
-}
-
-
-def _month_lookup(col: Column, table: dict[str, int]) -> Column:
-    expr: Column = F.lit(None).cast("int")
-    for name, num in table.items():
-        expr = F.when(F.upper(col) == name, F.lit(num)).otherwise(expr)
-    return expr
+_MONTHS = "JAN FEB MAR APR MAY JUN JUL AUG SEP OCT NOV DEC".split()
 
 
 def parse_ocr_date(raw: Column) -> Column:
-    """ISO yyyy-MM-dd string or null — column-expression DateFieldParser."""
-    cy = F.regexp_extract(raw, _COMPACT_PAT, 1)
-    cm = F.regexp_extract(raw, _COMPACT_PAT, 2)
-    cd = F.regexp_extract(raw, _COMPACT_PAT, 3)
-    ld = F.regexp_extract(raw, _LONG_PAT, 1)
-    lm = F.regexp_extract(raw, _LONG_PAT, 2)
-    ly = F.regexp_extract(raw, _LONG_PAT, 3)
+    """ISO yyyy-MM-dd string or null — column-expression DateFieldParser.
 
-    def build(y: Column, m: Column, d: Column) -> Column:
-        # Calendar validation without try_make_date (absent in this build):
-        # make_date(y, m, 1) is always valid for m in 1..12, so
-        # day(last_day(...)) gives the month length incl. leap years; invalid
-        # days (Feb 30) fall out as null, mirroring DateFieldParser.TryBuild.
-        yi, di = y.cast("int"), d.cast("int")
-        days_in_month = F.dayofmonth(F.last_day(F.make_date(yi, m, F.lit(1))))
+    Each form's groups are picked once by ``compact``; a long month name's
+    first three letters are its short name, so one literal map numbers
+    both. ``try_to_timestamp`` is the calendar check (Feb 30 and day 0 are
+    null); year 0 is refused too, as by .NET's ``DateTime`` (years 1-9999)
+    behind ``DateFieldParser.TryBuild``."""
+    compact = raw.rlike(_COMPACT_PAT)
+
+    def group(k_compact: int, k_long: int) -> Column:
         return F.when(
-            m.isNotNull() & (di >= 1) & (di <= days_in_month),
-            F.format_string("%04d-%02d-%02d", yi, m, di),
-        )
+            compact, F.regexp_extract(raw, _COMPACT_PAT, k_compact)
+        ).otherwise(F.regexp_extract(raw, _LONG_PAT, k_long))
 
-    compact = F.when(
-        cy != "", build(cy, _month_lookup(cm, _SHORT_MONTHS), cd)
+    months = F.create_map(
+        *[F.lit(x) for i, name in enumerate(_MONTHS) for x in (name, i + 1)]
     )
-    longf = F.when(ly != "", build(ly, _month_lookup(lm, _LONG_MONTHS), ld))
-    return F.coalesce(compact, longf)
+    m = F.try_element_at(months, F.upper(F.substring(group(2, 2), 1, 3)))
+    # a raw of neither form leaves every group "" → null → no valid iso
+    y, d = group(1, 3).try_cast("int"), group(3, 1).try_cast("int")
+    iso = F.format_string("%04d-%02d-%02d", y, m, d)
+    valid = F.try_to_timestamp(iso, F.lit("yyyy-MM-dd")).isNotNull()
+    return F.when(valid & (y > 0), iso)
 
 
 # ---------------------------------------------------------------------------
@@ -152,11 +135,10 @@ def parse_ocr_date(raw: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def _field_struct(s: Column, name: str) -> Column:
-    """SchemaField struct for catalog field ``name`` from its per-field
-    summary ``s`` (null when the field never contributed: every member then
-    falls out null through null propagation, leaving the all-null
-    'Pending' struct).
+def _field_struct() -> Column:
+    """SchemaField struct of a per-field summary row, its merge rule picked
+    by the row's ``field`` (a field that never contributed has no row and
+    gets the all-null 'Pending' struct in :func:`consolidate`).
 
     Merge-rule parity with the reference mapper:
 
@@ -169,33 +151,29 @@ def _field_struct(s: Column, name: str) -> Column:
       confidence over ALL contributors (code behavior);
     * date parse (FR-002a): winner's raw parsed, raw preserved.
     """
-    best_raw, best_conf = s["best"]["v"], s["best"]["cf"]
+    field = F.col("field")
+    is_sig, is_date, is_multi = (
+        field.isin(*names)
+        for names in (SIGNATURE_FIELDS, DATE_FIELDS, MULTI_VALUE_FIELDS)
+    )
+    best_raw, best_conf = F.col("best.v"), F.col("best.cf")
+    has_nonws = F.col("n_nonws") > 0
+    value = (
+        F.when(is_sig, F.when(F.col("sig_present"), "true").otherwise("false"))
+        .when(is_date, parse_ocr_date(best_raw))
+        .when(is_multi, F.when(has_nonws, F.col("concat_v")))
+        .otherwise(best_raw)
+    )
+    confidence = F.when(is_sig, F.col("min_conf_all")).when(
+        is_multi, F.when(has_nonws, F.coalesce("min_conf_nonws", F.lit(0.0)))
+    ).otherwise(best_conf)
+    return _schema_field(value, F.when(is_date, best_raw), confidence)
 
-    if name in SIGNATURE_FIELDS:
-        value = F.when(
-            s["n_parts"] > 0,
-            F.when(s["sig_present"], "true").otherwise("false"),
-        )
-        confidence = s["min_conf_all"]
-        raw_text = F.lit(None).cast("string")
-    elif name in DATE_FIELDS:
-        value = parse_ocr_date(best_raw)
-        confidence = best_conf
-        raw_text = best_raw
-    elif name in MULTI_VALUE_FIELDS:
-        value = F.when(s["n_nonws"] > 0, s["concat_v"])
-        confidence = F.when(
-            s["n_nonws"] > 0, F.coalesce(s["min_conf_nonws"], F.lit(0.0))
-        )
-        raw_text = F.lit(None).cast("string")
-    else:
-        value = best_raw
-        confidence = best_conf
-        raw_text = F.lit(None).cast("string")
 
+def _schema_field(value: Column, raw_text: Column, confidence: Column) -> Column:
     return F.struct(
         value.cast("string").alias("value"),
-        raw_text.alias("raw_text"),
+        raw_text.cast("string").alias("raw_text"),
         confidence.cast("double").alias("confidence"),
         F.lit(None).cast("string").alias("reviewed_value"),
         F.lit(None).cast("timestamp").alias("reviewed_at"),
@@ -274,7 +252,6 @@ def consolidate(turns: DataFrame) -> DataFrame:
                 F.col("conf").alias("cf"),
             )
         ).alias("best"),
-        F.count(F.lit(1)).alias("n_parts"),
         F.sum(F.when(nonws, 1).otherwise(0)).alias("n_nonws"),
         F.max(
             F.coalesce(F.lower("raw").isin("signed", "present"), F.lit(False))
@@ -306,15 +283,7 @@ def consolidate(turns: DataFrame) -> DataFrame:
     )
     summaries = per_field.groupBy("conv_id", "run_id").agg(
         F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    "field",
-                    F.struct(
-                        "best", "n_parts", "n_nonws", "sig_present",
-                        "min_conf_all", "min_conf_nonws", "concat_v",
-                    ),
-                )
-            )
+            F.collect_list(F.struct("field", _field_struct()))
         ).alias("_fs")
     )
 
@@ -329,6 +298,7 @@ def consolidate(turns: DataFrame) -> DataFrame:
     # try_element_at: null, not an ANSI error, for a field that never
     # contributed (and for a document with no contributions, _fs null)
     fs = F.col("_fs")
+    pending = _schema_field(*[F.lit(None)] * 3)
     return headers.join(summaries, ["conv_id", "run_id"], "left").select(
         "conv_id",
         "run_id",
@@ -339,7 +309,7 @@ def consolidate(turns: DataFrame) -> DataFrame:
         "provenance",
         "sig_warnings",
         *[
-            _field_struct(F.try_element_at(fs, F.lit(name)), name).alias(name)
+            F.coalesce(F.try_element_at(fs, F.lit(name)), pending).alias(name)
             for name in FIELD_NAMES
         ],
     )

@@ -12,9 +12,10 @@ persist → checkpoint), as a Spark batch job:
 Checkpoint/resume model (north rule): work is split into ``n_buckets`` hash
 buckets of ``conv_id`` (production: Iceberg ``bucket(N, conv_id)`` partitions,
 so each wave's scan prunes to its bucket — no full rescans). A lineage row is
-committed per bucket; a re-run with the same ``run_id`` anti-joins completed
-buckets and processes only the remainder. A bucket that died before its
-lineage commit is redone exactly, whatever write it died after:
+committed per bucket as one driver-side file, no Spark job; a re-run with
+the same ``run_id`` skips completed buckets and processes only the
+remainder. A bucket that died before its lineage commit is redone exactly,
+whatever write it died after:
 
 * its extracted turns land with a dynamic partition overwrite of
   ``(run_id, bucket)`` (Iceberg ``overwritePartitions()``, the reference's
@@ -163,8 +164,12 @@ def run_pipeline(
     One wave per remaining bucket: extract once into the bucket's
     ``(run_id, bucket)`` partition of the extracted table → fold that
     partition → append the records not yet in the output → commit lineage.
-    A killed run resumes by lineage anti-join; a bucket that died mid-wave
-    re-lands its partition and its records are duplicate-skipped.
+    A killed run skips the buckets its lineage holds as Succeeded; a bucket
+    that died mid-wave re-lands its partition and its records are
+    duplicate-skipped. A wave's Spark jobs are its data work: the extracted
+    overwrite, the rule-hit count, one records count and the append. The
+    lineage commit and the resume read run on the driver
+    (``Catalog.append_rows``/``read_rows``), no Spark job.
     """
     raw = catalog.read(cfg.input_table)
     phys_buckets = catalog.bucket_values(cfg.input_table)
@@ -183,22 +188,15 @@ def run_pipeline(
         turns = raw.withColumn(_BUCKET, conv_bucket(cfg.n_buckets))
         bucket_ids = list(range(cfg.n_buckets))
 
-    completed: set[int] = set()
-    if catalog.exists(cfg.lineage_table):
-        # read by the written schema, like the output and extracted tables:
-        # a write killed inside the table's first commit leaves only
-        # ``_temporary/``, no file to infer a schema from
-        lineage = catalog.read(cfg.lineage_table, schema=LINEAGE_SCHEMA)
-        completed = {
-            r.partition_id
-            for r in lineage.filter(
-                (F.col("run_id") == cfg.run_id)
-                & (F.col("status") == "Succeeded")
-            )
-            .select("partition_id")
-            .distinct()
-            .collect()
-        }
+    # the files of either lineage writer, read on the driver
+    completed = {
+        r["partition_id"]
+        for r in catalog.read_rows(
+            cfg.lineage_table, LINEAGE_SCHEMA,
+            ["run_id", "partition_id", "status"],
+        )
+        if r["run_id"] == cfg.run_id and r["status"] == "Succeeded"
+    }
 
     summary = {"run_id": cfg.run_id, "buckets": [], "skipped_duplicates": 0}
     for k in bucket_ids:
@@ -210,9 +208,7 @@ def run_pipeline(
         # left untouched; a resume with the same run_id completes them (only
         # status='Succeeded' counts as done).
         if callable(cfg.cancel_check) and cfg.cancel_check():
-            _commit_lineage(
-                spark, catalog, cfg, k, 0, 0, {}, 0, "Cancelled"
-            )
+            _commit_lineage(catalog, cfg, k, 0, 0, {}, 0, "Cancelled")
             summary["buckets"].append(
                 {"partition_id": k, "status": "Cancelled"}
             )
@@ -251,21 +247,25 @@ def run_pipeline(
                 records = _dedup_within_batch(records).withColumn(
                     "op_run_id", F.lit(cfg.run_id)
                 )
-                n_records = records.count()
                 if catalog.exists(cfg.output_table):
-                    new_records = dedup_against_existing(
-                        records,
-                        catalog.read(cfg.output_table, schema=records.schema),
-                    )
+                    existing = catalog.read(cfg.output_table, records.schema)
+                    # both counters in one aggregate over the records' keys
+                    n_records, n_dup = records.select("doc_key").join(
+                        existing.select("doc_key").distinct()
+                        .withColumn("_dup", F.lit(True)),
+                        "doc_key", "left",
+                    ).agg(F.count(F.lit(1)), F.count("_dup")).first()
+                    rows_out = n_records - n_dup
+                    new_records = dedup_against_existing(records, existing)
                 else:
+                    n_records = rows_out = records.count()
                     new_records = records
-                rows_out = new_records.count()
                 summary["skipped_duplicates"] += n_records - rows_out
                 if rows_out:
                     catalog.append(new_records, cfg.output_table)
             wall_ms = int((time.monotonic() - t0) * 1000)
             _commit_lineage(
-                spark, catalog, cfg, k, rows_in, rows_out, rule_hits, wall_ms,
+                catalog, cfg, k, rows_in, rows_out, rule_hits, wall_ms,
                 "Succeeded",
             )
             summary["buckets"].append(
@@ -286,7 +286,7 @@ def run_pipeline(
             wall_ms = int((time.monotonic() - t0) * 1000)
             try:
                 _commit_lineage(
-                    spark, catalog, cfg, k, 0, 0, {}, wall_ms, "Failed",
+                    catalog, cfg, k, 0, 0, {}, wall_ms, "Failed",
                     error=f"{type(e).__name__}: {e}"[:512],
                 )
             except Exception:
@@ -301,12 +301,9 @@ def run_pipeline(
 
 
 def _commit_lineage(
-    spark, catalog, cfg, k, rows_in, rows_out, rule_hits, wall_ms, status,
-    error: str | None = None,
+    catalog, cfg, k, rows_in, rows_out, rule_hits, wall_ms, status, error=None
 ):
     now = cfg.clock() if callable(cfg.clock) else cfg.clock
-    row = [
-        (cfg.run_id, k, rows_in, rows_out, rule_hits, wall_ms, status, now,
-         error)
-    ]
-    catalog.append(spark.createDataFrame(row, LINEAGE_SCHEMA), cfg.lineage_table)
+    row = (cfg.run_id, k, rows_in, rows_out, rule_hits, wall_ms, status, now,
+           error)
+    catalog.append_rows([row], cfg.lineage_table, LINEAGE_SCHEMA)

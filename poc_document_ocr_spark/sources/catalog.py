@@ -9,9 +9,12 @@ logical behavior:
 * ``read(name)``      — full-scan with pushdown-friendly plain reads
   (optionally by a given schema)
 * ``write(df, name)`` — idempotent overwrite (blob ``overwrite:true`` analog)
-* ``append(df, name)``— lineage-style append
+* ``append(df, name)``— append a DataFrame
 * dynamic-partition overwrite for per-partition idempotent re-runs
-  (Iceberg ``overwritePartitions()`` analog).
+  (Iceberg ``overwritePartitions()`` analog)
+* ``append_rows``/``read_rows`` — the control plane's small append and
+  read (lineage), on the driver with pyarrow, no Spark job (pyiceberg
+  ``Table.append(pa.Table)`` analog).
 
 At 100 TB the production table is partitioned ``bucket(N, conv_id)`` (plus
 ``days(ts)`` if time-scoped); the bucket column written here mirrors that so
@@ -21,9 +24,14 @@ file layout and pruning behave the same way.
 from __future__ import annotations
 
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 __all__ = ["Catalog", "conv_bucket"]
@@ -64,6 +72,31 @@ class Catalog:
 
     def append(self, df: DataFrame, name: str) -> None:
         df.write.mode("append").parquet(self.path(name))
+
+    def append_rows(
+        self, rows: list[tuple], name: str, schema: StructType
+    ) -> None:
+        """One parquet file of driver-side rows, written under a ``.tmp-``
+        name that Spark's and Arrow's listings skip, then renamed into
+        place (``os.replace``): a reader sees all of it or none of it."""
+        p, file_id = self.path(name), uuid.uuid4().hex
+        os.makedirs(p, exist_ok=True)
+        tmp = os.path.join(p, f".tmp-{file_id}.parquet")
+        table = [dict(zip(schema.names, r)) for r in rows]
+        pq.write_table(
+            pa.Table.from_pylist(table, schema=to_arrow_schema(schema)), tmp
+        )
+        os.replace(tmp, os.path.join(p, f"part-{file_id}.parquet"))
+
+    def read_rows(
+        self, name: str, schema: StructType, columns: list[str]
+    ) -> list[dict]:
+        """``columns`` of a small table's rows, read on the driver from the
+        data files of either writer (``.``/``_``-prefixed entries skipped)."""
+        if not self.exists(name):
+            return []
+        arrow = to_arrow_schema(StructType([schema[c] for c in columns]))
+        return ds.dataset(self.path(name), schema=arrow).to_table().to_pylist()
 
     def overwrite_partitions(
         self, df: DataFrame, name: str, part_col: str | tuple[str, ...]

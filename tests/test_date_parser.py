@@ -1,10 +1,25 @@
 """Date parser table tests — 1:1 with reference DateFieldParserTests.cs:7-44,
-run through the fold's column-expression parser ``parse_ocr_date``."""
+run through the fold's column-expression parser ``parse_ocr_date`` — and a
+hypothesis property test of that parser against a plain-Python
+``DateFieldParser`` (``strptime`` names the months and checks the
+calendar)."""
+
+import re
+import string
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
 from poc_document_ocr_spark.operators.aggregation import parse_ocr_date
+
+try:
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    _HYP = True
+except ImportError:  # pragma: no cover
+    _HYP = False
 
 COMPACT = [
     ("1985JAN12", "1985-01-12"),
@@ -64,3 +79,79 @@ def test_leap_year(parse_date):
     assert parse_date("2023FEB29") is None
     assert parse_date("1900FEB29") is None  # century non-leap
     assert parse_date("2000FEB29") == "2000-02-29"
+
+
+# --- property test: parse_ocr_date vs a plain-Python DateFieldParser -------
+
+#: what Java's ``\s`` matches (the parser's patterns run on the JVM)
+_WS = " \t\n\x0b\f\r"
+_PY_FORMS = (
+    # (pattern over the stripped raw, strptime format, group order y m d)
+    (re.compile(r"(\d{4})([a-z]{3})(\d{1,2})", re.I | re.A), "%Y %b %d",
+     (1, 2, 3)),
+    (re.compile(r"(\d{1,2})\s*(?:st|nd|rd|th)?\s*day\s*of\s*([a-z]+)"
+                r"\s*,?\s*(\d{4})", re.I | re.A), "%Y %B %d", (3, 2, 1)),
+)
+
+
+def _py_parse_date(raw):
+    """Compact ``YYYYMMMDD`` or long ``Nth DAY OF MONTH[,] YYYY``, any case,
+    surrounding whitespace ignored; ISO ``yyyy-MM-dd`` or None. Month names,
+    day ranges, leap years and the year range 1-9999 are ``strptime``'s."""
+    if raw is None:
+        return None
+    for pat, fmt, order in _PY_FORMS:
+        m = pat.fullmatch(raw.strip(_WS))
+        if m:
+            try:
+                parsed = datetime.strptime(
+                    " ".join(m.group(i) for i in order), fmt
+                )
+            except ValueError:
+                return None
+            return parsed.date().isoformat()
+    return None
+
+
+if _HYP:
+    _MONTH_NAMES = [datetime(2000, m, 1).strftime("%B") for m in range(1, 13)]
+
+    def _any_case(word):
+        return st.lists(
+            st.booleans(), min_size=len(word), max_size=len(word)
+        ).map(lambda up: "".join(
+            c.upper() if u else c.lower() for c, u in zip(word, up)))
+
+    _ws = st.text(alphabet=_WS, max_size=2)
+    _year = st.integers(0, 9999).map("{:04d}".format)
+    _day = st.integers(0, 40).flatmap(
+        lambda d: st.sampled_from([str(d), f"{d:02d}"]))
+    _month = st.sampled_from(_MONTH_NAMES)
+    _compact = st.tuples(
+        _ws, _year,
+        _month.flatmap(lambda m: _any_case(m[:3]))
+        | st.text(string.ascii_letters, min_size=3, max_size=3),
+        _day, _ws,
+    ).map("".join)
+    _long = st.tuples(
+        _ws, _day, _ws,
+        st.sampled_from(["", "st", "nd", "rd", "th"]).flatmap(_any_case),
+        _ws, _any_case("day"), _ws, _any_case("of"), _ws,
+        _month.flatmap(_any_case), _ws, st.sampled_from(["", ","]), _ws,
+        _year, _ws,
+    ).map("".join)
+    _junk = st.text(string.printable, max_size=30)
+    _raw = st.one_of(
+        _compact, _long, _junk, st.none(),
+        st.tuples(_compact | _long, _junk).map("".join),
+    )
+
+    @settings(max_examples=30, deadline=None)
+    @given(st.lists(_raw, min_size=1, max_size=100))
+    def test_parse_ocr_date_matches_python_parser(spark, raws):
+        """Both forms, every month name in any case, ordinal suffixes,
+        whitespace, junk, years 0-9999 and days 0-40: every raw of a drawn
+        batch parses (in one Spark job) as the plain-Python parser does."""
+        df = spark.createDataFrame([(r,) for r in raws], "raw string")
+        got = df.select(parse_ocr_date(F.col("raw")).alias("iso")).collect()
+        assert [r.iso for r in got] == [_py_parse_date(r) for r in raws]

@@ -11,6 +11,7 @@
 
 import os
 from collections import Counter
+from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +22,7 @@ from poc_document_ocr_spark.plans.pipeline import (
     extract_stage,
     run_pipeline,
 )
-from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
+from poc_document_ocr_spark.schema import LINEAGE_SCHEMA, TRANSCRIPT_SCHEMA
 from poc_document_ocr_spark.sources.catalog import Catalog
 from poc_document_ocr_spark.sources.datagen import generate
 
@@ -108,20 +109,20 @@ def test_pipeline_run_resume_and_idempotency(spark, turns_df, data, tmp_path):
     class Boom(Exception):
         pass
 
-    orig_append = cat.append
+    orig_append_rows = cat.append_rows
     calls = {"lineage_commits": 0}
 
-    def bombed_append(df, name):
-        orig_append(df, name)
+    def bombed_append_rows(rows, name, schema):
+        orig_append_rows(rows, name, schema)
         if name == "lin_kill":
             calls["lineage_commits"] += 1
             if calls["lineage_commits"] == 2:
                 raise Boom()
 
-    cat.append = bombed_append
+    cat.append_rows = bombed_append_rows
     with pytest.raises(Boom):
         run_pipeline(spark, cat, cfg2)
-    cat.append = orig_append
+    cat.append_rows = orig_append_rows
 
     # phase 2: resume — completed buckets must be skipped
     summary = run_pipeline(spark, cat, cfg2)
@@ -171,8 +172,9 @@ class _CrashAfterFirstWrite:
     """Catalog proxy that crashes at the first write to ``table``, whichever
     write primitive made it: ``"after"`` the write commits, or ``"during"``
     it as a killed driver does. That leaves under the table's path what a
-    killed Spark write leaves (an attempt file under ``_temporary/``, no
-    committed data file), and lands no later write, not even the wave's
+    killed write leaves, and no committed data file: an attempt file under
+    ``_temporary/`` for a Spark write, a partial ``.tmp-*.parquet`` for a
+    driver-side ``append_rows``. No later write lands, not even the wave's
     Failed lineage marker."""
 
     def __init__(self, inner, table, when):
@@ -182,7 +184,7 @@ class _CrashAfterFirstWrite:
     def __getattr__(self, name):
         return getattr(self.inner, name)
 
-    def _write(self, name, write):
+    def _write(self, name, write, partial):
         if self.fired and self.when == "during":
             raise _Crash(f"killed before writing {name}")
         if name != self.table or self.fired:
@@ -191,23 +193,31 @@ class _CrashAfterFirstWrite:
         if self.when == "after":
             write()
         else:
-            attempt = os.path.join(
-                self.inner.path(name), "_temporary", "0", "_temporary",
-                "attempt_0",
-            )
-            os.makedirs(attempt)
-            with open(os.path.join(attempt, "part-00000.snappy.parquet"),
-                      "wb") as f:
+            path = os.path.join(self.inner.path(name), partial)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            with open(path, "wb") as f:
                 f.write(b"PAR1")
         raise _Crash(f"crash {self.when} writing {name}")
 
     def append(self, df, name):
-        self._write(name, lambda: self.inner.append(df, name))
+        self._write(name, lambda: self.inner.append(df, name), _SPARK_ATTEMPT)
+
+    def append_rows(self, rows, name, schema):
+        self._write(
+            name, lambda: self.inner.append_rows(rows, name, schema),
+            ".tmp-killed.parquet",
+        )
 
     def overwrite_partitions(self, df, name, part_col):
         self._write(
-            name, lambda: self.inner.overwrite_partitions(df, name, part_col)
+            name, lambda: self.inner.overwrite_partitions(df, name, part_col),
+            _SPARK_ATTEMPT,
         )
+
+
+_SPARK_ATTEMPT = os.path.join(
+    "_temporary", "0", "_temporary", "attempt_0", "part-00000.snappy.parquet"
+)
 
 
 @pytest.fixture(scope="module")
@@ -257,6 +267,74 @@ def test_resume_exact_at_every_crash_point(
         (F.col("run_id") == cfg.run_id) & (F.col("status") == "Succeeded")
     )
     assert Counter(r.partition_id for r in lin.collect()) == {0: 1, 1: 1}
+
+
+def test_lineage_layouts_read_as_one_table(spark, turns_df, tmp_path):
+    """A lineage table holding a Spark-written part file (how a commit was
+    written before commits moved to the driver), an ``append_rows`` file, a
+    ``_temporary/`` stub and a stray ``.tmp-*`` stub gives the same rows in
+    Spark and through the driver-side reader, and a resume skips the
+    buckets the Spark-written rows hold as Succeeded."""
+    cat = Catalog(spark, str(tmp_path))
+    cat.write_overwrite(turns_df, "transcripts")
+    at = datetime(2026, 1, 2, 3, 4, 5, tzinfo=timezone.utc)
+    spark_rows = [
+        ("run-L", 0, 5, 2, {"html": 5}, 10, "Succeeded", at, None),
+        ("run-L", 1, 0, 0, {}, 0, "Cancelled", at, None),
+    ]
+    cat.append(spark.createDataFrame(spark_rows, LINEAGE_SCHEMA), "lineage")
+    driver_rows = [("run-L", 1, 0, 0, {}, 7, "Failed", at, "Boom: x")]
+    cat.append_rows(driver_rows, "lineage", LINEAGE_SCHEMA)
+    lin = cat.path("lineage")
+    os.makedirs(os.path.join(lin, "_temporary", "0"))
+    with open(os.path.join(lin, "_temporary", "0", "part-0.parquet"), "wb") as f:
+        f.write(b"PAR1")
+    with open(os.path.join(lin, ".tmp-stray.parquet"), "wb") as f:
+        f.write(b"PAR1")
+
+    want = sorted(
+        (*r[:7], int(at.timestamp()), r[8]) for r in spark_rows + driver_rows
+    )
+    in_spark = cat.read("lineage", schema=LINEAGE_SCHEMA).withColumn(
+        "completed_at", F.col("completed_at").cast("long"))
+    assert sorted(tuple(r) for r in in_spark.collect()) == want
+    cols = ["run_id", "partition_id", "status"]
+    on_driver = cat.read_rows("lineage", LINEAGE_SCHEMA, cols)
+    assert sorted(tuple(r[c] for c in cols) for r in on_driver) == sorted(
+        (r[0], r[1], r[6]) for r in want)
+
+    summary = run_pipeline(
+        spark, cat, PipelineConfig(run_id="run-L", n_buckets=2))
+    assert [(b["partition_id"], b["status"]) for b in summary["buckets"]] == [
+        (0, "Resumed"), (1, "Succeeded")]
+
+
+def test_wave_counters_under_partial_overlap(spark, turns_df, tmp_path):
+    """An output already holding the records of some conversations: a new
+    one-wave run appends exactly the missing records, its skipped
+    duplicates plus its rows out add up to the wave's records, and the
+    lineage's rows_out is what it appended."""
+    cat = Catalog(spark, str(tmp_path))
+    cat.write_overwrite(turns_df, "transcripts")
+    ref_cfg = PipelineConfig(run_id="run-R", n_buckets=1, output_table="ref",
+                             extracted_table="ext_ref", lineage_table="lin_ref")
+    run_pipeline(spark, cat, ref_cfg)
+    ref = cat.read("ref")
+    convs = sorted(r.conv_id for r in ref.select("conv_id").distinct().collect())
+    cat.append(ref.filter(F.col("conv_id").isin(*convs[::2])), "consolidated")
+    seeded = {r.doc_key for r in cat.read("consolidated").collect()}
+    every = {r.doc_key for r in ref.collect()}
+    assert seeded and seeded < every
+
+    summary = run_pipeline(
+        spark, cat, PipelineConfig(run_id="run-Q", n_buckets=1))
+    appended = cat.read("consolidated").filter(F.col("op_run_id") == "run-Q")
+    assert sorted(r.doc_key for r in appended.collect()) == sorted(
+        every - seeded)
+    [wave] = summary["buckets"]
+    assert summary["skipped_duplicates"] + wave["rows_out"] == len(every)
+    [lin] = cat.read("lineage").filter(F.col("run_id") == "run-Q").collect()
+    assert lin.rows_out == len(every - seeded)
 
 
 def test_pipeline_extracts_each_turn_once(spark, turns_df, data, tmp_path):
