@@ -39,11 +39,14 @@ from ..schema import (
     FIELD_NAMES,
     MULTI_VALUE_FIELDS,
     SIGNATURE_FIELDS,
+    SIGNATURE_TRUE_VALUES,
 )
 
 __all__ = ["with_runs", "consolidate", "parse_ocr_date"]
 
 _NEG_INF = float("-inf")
+# sorted: set order varies under hash randomisation, the plan text must not
+_SIG_TRUE = sorted(SIGNATURE_TRUE_VALUES)
 
 
 def with_runs(df: DataFrame) -> DataFrame:
@@ -207,7 +210,7 @@ def consolidate(turns: DataFrame) -> DataFrame:
     bad_sig = lambda c: (  # noqa: E731
         c["field"].isin(*SIGNATURE_FIELDS)
         & c["raw_value"].isNotNull()
-        & ~F.lower(c["raw_value"]).isin("signed", "present", "unsigned")
+        & ~F.lower(c["raw_value"]).isin(*_SIG_TRUE, "unsigned")
     )
     headers = turns.groupBy("conv_id", "run_id").agg(
         F.min("ffill_id").alias("identifier_raw"),
@@ -254,7 +257,7 @@ def consolidate(turns: DataFrame) -> DataFrame:
         ).alias("best"),
         F.sum(F.when(nonws, 1).otherwise(0)).alias("n_nonws"),
         F.max(
-            F.coalesce(F.lower("raw").isin("signed", "present"), F.lit(False))
+            F.coalesce(F.lower("raw").isin(*_SIG_TRUE), F.lit(False))
         ).alias("sig_present"),
         F.min("conf").alias("min_conf_all"),
         F.min(F.when(nonws, F.col("conf"))).alias("min_conf_nonws"),

@@ -102,49 +102,6 @@ def _make_layout(rng: random.Random, core_lines: list[str]) -> tuple[str, str]:
     return body, "\n".join(p1 + p2)
 
 
-def generate_conv(
-    conv_no: int,
-    seed: int = 42,
-    median_turns: int = 8,
-    skew: bool = True,
-) -> list[tuple]:
-    """Turns for ONE conversation, independently seeded by (seed, conv_no).
-
-    Unlike :func:`generate` (whose single RNG threads through the whole
-    corpus — fine for small fixtures), this is embarrassingly parallel: a
-    distributed generator maps it over a range of conv ids and every
-    executor produces identical bytes for a given conv. Conv 0 is the
-    long-tail skew conversation (100× median turns); convs 1-10 are 10×.
-    """
-    rng = random.Random(f"{seed}|{conv_no}")
-    conv_id = f"conv-{seed}-{conv_no:07d}"
-    if skew and conv_no == 0:
-        n_turns = median_turns * 100
-    elif skew and conv_no <= 10:
-        n_turns = median_turns * 10
-    else:
-        n_turns = max(1, int(rng.gauss(median_turns, median_turns / 3)))
-    roles = ("user", "assistant", "system", "tool")
-    turns: list[tuple] = []
-    for t in range(1, n_turns + 1):
-        core = _field_lines(rng, conv_no, t) + [
-            _sentence(rng, rng.randint(5, 12))
-            for _ in range(rng.randint(1, 3))
-        ]
-        p = rng.random()
-        if p < 0.4:
-            text, _ = _make_html(rng, core)
-        elif p < 0.7:
-            text, _ = _make_layout(rng, core)
-        else:
-            text, _ = _make_plain(rng, core)
-        role = roles[t % len(roles)]
-        tool = "search" if role == "tool" else None
-        ts = _EPOCH + timedelta(minutes=conv_no * 1440 + t)
-        turns.append((conv_id, t, role, text, tool, ts))
-    return turns
-
-
 def generate(
     n_convs: int = 20,
     median_turns: int = 8,

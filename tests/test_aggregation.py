@@ -417,6 +417,30 @@ def test_consolidate_stage_matches_python_oracle(spark):
         assert got[k] == want[k], k
 
 
+def test_consolidated_record_types_match_schema_catalog(spark):
+    """The fold builds its per-field and provenance structs inline; each
+    must equal the catalog's ``SCHEMA_FIELD_TYPE`` / ``PROVENANCE_TYPE``,
+    nullability included."""
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
+    from poc_document_ocr_spark.schema import (
+        PROVENANCE_TYPE,
+        SCHEMA_FIELD_TYPE,
+        TRANSCRIPT_SCHEMA,
+    )
+    from poc_document_ocr_spark.sources.datagen import generate
+
+    # createDataFrame keeps turn_idx non-nullable; a parquet read would not
+    data = generate(n_convs=3, seed=5)
+    schema = consolidate_stage(
+        extract_turns(spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA))
+    ).schema
+    assert {n: schema[n].dataType for n in FIELD_NAMES} == {
+        n: SCHEMA_FIELD_TYPE for n in FIELD_NAMES
+    }
+    assert schema["provenance"].dataType.elementType == PROVENANCE_TYPE
+
+
 def test_consolidate_long_fold_million_contribution_conversation(spark):
     """North-rule skew guard: ONE conversation with 10⁶ field lines folds
     with exact merge-rule output. The fold's per-field aggregates are

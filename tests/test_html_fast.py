@@ -205,15 +205,14 @@ def test_parser_drift_routes_to_stdlib_twin(monkeypatch):
 
 def test_fast_equals_slow_on_synthetic_corpus():
     from poc_document_ocr_spark.functions.dispatch import sniff_format
-    from poc_document_ocr_spark.sources.datagen import generate_conv
+    from poc_document_ocr_spark.sources.datagen import generate
 
     n = 0
-    for conv in range(400):
-        for row in generate_conv(conv, seed=42):
-            text = row[3] if isinstance(row, tuple) else row["text"]
-            if sniff_format(text) == "html":
-                _eq(text)
-                n += 1
+    for row in generate(n_convs=400, seed=42).turns:
+        text = row[3]
+        if sniff_format(text) == "html":
+            _eq(text)
+            n += 1
     assert n > 100  # the corpus really exercises the HTML path
 
 

@@ -542,9 +542,8 @@ def test_turn_range_filter_before_udf(spark, turns_df):
 def test_every_package_module_reachable_from_pipeline_roots():
     """Dead-code guard: every module of the package is imported, directly
     or transitively, from the batch job, the streaming job, the review
-    operators, the corpus generator, the session factory, or one of the
-    training-data operator modules kept as a library with their own table
-    tests. A module none of them reaches is code nothing runs."""
+    operators, the corpus generator or the session factory. A module none
+    of them reaches is code nothing runs."""
     import ast
     import pathlib
 
@@ -586,8 +585,6 @@ def test_every_package_module_reachable_from_pipeline_roots():
 
     roots = ("plans.pipeline", "streaming.ingest", "operators.review",
              "sources.datagen", "session")
-    library = ("operators.textstats",)
-    roots += library
     todo = set().union(*(with_parents(f"{name}.{r}") for r in roots))
     seen = set()
     while todo:
