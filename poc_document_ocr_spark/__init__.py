@@ -11,7 +11,7 @@ Layers:
 
 * ``schema``      — single-source-of-truth catalog (13-field, merge sets, structs)
 * ``functions``   — pure-Python extraction engines (HTML/layout/markdown/dispatch/selection)
-* ``operators``   — DataFrame operators (mapInArrow extraction, forward-fill fold, field merge, review)
+* ``operators``   — DataFrame operators (mapInArrow extraction, forward-fill fold, field merge)
 * ``sources``     — table adapters (parquet dirs in sandbox; Iceberg in prod)
 * ``plans``       — the batch job (bucket waves: land extracted turns → fold → append, lineage, resume)
 * ``streaming``   — the streaming job (micro-batches: land extracted turns → re-fold touched buckets)

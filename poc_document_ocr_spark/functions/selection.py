@@ -1,15 +1,19 @@
 """Turn-range selection: print-dialog-style expression → sorted deduped set.
 
-Reference parity: ``PageSelection.TryParse`` / ``ResolveAgainst``
+Reference parity: ``PageSelection.TryParse``
 (``src/DocumentOcr.Common/Models/PageSelection.cs:45-168`` and
 ``tests/.../PageSelectionTests.cs``):
 
 * ``None`` / empty / whitespace expression → *all turns* sentinel.
 * Tokens are comma-separated ``N`` or ``A-B`` (1-indexed, inclusive).
 * Duplicates and overlaps collapse (``"2,2,3-4,3"`` → {2,3,4}).
-* Invalid token, ``A > B``, or out-of-bounds vs the real max turn → error
-  that names the offending token and the bound (FR: run fails before any
-  extraction happens).
+* Invalid token, ``A > B`` or turn 0 → error naming the offending token.
+
+There is no bound check against a conversation's length. One selection
+serves a whole batch of conversations, so a selection takes nothing from a
+conversation shorter than it: a selection past every turn extracts no
+turns and the run still succeeds (the reference fails the run instead, as
+it re-parses against one document's page count).
 
 This parse runs driver-side; the result is pushed into the scan as an
 ``isin``/``between`` predicate *before* the extraction stage
@@ -25,7 +29,7 @@ __all__ = ["TurnSelection", "TurnSelectionError"]
 
 
 class TurnSelectionError(ValueError):
-    """Raised for malformed or out-of-bounds selection expressions."""
+    """Raised for malformed selection expressions."""
 
 
 @dataclass(frozen=True)
@@ -39,7 +43,7 @@ class TurnSelection:
 
     @classmethod
     def parse(cls, expression: str | None) -> "TurnSelection":
-        """Parse without bounds (bounds applied in :meth:`resolve_against`)."""
+        """Parse into the sorted, deduplicated turn set (no upper bound)."""
         if expression is None or not expression.strip():
             return cls(None)
         selected: set[int] = set()
@@ -65,22 +69,3 @@ class TurnSelection:
         if any(t < 1 for t in selected):
             raise TurnSelectionError("turn numbers are 1-indexed; 0 is invalid")
         return cls(tuple(sorted(selected)))
-
-    def resolve_against(self, max_turn: int) -> tuple[int, ...]:
-        """Bound-check against the real turn count; returns the final set.
-
-        Mirrors the reference's re-parse against the real page count
-        (``PdfProcessorFunction.cs:297-305``): an out-of-bounds selection
-        fails the run *before* any extraction happens, naming both the
-        offending turn and the bound.
-        """
-        if max_turn < 1:
-            raise TurnSelectionError(f"max_turn must be >= 1, got {max_turn}")
-        if self.turns is None:
-            return tuple(range(1, max_turn + 1))
-        bad = [t for t in self.turns if t > max_turn]
-        if bad:
-            raise TurnSelectionError(
-                f"selected turn {bad[0]} exceeds last turn {max_turn}"
-            )
-        return self.turns

@@ -1,2 +1,2 @@
 """DataFrame operators: mapInArrow extraction stage, forward-fill runs and
-the per-field fold, and review state."""
+the per-field fold."""

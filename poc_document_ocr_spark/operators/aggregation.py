@@ -33,11 +33,14 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schema import (
     DATE_FIELDS,
     FIELD_NAMES,
     MULTI_VALUE_FIELDS,
+    PROVENANCE_TYPE,
+    SCHEMA_FIELD_TYPE,
     SIGNATURE_FIELDS,
     SIGNATURE_TRUE_VALUES,
 )
@@ -45,7 +48,8 @@ from ..schema import (
 __all__ = ["with_runs", "consolidate", "parse_ocr_date"]
 
 _NEG_INF = float("-inf")
-# sorted: set order varies under hash randomisation, the plan text must not
+# every merge set enters the plan sorted: set order varies under hash
+# randomisation, the plan text must not
 _SIG_TRUE = sorted(SIGNATURE_TRUE_VALUES)
 
 
@@ -156,7 +160,7 @@ def _field_struct() -> Column:
     """
     field = F.col("field")
     is_sig, is_date, is_multi = (
-        field.isin(*names)
+        field.isin(*sorted(names))
         for names in (SIGNATURE_FIELDS, DATE_FIELDS, MULTI_VALUE_FIELDS)
     )
     best_raw, best_conf = F.col("best.v"), F.col("best.cf")
@@ -173,16 +177,22 @@ def _field_struct() -> Column:
     return _schema_field(value, F.when(is_date, best_raw), confidence)
 
 
-def _schema_field(value: Column, raw_text: Column, confidence: Column) -> Column:
+def _catalog_struct(struct_type: T.StructType, *parts: Column) -> Column:
+    """``parts`` as a ``struct_type`` struct, each cast to its field's type
+    and named by it: the catalog is the one declaration of what the fold
+    writes."""
     return F.struct(
-        value.cast("string").alias("value"),
-        raw_text.cast("string").alias("raw_text"),
-        confidence.cast("double").alias("confidence"),
-        F.lit(None).cast("string").alias("reviewed_value"),
-        F.lit(None).cast("timestamp").alias("reviewed_at"),
-        F.lit(None).cast("string").alias("reviewed_by"),
-        F.lit("Pending").alias("status"),
+        *[
+            c.cast(f.dataType).alias(f.name)
+            for c, f in zip(parts, struct_type.fields, strict=True)
+        ]
     )
+
+
+def _schema_field(value: Column, raw_text: Column, confidence: Column) -> Column:
+    """A SchemaField with reviewed_* null and status 'Pending'."""
+    unreviewed = (*[F.lit(None)] * 3, F.lit("Pending"))
+    return _catalog_struct(SCHEMA_FIELD_TYPE, value, raw_text, confidence, *unreviewed)
 
 
 def consolidate(turns: DataFrame) -> DataFrame:
@@ -208,7 +218,7 @@ def consolidate(turns: DataFrame) -> DataFrame:
     # DocumentSchemaMapperService.cs:258-267): count signature contributions
     # whose value is neither signed/present nor 'unsigned'
     bad_sig = lambda c: (  # noqa: E731
-        c["field"].isin(*SIGNATURE_FIELDS)
+        c["field"].isin(*sorted(SIGNATURE_FIELDS))
         & c["raw_value"].isNotNull()
         & ~F.lower(c["raw_value"]).isin(*_SIG_TRUE, "unsigned")
     )
@@ -219,10 +229,11 @@ def consolidate(turns: DataFrame) -> DataFrame:
         F.min("turn_idx").alias("first_turn"),
         F.array_sort(
             F.collect_list(
-                F.struct(
-                    F.col("turn_idx").alias("turn_idx"),
-                    F.col("id_source").alias("source"),
-                    F.col("extracted_id").alias("extracted_id"),
+                _catalog_struct(
+                    PROVENANCE_TYPE,
+                    F.col("turn_idx"),
+                    F.col("id_source"),
+                    F.col("extracted_id"),
                 )
             )
         ).alias("provenance"),

@@ -107,11 +107,7 @@ def extract_turns_arrow(
     )
 
 
-def span_lint(
-    df: DataFrame,
-    text_col: str = "text",
-    group_cols: tuple[str, ...] = ("fmt", "rule"),
-) -> DataFrame:
+def span_lint(df: DataFrame) -> DataFrame:
     """Distributed output-contract validator for the extraction stage.
 
     The north-rule invariant this engine is built around — per-turn text
@@ -146,12 +142,12 @@ def span_lint(
     )
     bounds_ok = F.expr(
         "CASE WHEN size(spans) <= 0 THEN true ELSE"
-        f" spans[0].start >= 0"
-        f" AND element_at(spans, -1).end <= length({text_col}) END"
+        " spans[0].start >= 0"
+        " AND element_at(spans, -1).end <= length(text) END"
     )
     plain_ok = F.when(
         F.col("fmt") == "plain",
-        F.col("extracted_text") == F.col(text_col),
+        F.col("extracted_text") == F.col("text"),
     ).otherwise(F.lit(True))
     covered = F.expr(
         "aggregate(spans, CAST(0 AS BIGINT),"
@@ -160,14 +156,15 @@ def span_lint(
     flag = lambda ok: F.sum(F.when(ok, 0).otherwise(1)).cast("long")  # noqa: E731
     return (
         df.select(
-            *group_cols,
+            "fmt",
+            "rule",
             ordered_ok.alias("_ord"),
             bounds_ok.alias("_bnd"),
             plain_ok.alias("_pln"),
             covered.alias("_cov"),
             F.length("extracted_text").cast("long").alias("_exl"),
         )
-        .groupBy(*group_cols)
+        .groupBy("fmt", "rule")
         .agg(
             F.count(F.lit(1)).alias("n_units"),
             flag(F.col("_ord")).alias("n_order_violations"),

@@ -136,9 +136,7 @@ def _dedup_within_batch(records: DataFrame) -> DataFrame:
     )
 
 
-def dedup_against_existing(
-    records: DataFrame, existing: DataFrame, key: str = "doc_key"
-) -> DataFrame:
+def dedup_against_existing(records: DataFrame, existing: DataFrame) -> DataFrame:
     """FR-019 duplicate-skip anti-join vs already-persisted identifiers
     (``PdfProcessorFunction.cs:261-277``), with the two properties that
     matter at 100 TB:
@@ -152,7 +150,7 @@ def dedup_against_existing(
       would otherwise corrupt or reject).
     """
     return records.join(
-        existing.select(key), key, "left_anti"
+        existing.select("doc_key"), "doc_key", "left_anti"
     ).select(*records.columns)
 
 

@@ -37,13 +37,13 @@ from pyspark.sql.types import StructType
 __all__ = ["Catalog", "conv_bucket"]
 
 
-def conv_bucket(n_buckets: int, key: str = "conv_id") -> Column:
-    """The one hash bucket of a conversation: ``pmod(xxhash64(key), n)``.
+def conv_bucket(n_buckets: int) -> Column:
+    """The one hash bucket of a conversation: ``pmod(xxhash64(conv_id), n)``.
 
     Batch waves, the streaming sink's touched buckets and
     :meth:`Catalog.write_bucketed` partitions all use it, so a bucket id
     means the same conversations in every table."""
-    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
 
 
 class Catalog:
@@ -129,10 +129,8 @@ class Catalog:
             if d.startswith("bucket=")
         )
 
-    def write_bucketed(
-        self, df: DataFrame, name: str, key: str = "conv_id", buckets: int = 32
-    ) -> None:
-        """Overwrite partitioned by a hash bucket of the key.
+    def write_bucketed(self, df: DataFrame, name: str, buckets: int = 32) -> None:
+        """Overwrite partitioned by :func:`conv_bucket`.
 
         Iceberg analog: ``PARTITIONED BY (bucket(N, conv_id))`` with
         ``overwritePartitions()`` — co-locates a conversation's records and
@@ -140,5 +138,5 @@ class Catalog:
         overwrite replaces only the buckets present in ``df``.
         """
         self.overwrite_partitions(
-            df.withColumn("bucket", conv_bucket(buckets, key)), name, "bucket"
+            df.withColumn("bucket", conv_bucket(buckets)), name, "bucket"
         )

@@ -26,6 +26,11 @@ COMPACT = [
     ("2026MAY03", "2026-05-03"),
     ("  2000DEC31  ", "2000-12-31"),
     ("1999feb05", "1999-02-05"),
+    # Java's $ matches before a final line terminator; .NET's \s takes it
+    # (it counts U+0085/U+2028/U+2029 as whitespace), so both parse these
+    ("1985JAN12\x85", "1985-01-12"),
+    ("1985JAN12\u2028", "1985-01-12"),
+    ("1985JAN12\u2029", "1985-01-12"),
 ]
 LONG = [
     ("3rd day of January, 2026", "2026-01-03"),

@@ -541,9 +541,9 @@ def test_turn_range_filter_before_udf(spark, turns_df):
 
 def test_every_package_module_reachable_from_pipeline_roots():
     """Dead-code guard: every module of the package is imported, directly
-    or transitively, from the batch job, the streaming job, the review
-    operators, the corpus generator or the session factory. A module none
-    of them reaches is code nothing runs."""
+    or transitively, from the batch job, the streaming job, the corpus
+    generator or the session factory. A module none of them reaches is
+    code nothing runs."""
     import ast
     import pathlib
 
@@ -583,8 +583,7 @@ def test_every_package_module_reachable_from_pipeline_roots():
                 found |= {f"{target}.{a.name}" for a in node.names}
         return found & modules.keys()
 
-    roots = ("plans.pipeline", "streaming.ingest", "operators.review",
-             "sources.datagen", "session")
+    roots = ("plans.pipeline", "streaming.ingest", "sources.datagen", "session")
     todo = set().union(*(with_parents(f"{name}.{r}") for r in roots))
     seen = set()
     while todo:
