@@ -16,7 +16,7 @@ turns and the run still succeeds (the reference fails the run instead, as
 it re-parses against one document's page count).
 
 This parse runs driver-side; the result is pushed into the scan as an
-``isin``/``between`` predicate *before* the extraction stage
+``isin`` predicate *before* the extraction stage
 (predicate-pushdown analog of the reference's dispose-before-OCR loop,
 ``PdfProcessorFunction.cs:292-318``).
 """

@@ -129,7 +129,7 @@ class Catalog:
             if d.startswith("bucket=")
         )
 
-    def write_bucketed(self, df: DataFrame, name: str, buckets: int = 32) -> None:
+    def write_bucketed(self, df: DataFrame, name: str, buckets: int) -> None:
         """Overwrite partitioned by :func:`conv_bucket`.
 
         Iceberg analog: ``PARTITIONED BY (bucket(N, conv_id))`` with

@@ -3,10 +3,18 @@
 Production layout (multi-executor cluster)::
 
     zip -r poc_document_ocr_spark.zip poc_document_ocr_spark
-    spark-submit --py-files poc_document_ocr_spark.zip scripts/job.py \
+    spark-submit --py-files poc_document_ocr_spark.zip \
+        --driver-java-options "-XX:TieredStopAtLevel=1" \
+        --conf spark.sql.codegen.cache.maxEntries=1000 scripts/job.py \
         --catalog-root /data/warehouse --input transcripts \
         --run-id run-2026-08-17 --buckets 64 [--turn-range "1-10, 15"] \
         [--resume]
+
+The two settings are the ones ``session.get_spark`` sets (see its module
+docstring for why). This script builds its own session and cannot set them:
+a running driver cannot change its JVM options, and the codegen cache size
+is a static conf. The JIT flag reaches the driver only; executors keep
+tiered C2 for their long data loops.
 
 Reference analog: the queue message that launches one processing operation
 (``QueueMessage`` → ``PdfProcessorFunction.Run``); job args carry what the

@@ -423,9 +423,9 @@ def test_consolidate_stage_matches_python_oracle(spark):
 
 
 def test_consolidated_record_types_match_schema_catalog(spark):
-    """The fold builds its per-field and provenance structs inline; each
-    must equal the catalog's ``SCHEMA_FIELD_TYPE`` / ``PROVENANCE_TYPE``,
-    nullability included."""
+    """The fold casts its per-field and provenance structs to the catalog's
+    ``SCHEMA_FIELD_TYPE`` / ``PROVENANCE_TYPE``; the output types must equal
+    them, nullability included."""
     from poc_document_ocr_spark.operators.extraction import extract_turns
     from poc_document_ocr_spark.plans.pipeline import consolidate_stage
     from poc_document_ocr_spark.schema import (

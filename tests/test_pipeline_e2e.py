@@ -539,6 +539,26 @@ def test_turn_range_filter_before_udf(spark, turns_df):
     assert filter_pos > udf_pos, "turn-range filter not below the UDF barrier"
 
 
+def test_session_compiles_with_c1_and_keeps_codegen_cached(spark):
+    """The driver JVM runs on C1 with its code-cache reserve, and Spark's
+    codegen cache holds a wave's classes (``session.get_spark``)."""
+    jvm_args = list(
+        spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+        .getInputArguments()
+    )
+    assert "-XX:TieredStopAtLevel=1" in jvm_args
+    assert "-XX:ReservedCodeCacheSize=1g" in jvm_args
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_driver_java_opts_append_after_caller_opts(monkeypatch):
+    from poc_document_ocr_spark.session import _driver_java_opts
+
+    monkeypatch.setenv("SPARK_DRIVER_JAVA_OPTS", "-Dx=1")
+    assert _driver_java_opts().split() == [
+        "-Dx=1", "-XX:ReservedCodeCacheSize=1g", "-XX:TieredStopAtLevel=1"]
+
+
 def test_every_package_module_reachable_from_pipeline_roots():
     """Dead-code guard: every module of the package is imported, directly
     or transitively, from the batch job, the streaming job, the corpus
