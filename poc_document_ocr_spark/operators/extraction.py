@@ -20,9 +20,21 @@ whatever partitioning the scan produced — no shuffle is introduced here.
 Long conversations (skew) are safe: we do NOT group by conv_id before
 extraction; regrouping happens later in the cheap fold stage with AQE skew
 handling (SURVEY.md §4 skew row).
+
+Per-task worker cost: PySpark's worker calls ``importlib.invalidate_caches()``
+before every task, and before CPython 3.13 each ``zipimporter`` on the path
+then re-reads its archive's whole directory (16 importers of the 1,328-entry
+``pyspark.zip``: ~0.1–0.25 s of worker CPU per task on a 4-core host, with
+no data work). The map function therefore installs
+:func:`_lazy_zip_invalidate` in its worker, which re-reads an archive only
+when it changed, as 3.13 does.
 """
 
 from __future__ import annotations
+
+import os
+import sys
+import zipimport
 
 import pyarrow as pa
 
@@ -58,6 +70,30 @@ def _spans_array(spans: list) -> pa.ListArray:
     return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), struct)
 
 
+_stdlib_zip_invalidate = zipimport.zipimporter.invalidate_caches
+
+
+def _lazy_zip_invalidate(self) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only when its ``(st_mtime_ns, st_size)`` differs from the one
+    this importer last read (or it has read none, or the stat fails)."""
+    try:
+        st = os.stat(self.archive)
+        key = (st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    if key is None or getattr(self, "_archive_key", None) != key:
+        _stdlib_zip_invalidate(self)
+        self._archive_key = key
+
+
+def _install_lazy_zip_invalidate() -> None:
+    """Idempotent, per worker process; a no-op from CPython 3.13, whose
+    ``invalidate_caches`` only drops the cached directory."""
+    if sys.version_info < (3, 13):
+        zipimport.zipimporter.invalidate_caches = _lazy_zip_invalidate
+
+
 def extract_turns(df: DataFrame, text_col: str = "text", extract_fn=None) -> DataFrame:
     """Append ``extracted_text``, ``spans``, ``rule`` and ``fmt`` to ``df``.
 
@@ -74,6 +110,7 @@ def extract_turns(df: DataFrame, text_col: str = "text", extract_fn=None) -> Dat
     text_idx = df.columns.index(text_col)
 
     def gen(batches):
+        _install_lazy_zip_invalidate()
         for rb in batches:
             rows = [
                 dispatch.extract_safe(t, fn)
