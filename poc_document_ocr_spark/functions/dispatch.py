@@ -58,15 +58,16 @@ def sniff_format(text: str | None) -> str:
     """Classify a payload as 'html' | 'layout' | 'md' | 'plain' | 'empty'."""
     if text is None or not text.strip():
         return "empty"
-    # HTML: at least two real tag matches, or one structural tag
-    tags = _HTML_TAG_RE.findall(text)
-    if len(tags) >= 2:
+    # HTML: at least two real tag matches; the scan stops at the second
+    tags = _HTML_TAG_RE.finditer(text)
+    if next(tags, None) and next(tags, None):
         return "html"
-    # layout: form feeds (page breaks) or several gutter lines
+    # layout: form feeds (page breaks) or several gutter lines; a gutter
+    # needs two consecutive spaces, so without them no line is one
     if "\x0c" in text:
         return "layout"
     lines = text.split("\n")
-    if len(lines) >= 2:
+    if len(lines) >= 2 and "  " in text:
         gutter_lines = sum(
             1 for ln in lines if ln.strip() and _GUTTER_LINE_RE.search(ln)
         )

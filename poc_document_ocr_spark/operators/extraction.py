@@ -21,17 +21,23 @@ Long conversations (skew) are safe: we do NOT group by conv_id before
 extraction; regrouping happens later in the cheap fold stage with AQE skew
 handling (SURVEY.md §4 skew row).
 
-Per-task worker cost: PySpark's worker calls ``importlib.invalidate_caches()``
-before every task, and before CPython 3.13 each ``zipimporter`` on the path
-then re-reads its archive's whole directory (16 importers of the 1,328-entry
-``pyspark.zip``: ~0.1–0.25 s of worker CPU per task on a 4-core host, with
-no data work). The map function therefore installs
-:func:`_lazy_zip_invalidate` in its worker, which re-reads an archive only
-when it changed, as 3.13 does.
+Per-task worker cost: a reused PySpark worker pays twice per task for what
+it has imported, before and after its rows. Before: its per-task
+``importlib.invalidate_caches()``, under CPython < 3.13, makes each
+``zipimporter`` re-read its archive's whole directory (16 importers of the
+1,328-entry ``pyspark.zip``: ~0.1–0.25 s of worker CPU per task on a 4-core
+host). After: the daemon's ``gc.collect()`` walks every object the worker
+holds (~74k–88k, 28–40 ms per task). The map function therefore runs
+:func:`_task_entry` first: it installs :func:`_lazy_zip_invalidate`, which
+re-reads an archive only when it changed, as 3.13 does, and it
+``gc.freeze()``s the heap, so the post-task collection walks only what the
+task allocated. Frozen objects are still freed by reference counting; only
+a cycle among them that later becomes garbage would stay.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import sys
 import zipimport
@@ -73,15 +79,19 @@ def _spans_array(spans: list) -> pa.ListArray:
 _stdlib_zip_invalidate = zipimport.zipimporter.invalidate_caches
 
 
+def _stat_key(archive: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(archive)
+    except OSError:
+        return None
+    return (st.st_mtime_ns, st.st_size)
+
+
 def _lazy_zip_invalidate(self) -> None:
     """``zipimporter.invalidate_caches`` that re-reads the archive's
     directory only when its ``(st_mtime_ns, st_size)`` differs from the one
     this importer last read (or it has read none, or the stat fails)."""
-    try:
-        st = os.stat(self.archive)
-        key = (st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = None
+    key = _stat_key(self.archive)
     if key is None or getattr(self, "_archive_key", None) != key:
         _stdlib_zip_invalidate(self)
         self._archive_key = key
@@ -89,9 +99,26 @@ def _lazy_zip_invalidate(self) -> None:
 
 def _install_lazy_zip_invalidate() -> None:
     """Idempotent, per worker process; a no-op from CPython 3.13, whose
-    ``invalidate_caches`` only drops the cached directory."""
-    if sys.version_info < (3, 13):
-        zipimport.zipimporter.invalidate_caches = _lazy_zip_invalidate
+    ``invalidate_caches`` only drops the cached directory.
+
+    The first install records the key of every cached ``zipimporter``: the
+    task's ``invalidate_caches()`` has just re-read their directories, so
+    the next task need not read them again."""
+    if (sys.version_info >= (3, 13)
+            or zipimport.zipimporter.invalidate_caches is _lazy_zip_invalidate):
+        return
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimport.zipimporter):
+            finder._archive_key = _stat_key(finder.archive)
+    zipimport.zipimporter.invalidate_caches = _lazy_zip_invalidate
+
+
+def _task_entry() -> None:
+    """Run by the map function at each task's entry in its worker: install
+    the lazy ``invalidate_caches``, then freeze the heap, so the daemon's
+    post-task ``gc.collect()`` walks only what this task allocates."""
+    _install_lazy_zip_invalidate()
+    gc.freeze()
 
 
 def extract_turns(df: DataFrame, text_col: str = "text", extract_fn=None) -> DataFrame:
@@ -110,7 +137,7 @@ def extract_turns(df: DataFrame, text_col: str = "text", extract_fn=None) -> Dat
     text_idx = df.columns.index(text_col)
 
     def gen(batches):
-        _install_lazy_zip_invalidate()
+        _task_entry()
         for rb in batches:
             rows = [
                 dispatch.extract_safe(t, fn)

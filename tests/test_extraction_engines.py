@@ -7,7 +7,13 @@ Invariants checked here (FIXTURES.md §2):
 * deterministic output.
 """
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from poc_document_ocr_spark.functions.dispatch import (
+    _GUTTER_LINE_RE,
+    _HTML_TAG_RE,
+    _MD_RE,
     extract,
     extract_safe,
     sniff_format,
@@ -191,6 +197,7 @@ def test_layout_empty():
         ("see ref[1](chapter 2) for details", "plain"),
         ("call arr[0](ctx) here", "plain"),
         ("col a      col b\ncol c      col d", "layout"),
+        ("col a  col b\ncol c  col d", "layout"),  # two-space gutters
         ("page one\x0cpage two", "layout"),
         ("", "empty"),
         (None, "empty"),
@@ -200,6 +207,56 @@ def test_layout_empty():
 )
 def test_sniff(payload, fmt):
     assert sniff_format(payload) == fmt
+
+
+def _sniff_reference(text):
+    """``sniff_format`` as a ``findall`` of every tag and a gutter scan of
+    every line, with no early exit."""
+    if text is None or not text.strip():
+        return "empty"
+    if len(_HTML_TAG_RE.findall(text)) >= 2:
+        return "html"
+    if "\x0c" in text:
+        return "layout"
+    lines = text.split("\n")
+    if len(lines) >= 2:
+        gutter_lines = sum(
+            1 for ln in lines if ln.strip() and _GUTTER_LINE_RE.search(ln)
+        )
+        nonblank = sum(1 for ln in lines if ln.strip())
+        if nonblank >= 2 and gutter_lines >= max(2, nonblank // 2):
+            return "layout"
+    if _MD_RE.search(text):
+        return "md"
+    return "plain"
+
+
+def test_sniff_equals_reference_on_synthetic_corpus():
+    from poc_document_ocr_spark.sources.datagen import generate
+
+    fmts = set()
+    for row in generate(n_convs=200, seed=42).turns:
+        fmt = sniff_format(row[3])
+        assert fmt == _sniff_reference(row[3]), row[3]
+        fmts.add(fmt)
+    assert {"html", "layout", "plain"} <= fmts
+
+
+_SNIFF_FRAGMENTS = st.sampled_from(
+    [
+        "<", ">", "</", "<p>", "</p>", "<div class='a'>", "</div>", "<br>",
+        "<!doctype html>", "</ x >", "<b", "\x0c", "\n", " ", "  ", "   ",
+        "\t", "word", "a", "1", "# ", "## h", "```", "~~~", "[t](http://x)",
+        "[t](chapter 2)", "*", "#", "é",
+    ]
+)
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.lists(_SNIFF_FRAGMENTS, min_size=0, max_size=40))
+def test_sniff_equals_reference_fuzz(frags):
+    text = "".join(frags)
+    assert sniff_format(text) == _sniff_reference(text)
 
 
 def test_extract_plain_identity_span():

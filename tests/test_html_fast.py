@@ -138,6 +138,15 @@ _EDGE_CASES = [
     "<p></p>",
     "<p> </p>",
     "no tags at all, just text",
+    # boundaries of the one-match lane (text run | <tag> | </tag>)
+    "<p>pre<script>if (a < b) { x = '</p>'; }</script >post</p>",
+    "<p>x</p",  # end tag cut off at the end of input
+    "a < b",
+    "a<b",
+    "<p>fish & chips</p>run ends with&",
+    "<H1>Upper</H1><h1>lower</h1>",
+    "<p><A>l</A> and prose long enough to keep</p>",
+    "</p >",
 ]
 
 

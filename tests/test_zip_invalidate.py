@@ -1,8 +1,14 @@
-"""The extraction boundary's per-worker ``zipimporter.invalidate_caches``:
-an archive's directory is re-read only when the archive changed, so the
-worker's per-task ``importlib.invalidate_caches()`` stops re-reading
-``pyspark.zip``. All but the last test are Spark-free."""
+"""The extraction boundary's per-task worker hook, ``_task_entry``.
 
+It installs a per-worker ``zipimporter.invalidate_caches`` that re-reads
+an archive's directory only when the archive changed, so the worker's
+per-task ``importlib.invalidate_caches()`` stops re-reading
+``pyspark.zip``; and it freezes the worker's heap, so the daemon's
+post-task ``gc.collect()`` walks only what the task allocated. The tests
+whose names contain ``every_task`` or ``worker`` start Spark; the rest are
+Spark-free."""
+
+import gc
 import importlib
 import os
 import sys
@@ -60,12 +66,13 @@ def test_lazy_zip_invalidate_skips_unchanged_archive(zip_on_path, monkeypatch):
     importlib.invalidate_caches()
     assert len(reads) == 1  # the stdlib method re-reads eagerly
 
+    # the install records the key of the directory just read: no more reads
     extraction._install_lazy_zip_invalidate()
     extraction._install_lazy_zip_invalidate()
-    importlib.invalidate_caches()  # no key recorded yet: one read
     importlib.invalidate_caches()
     importlib.invalidate_caches()
-    assert len(reads) == 2
+    importlib.invalidate_caches()
+    assert len(reads) == 1
 
 
 @eager
@@ -129,3 +136,89 @@ def test_every_task_extracts_after_lazy_zip_install(spark):
         for r in extract_turns(df.repartition(8), extract_fn=probe).collect()
     ]
     assert rules == ["True"] * 64
+
+
+def test_task_entry_freezes_heap_and_is_idempotent(monkeypatch):
+    stdlib = zipimport.zipimporter.invalidate_caches
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", stdlib)
+    try:
+        extraction._task_entry()
+        frozen = gc.get_freeze_count()
+        installed = zipimport.zipimporter.invalidate_caches
+        assert frozen > 0
+        extraction._task_entry()
+        assert gc.get_freeze_count() >= frozen
+        assert zipimport.zipimporter.invalidate_caches is installed
+        if sys.version_info < (3, 13):
+            assert installed is extraction._lazy_zip_invalidate
+        else:
+            assert installed is stdlib
+    finally:
+        gc.unfreeze()
+
+
+def test_every_task_frozen_set_stays_flat(spark):
+    """Each task freezes at entry, and what a worker freezes does not grow
+    from pass to pass: nothing a task leaves behind piles up there."""
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+
+    def frozen(text):
+        import gc
+
+        return ("", [], str(gc.get_freeze_count()), "plain")
+
+    df = spark.range(64).selectExpr("id", "CAST(id AS STRING) AS text")
+    df = df.repartition(8).cache()
+    df.count()
+    try:
+        passes = [
+            [int(r.rule) for r in extract_turns(df, extract_fn=frozen).collect()]
+            for _ in range(5)
+        ]
+    finally:
+        df.unpersist()
+    assert all(n > 0 for counts in passes for n in counts)
+    assert max(passes[-1]) <= max(passes[1])
+
+
+def test_worker_collects_a_task_cycle_before_its_next_task(spark):
+    """A reference cycle that one task creates and drops is not in the
+    frozen set: by the same worker's next task it has been collected."""
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+
+    def probe(text):
+        import sys
+        import types
+        import weakref
+
+        from pyspark import TaskContext
+
+        state = sys.modules.setdefault(
+            "_task_cycle_probe", types.ModuleType("_task_cycle_probe"))
+        task = TaskContext.get().taskAttemptId()
+        if getattr(state, "task", None) != task:
+            ref = getattr(state, "ref", None)
+            state.prev_dead = None if ref is None else ref() is None
+            state.task = task
+
+            class Node:
+                pass
+
+            node = Node()
+            node.me = node
+            state.ref = weakref.ref(node)
+        return ("", [], str(state.prev_dead), "plain")
+
+    df = spark.range(64).selectExpr("id", "CAST(id AS STRING) AS text")
+    df = df.repartition(8).cache()
+    df.count()
+    try:
+        rules = [
+            r.rule
+            for _ in range(3)
+            for r in extract_turns(df, extract_fn=probe).collect()
+        ]
+    finally:
+        df.unpersist()
+    assert "True" in rules
+    assert "False" not in rules
