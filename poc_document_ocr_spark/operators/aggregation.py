@@ -27,9 +27,17 @@ Determinism traps handled (SURVEY.md §7.4):
   spec's max-over-signed).
 * Concat all-null-confidence → 0.0 (the ``DefaultIfEmpty(0.0)`` quirk at
   ``DocumentSchemaMapperService.cs:238``).
+
+Fixed costs kept off the fold: its input-independent Column expressions are
+built once per py4j gateway (:func:`..session.per_gateway`), so a warm fold
+build makes a few hundred py4j round trips, not thousands; and it folds case
+with ASCII-only ``translate`` (:func:`_ascii_lower`), so no fold action loads
+ICU, which Spark's ``lower``/``upper`` use.
 """
 
 from __future__ import annotations
+
+import string
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -44,6 +52,7 @@ from ..schema import (
     SIGNATURE_FIELDS,
     SIGNATURE_TRUE_VALUES,
 )
+from ..session import per_gateway
 
 __all__ = ["with_runs", "consolidate", "parse_ocr_date"]
 
@@ -51,6 +60,53 @@ _NEG_INF = float("-inf")
 # every merge set enters the plan sorted: set order varies under hash
 # randomisation, the plan text must not
 _SIG_TRUE = sorted(SIGNATURE_TRUE_VALUES)
+#: every word a case-folded signature value is compared with
+_SIG_WORDS = sorted(SIGNATURE_TRUE_VALUES | {"unsigned"})
+
+
+def _ascii_lower(c: Column) -> Column:
+    """``lower(c)`` for the fold's comparisons, with ASCII-only
+    ``translate``. Spark's ``lower``/``upper`` map case through ICU
+    (``spark.sql.icu.caseMappings.enabled``), and the first such call in a
+    JVM loads ICU's data: ~1.8 s wall, ~2 CPU-s.
+
+    Exact only while two facts hold, both pinned by tests:
+
+    * the only non-ASCII code point whose Spark ``lower`` is all-ASCII is
+      U+212A KELVIN SIGN (→ ``k``), and no word of ``_SIG_WORDS`` contains
+      ``k``; so ``lower(c)`` is one of those words exactly when ``c`` is an
+      ASCII case variant of it, which this maps as ``lower`` does;
+    * (for :func:`_ascii_upper`) the date patterns' ``(?i)`` matches ASCII
+      case variants only, so the month group is ASCII. Java's
+      ``UNICODE_CASE``, which ``(?U)`` implies, would break this: with it
+      ``(?i)`` also matches ``ſ`` for ``s``, ``ı`` and ``İ`` for ``i``, and
+      U+212A for ``k``.
+    """
+    return F.translate(c, string.ascii_uppercase, string.ascii_lowercase)
+
+
+def _ascii_upper(c: Column) -> Column:
+    """``upper(c)`` for ASCII text; see :func:`_ascii_lower`."""
+    return F.translate(c, string.ascii_lowercase, string.ascii_uppercase)
+
+
+@per_gateway
+def _run_columns() -> dict[str, Column]:
+    ordered = W.partitionBy("conv_id").orderBy("turn_idx")
+    cume = ordered.rowsBetween(W.unboundedPreceding, W.currentRow)
+    idc = F.col("extracted_id")
+    ffill = F.last(idc, ignorenulls=True).over(cume)
+    prev_ffill = F.lag(ffill, 1).over(ordered)
+    boundary = F.when(
+        idc.isNotNull() & (prev_ffill.isNull() | (idc != prev_ffill)), 1
+    ).otherwise(0)
+    return {
+        "ffill_id": ffill,
+        "run_id": F.sum(boundary).over(cume).cast("int"),
+        "id_source": F.when(idc.isNotNull(), F.lit("Extracted")).otherwise(
+            F.lit("Inferred")
+        ),
+    }
 
 
 def with_runs(df: DataFrame) -> DataFrame:
@@ -64,24 +120,7 @@ def with_runs(df: DataFrame) -> DataFrame:
       synthetic group, if any)
     * ``id_source`` — 'Extracted' | 'Inferred' (PageProvenanceEntry invariant)
     """
-    ordered = W.partitionBy("conv_id").orderBy("turn_idx")
-    cume = ordered.rowsBetween(W.unboundedPreceding, W.currentRow)
-    idc = F.col("extracted_id")
-    ffill = F.last(idc, ignorenulls=True).over(cume)
-    prev_ffill = F.lag(ffill, 1).over(ordered)
-    boundary = F.when(
-        idc.isNotNull() & (prev_ffill.isNull() | (idc != prev_ffill)), 1
-    ).otherwise(0)
-    return (
-        df.withColumn("ffill_id", ffill)
-        .withColumn("run_id", F.sum(boundary).over(cume).cast("int"))
-        .withColumn(
-            "id_source",
-            F.when(idc.isNotNull(), F.lit("Extracted")).otherwise(
-                F.lit("Inferred")
-            ),
-        )
-    )
+    return df.withColumns(_run_columns())
 
 
 # ---------------------------------------------------------------------------
@@ -121,7 +160,9 @@ def parse_ocr_date(raw: Column) -> Column:
     months = F.create_map(
         *[F.lit(x) for i, name in enumerate(_MONTHS) for x in (name, i + 1)]
     )
-    m = F.try_element_at(months, F.upper(F.substring(group(2, 2), 1, 3)))
+    m = F.try_element_at(
+        months, _ascii_upper(F.substring(group(2, 2), 1, 3))
+    )
     # a raw of neither form leaves every group "" → null → no valid iso
     y, d = group(1, 3).try_cast("int"), group(3, 1).try_cast("int")
     iso = F.format_string("%04d-%02d-%02d", y, m, d)
@@ -213,6 +254,24 @@ def consolidate(turns: DataFrame) -> DataFrame:
     header's per-turn provenance / turn_idxs arrays, bounded by turn count,
     not field-line count.
     """
+    header, exploded, contribution, per_field, summary, record = (
+        _fold_columns()
+    )
+    keys = ["conv_id", "run_id"]
+    headers = turns.groupBy(*keys).agg(*header)
+    ex = turns.select(*keys, *exploded).select(*keys, *contribution)
+    summaries = (
+        ex.groupBy(*keys, "field").agg(*per_field).groupBy(*keys).agg(summary)
+    )
+    return headers.join(summaries, keys, "left").select(*keys, *record)
+
+
+@per_gateway
+def _fold_columns() -> tuple:
+    """:func:`consolidate`'s expressions, step by step: the turn-grain
+    header aggregates, the contribution explode and its columns, the
+    per-field aggregates, the per-document summary map, and the record
+    columns after the keys."""
     contribs = F.coalesce(F.col("contribs"), F.array())
     # FR-006 warn path made observable (the reference only logs,
     # DocumentSchemaMapperService.cs:258-267): count signature contributions
@@ -220,9 +279,9 @@ def consolidate(turns: DataFrame) -> DataFrame:
     bad_sig = lambda c: (  # noqa: E731
         c["field"].isin(*sorted(SIGNATURE_FIELDS))
         & c["raw_value"].isNotNull()
-        & ~F.lower(c["raw_value"]).isin(*_SIG_TRUE, "unsigned")
+        & ~_ascii_lower(c["raw_value"]).isin(*_SIG_WORDS)
     )
-    headers = turns.groupBy("conv_id", "run_id").agg(
+    header = [
         F.min("ffill_id").alias("identifier_raw"),
         F.count(F.lit(1)).cast("int").alias("turn_count"),
         F.sort_array(F.collect_list("turn_idx")).alias("turn_idxs"),
@@ -240,23 +299,17 @@ def consolidate(turns: DataFrame) -> DataFrame:
         F.sum(F.size(F.filter(contribs, bad_sig))).cast("int").alias(
             "sig_warnings"
         ),
-    )
+    ]
 
-    ex = turns.select(
-        "conv_id",
-        "run_id",
-        F.col("turn_idx").alias("t"),
-        F.explode(contribs).alias("c"),
-    ).select(
-        "conv_id",
-        "run_id",
-        "t",
+    exploded = [F.col("turn_idx").alias("t"), F.explode(contribs).alias("c")]
+    contribution = [
+        F.col("t"),
         F.col("c.field").alias("field"),
         F.col("c.raw_value").alias("raw"),
         F.col("c.confidence").alias("conf"),
-    )
+    ]
     nonws = F.col("raw").isNotNull() & (F.trim("raw") != "")
-    per_field = ex.groupBy("conv_id", "run_id", "field").agg(
+    per_field = [
         # FR-004 winner: max conf (null → -inf), tie → lowest turn
         F.max(
             F.struct(
@@ -268,7 +321,9 @@ def consolidate(turns: DataFrame) -> DataFrame:
         ).alias("best"),
         F.sum(F.when(nonws, 1).otherwise(0)).alias("n_nonws"),
         F.max(
-            F.coalesce(F.lower("raw").isin(*_SIG_TRUE), F.lit(False))
+            F.coalesce(
+                _ascii_lower(F.col("raw")).isin(*_SIG_TRUE), F.lit(False)
+            )
         ).alias("sig_present"),
         F.min("conf").alias("min_conf_all"),
         F.min(F.when(nonws, F.col("conf"))).alias("min_conf_nonws"),
@@ -294,12 +349,10 @@ def consolidate(turns: DataFrame) -> DataFrame:
             ),
             "\n",
         ).alias("concat_v"),
-    )
-    summaries = per_field.groupBy("conv_id", "run_id").agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("field", _field_struct()))
-        ).alias("_fs")
-    )
+    ]
+    summary = F.map_from_entries(
+        F.collect_list(F.struct("field", _field_struct()))
+    ).alias("_fs")
 
     # synthetic-identifier rule (DocumentSchemaMapperService.cs:67-71):
     # empty/whitespace identifier → unknown-<conv_id>-<firstTurn>
@@ -313,17 +366,13 @@ def consolidate(turns: DataFrame) -> DataFrame:
     # contributed (and for a document with no contributions, _fs null)
     fs = F.col("_fs")
     pending = _schema_field(*[F.lit(None)] * 3)
-    return headers.join(summaries, ["conv_id", "run_id"], "left").select(
-        "conv_id",
-        "run_id",
+    record = [
         doc_key.alias("doc_key"),
-        "turn_count",
-        "turn_idxs",
-        "first_turn",
-        "provenance",
-        "sig_warnings",
+        *map(F.col, ("turn_count", "turn_idxs", "first_turn", "provenance",
+                     "sig_warnings")),
         *[
             F.coalesce(F.try_element_at(fs, F.lit(name)), pending).alias(name)
             for name in FIELD_NAMES
         ],
-    )
+    ]
+    return header, exploded, contribution, per_field, summary, record

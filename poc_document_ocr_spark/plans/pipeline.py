@@ -44,6 +44,7 @@ from ..operators.extraction import extract_turns
 from ..operators.fields import best_extracted_id, contributions_array
 from ..functions.selection import TurnSelection
 from ..schema import LINEAGE_SCHEMA
+from ..session import per_gateway
 from ..sources.catalog import Catalog, conv_bucket
 
 __all__ = [
@@ -111,13 +112,27 @@ def consolidate_stage(extracted: DataFrame) -> DataFrame:
     (``with_runs``); :func:`..operators.aggregation.consolidate` folds each
     document with streaming per-field aggregates, so one million-field
     conversation cannot OOM a task.
+
+    Every Column expression of the fold is built once per py4j gateway, so
+    a warm build makes only its DataFrame ops.
     """
-    t = extracted.select(
-        "conv_id",
-        "turn_idx",
+    turn, extracted_id = _turn_columns()
+    return consolidate(
+        with_runs(
+            extracted.select(*turn).withColumn("extracted_id", extracted_id)
+        )
+    )
+
+
+@per_gateway
+def _turn_columns():
+    """``consolidate_stage``'s turn projection, and its extracted id."""
+    turn = [
+        F.col("conv_id"),
+        F.col("turn_idx"),
         contributions_array("extracted_text").alias("contribs"),
-    ).withColumn("extracted_id", best_extracted_id(F.col("contribs")))
-    return consolidate(with_runs(t))
+    ]
+    return turn, best_extracted_id(F.col("contribs"))
 
 
 def _dedup_within_batch(records: DataFrame) -> DataFrame:

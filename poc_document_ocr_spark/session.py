@@ -13,15 +13,22 @@ flag reaches only the driver, and executors keep tiered C2 for their long
 data loops. Spark's codegen cache holds 1000 classes instead of 100, so a
 bucket wave's generated classes stay compiled for the next wave instead of
 being evicted and compiled again.
+
+:func:`per_gateway` memoises a builder of Column expressions for the live
+py4j gateway. Building one from Python costs a py4j round trip per
+expression node, and the fold's expressions are thousands of nodes that do
+not depend on the DataFrame they are applied to.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
-__all__ = ["get_spark", "DEFAULT_CPUS"]
+__all__ = ["get_spark", "per_gateway", "DEFAULT_CPUS"]
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -91,3 +98,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def per_gateway(build):
+    """``build()``'s result, built once per live py4j gateway.
+
+    For builders of Column expressions that do not depend on their input:
+    such a Column is a JVM object owned by the gateway that made it, not by a
+    session, so every DataFrame and session on that gateway can reuse it. A
+    new gateway (a new driver JVM in this process) builds it again; the
+    previous result is dropped with it. ``build`` needs an active
+    SparkContext, as every ``pyspark.sql.functions`` call does.
+    """
+
+    @functools.lru_cache(maxsize=1)
+    def cached(gateway):
+        return build()
+
+    @functools.wraps(build)
+    def get():
+        return cached(SparkContext._gateway)
+
+    return get

@@ -493,3 +493,113 @@ def test_consolidate_long_fold_million_contribution_conversation(spark):
     assert r["defendantSignature"]["value"] == "true"
     assert r["defendantSignature"]["confidence"] == 0.4
     assert r["sig_warnings"] == 0
+
+
+# ---------------------------------------------------------------------------
+# The fold's ASCII case fold (``translate``, not ICU's ``lower``/``upper``)
+# and its once-per-process expressions
+# ---------------------------------------------------------------------------
+
+
+def test_lower_maps_only_kelvin_sign_to_ascii(spark):
+    """``_ascii_lower`` decides a signature word as Spark's ``lower`` does
+    only while U+212A KELVIN SIGN (→ ``k``) is the one non-ASCII code point
+    whose ``lower`` is all-ASCII, and no compared word contains ``k``. Every
+    non-surrogate code point from U+0080 up goes through ``lower``."""
+    from poc_document_ocr_spark.operators.aggregation import (
+        _SIG_TRUE,
+        _SIG_WORDS,
+    )
+
+    cps = spark.range(0x80, 0x110000).filter(
+        ~F.col("id").between(0xD800, 0xDFFF)
+    )
+    # UTF-32 behind a BOM, so that U+FEFF decodes as a character too
+    hex32 = F.concat(F.lit("0000FEFF"), F.lpad(F.hex("id"), 8, "0"))
+    s = F.decode(F.unhex(hex32), "UTF-32")
+    low = F.lower(s)
+    odd = cps.filter(
+        (F.length(s) != 1) | (F.length(low) == F.octet_length(low))
+    )
+    assert [r.id for r in odd.collect()] == [0x212A]
+    assert set(_SIG_TRUE) <= set(_SIG_WORDS)
+    assert [w for w in _SIG_WORDS if "k" in w] == []
+
+
+def test_case_fold_table_signatures_and_dates(spark):
+    """ASCII case variants fold as before; Unicode look-alikes stay
+    unrecognised (a signature warning, a null date)."""
+    sigs = {
+        "SIGNED": ("true", 0),
+        "pReSeNt": ("true", 0),
+        "UNSIGNED": ("false", 0),
+        "ſigned": ("false", 1),
+        "SİGNED": ("false", 1),
+        "ｓｉｇｎｅｄ": ("false", 1),
+    }
+    dates = {
+        "1985jAn12": "1985-01-12",
+        "1985ſep12": None,
+        "12TH DAY OF jUnE 1985": "1985-06-12",
+    }
+    rows = [(v, 1, "officerSignature", 1, v, 0.9) for v in sigs]
+    rows += [(v, 1, "courtDate", 1, v, 0.9) for v in dates]
+    got = {
+        r.conv_id: r
+        for r in fold(spark, [(v, 1, None) for v in [*sigs, *dates]], rows)
+        .collect()
+    }
+    assert {
+        v: (got[v].officerSignature.value, got[v].sig_warnings) for v in sigs
+    } == sigs
+    assert {v: got[v].courtDate.value for v in dates} == dates
+
+
+def _stage_input(spark):
+    from poc_document_ocr_spark.operators.extraction import extract_turns
+    from poc_document_ocr_spark.schema import TRANSCRIPT_SCHEMA
+    from poc_document_ocr_spark.sources.datagen import generate
+
+    data = generate(n_convs=12, median_turns=4, seed=23)
+    return extract_turns(
+        spark.createDataFrame(data.turns, TRANSCRIPT_SCHEMA)
+    ).localCheckpoint()
+
+
+def test_consolidate_stage_plan_has_no_icu_case_mapping(spark):
+    """Spark's ``lower``/``upper``/``initcap``/``ilike`` map case through
+    ICU, whose first use in a JVM costs ~2 CPU-s; the fold uses none."""
+    import re
+
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
+
+    plan = consolidate_stage(_stage_input(spark))._jdf.queryExecution()
+    words = re.findall(
+        r"(?i)\b(?:lower|upper|initcap|ilike)\b", plan.analyzed().toString()
+    )
+    assert words == []
+
+
+def test_warm_consolidate_stage_build_is_few_py4j_calls(spark, monkeypatch):
+    """The fold's Column expressions are built once per py4j gateway: a
+    second ``consolidate_stage`` build makes only its DataFrame ops' round
+    trips (thousands when every expression was rebuilt) and folds the same
+    records as the first."""
+    from poc_document_ocr_spark.plans.pipeline import consolidate_stage
+
+    ex = _stage_input(spark)
+    first = consolidate_stage(ex)
+    client = spark.sparkContext._gateway._gateway_client
+    send, calls = client.send_command, []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    second = consolidate_stage(ex)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 300
+    assert sorted(second.toJSON().collect()) == sorted(
+        first.toJSON().collect()
+    )

@@ -11,7 +11,11 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from poc_document_ocr_spark.operators.aggregation import parse_ocr_date
+from poc_document_ocr_spark.operators.aggregation import (
+    _COMPACT_PAT,
+    _LONG_PAT,
+    parse_ocr_date,
+)
 
 try:
     from hypothesis import given, settings
@@ -84,6 +88,33 @@ def test_leap_year(parse_date):
     assert parse_date("2023FEB29") is None
     assert parse_date("1900FEB29") is None  # century non-leap
     assert parse_date("2000FEB29") == "2000-02-29"
+
+
+def test_month_patterns_match_ascii_case_variants_only(spark):
+    """The fold upper-cases the month group with ASCII ``translate``, exact
+    only while ``(?i)`` matches ASCII case variants alone. Unicode case
+    folding (``UNICODE_CASE``, implied by ``(?U)``) would also match ``ſ``,
+    ``ı``, ``İ`` or U+212A for an ASCII letter; no month word may match
+    with one of them, or a fullwidth letter, in any position."""
+    months = [datetime(2000, m, 1).strftime("%B").upper()
+              for m in range(1, 13)]
+    forms = [(lambda w: f"1985{w}12", m[:3]) for m in months]
+    forms += [(lambda w: f"12th DAY OF {w}, 1985", m) for m in months]
+    plain, alike = [], []
+    for form, word in forms:
+        plain += [form(word), form(word.lower())]
+        for i, c in enumerate(word):
+            for look in ("\u017f", "\u0131", "\u0130", "\u212a",
+                         chr(ord(c) + 0xFEE0)):  # fullwidth c
+                alike.append(form(word[:i] + look + word[i + 1:]))
+    df = spark.createDataFrame([(r,) for r in plain + alike], "raw string")
+    hits = {
+        r.raw
+        for r in df.filter(
+            F.col("raw").rlike(_COMPACT_PAT) | F.col("raw").rlike(_LONG_PAT)
+        ).collect()
+    }
+    assert hits == set(plain)
 
 
 # --- property test: parse_ocr_date vs a plain-Python DateFieldParser -------
